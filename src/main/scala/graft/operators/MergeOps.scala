@@ -90,17 +90,6 @@ object MergeOps {
       .join(crawledDirIds.select("dir_id"), Seq("dir_id"), "left_semi")
       .join(staged.select("dir_id", "name"), Seq("dir_id", "name"), "left_anti")
 
-  /** M1 hash-scheduling branch (J12, `DirectoryCrawl.py:857-873`): staged
-    * files that are new or content-changed and have no hash yet → rows for
-    * `hash_control`. */
-  def filesNeedingHash(file: DataFrame, hash: DataFrame,
-                       asOf: java.sql.Timestamp): DataFrame =
-    file.join(hash.select(col("file_id")), col("id") === col("file_id"), "left_anti")
-      .select(col("id").as("file_id"), col("mtime"),
-        col("size").as("file_size"),
-        lit(null).cast("timestamp").as("process_assigned_on"),
-        lit(false).as("file_missing"), lit(asOf).as("inserted_on"))
-
   /** M2 upsert core (`DirectoryCrawl.py:915-931`): merge staged dirs into
     * `directory`, keyed `dir_path`; update only on ctime/mtime change.
     * `staged` columns: dir_path, ctime, mtime. */

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.PathFunctions._
+import graft.functions.PathExpressions.basenameFast
 
 /** The reference's search surface (`FileDbDAL/Search.py:70-345`,
   * `API/Search.py:26-37`) as DataFrame operators.
@@ -21,7 +23,7 @@ object SearchOps {
     * [[graft.functions.PathFunctions.parseWildcardSearch]] to user input
     * first). */
   def searchName(vwLl: DataFrame, pattern: String): DataFrame =
-    vwLl.filter(col("name").like(pattern) || basename(col("dir_path")).like(pattern))
+    vwLl.filter(col("name").like(pattern) || basenameFast(col("dir_path")).like(pattern))
 
   /** `search_name_file` (`Search.py:90-105`): files only. */
   def searchNameFile(vwLl: DataFrame, pattern: String): DataFrame =
@@ -104,38 +106,40 @@ object SearchOps {
       hashMatchFiles, nameMatchFiles)
 
   /** Predicate-needle form: the needle is `vwLl` rows matching
-    * `needlePred`, derived from the SAME pinned evaluation the haystack
-    * scans — the whole query costs exactly one view build, like the
-    * reference's one-scan OR-join.
-    *
-    * NOTE: the FIRST build of this query over a given view materializes
-    * the pin (one eager job) — the price of the one-scan shape; a lazy
-    * checkpoint would not help, since within the single union job every
-    * branch would still rebuild the view (checkpoints persist only after
-    * the first job completes). Repeat invocations over the same view
-    * reuse the session-scoped pin ([[graft.core.PinnedViews]]), so N
-    * searches cost one checkpoint, not N. */
+    * `needlePred`, derived from the SAME one-copy evaluation the haystack
+    * scans (see [[oneCopy]]) — the whole query costs at most one view
+    * build, like the reference's one-scan OR-join. */
   def duplicatesWhere(vwLl: DataFrame, needlePred: org.apache.spark.sql.Column,
                       hashMatch: Boolean, nameMatch: Boolean): DataFrame = {
-    val hay = graft.core.PinnedViews.pinned(vwLl)
+    val hay = oneCopy(vwLl)
     duplicatesCore(hay, hay.filter(needlePred), hashMatch, nameMatch)
   }
+
+  /** The single copy of `vwLl` every union branch scans. A view the
+    * caller already materialized (cached, e.g. `SparkEntry.cat`'s views)
+    * is scanned as is: a second, checkpointed copy would only double the
+    * pinned bytes. An uncached view is pinned through the session-scoped
+    * [[graft.core.PinnedViews]] — otherwise each branch would re-join the
+    * base tables to rebuild it. That pin is eager (one job on the first
+    * search over a view): a lazy checkpoint persists only after its first
+    * job, so within the single union job every branch would still rebuild
+    * the view. Repeat searches over the same view reuse the pin, so N
+    * searches cost one checkpoint, not N. */
+  private def oneCopy(vwLl: DataFrame): DataFrame =
+    if (vwLl.storageLevel != StorageLevel.NONE) vwLl
+    else graft.core.PinnedViews.pinned(vwLl)
 
   /** Union-of-equi-joins duplicate search core (shared by the file/dir
     * entry points; also used directly by the verify queries, which key the
     * needle by id because full paths are data-dependent). `needle` should
     * derive from `vwLl` cheaply (pushable predicate) — path-shaped needles
-    * route through [[duplicatesWhere]], which derives them from the pinned
-    * haystack instead. */
+    * route through [[duplicatesWhere]], which derives them from the
+    * haystack copy instead. */
   def duplicatesOf(vwLl: DataFrame, needle: DataFrame,
                    hashMatch: Boolean, nameMatch: Boolean): DataFrame =
     // one view evaluation per query, like the reference's OR-join form (a
-    // Postgres view inlines and is scanned ONCE): without the pin each
-    // union branch re-joins the base tables to rebuild vw_ll. The pinned
-    // relation is exactly the rows the query must scan anyway, and
-    // localCheckpoint distributes it across executors (memory + disk);
-    // the session-scoped PinnedViews cache pins each distinct view once.
-    duplicatesCore(graft.core.PinnedViews.pinned(vwLl), needle, hashMatch, nameMatch)
+    // Postgres view inlines and is scanned ONCE)
+    duplicatesCore(oneCopy(vwLl), needle, hashMatch, nameMatch)
 
   private def duplicatesCore(hay: DataFrame, needle: DataFrame,
                              hashMatch: Boolean, nameMatch: Boolean): DataFrame = {

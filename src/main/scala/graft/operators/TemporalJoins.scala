@@ -230,7 +230,7 @@ object TemporalJoins {
     // the event corpus) runs once, not three times (at cluster scale use
     // a reliable checkpoint / temp table, as with DedupOps.IterState).
     // NOTE: the FIRST build is eager (runs the sessionization job — see
-    // SearchOps.duplicatesWhere for why lazy alternatives don't deliver
+    // SearchOps.oneCopy for why lazy alternatives don't deliver
     // the reuse); repeat builds over the same corpus reuse the
     // session-scoped pin (PinnedViews), so N invocations sessionize once.
     val sess = graft.core.PinnedViews.pinned(

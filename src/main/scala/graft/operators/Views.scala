@@ -15,6 +15,10 @@ import graft.functions.PathExpressions.{basenameFast, basepathFast}
   * merge or shuffled hash at 100 TB, chosen by AQE). The parent-dir
   * self-join precomputes `basepath(dir_path)` as a column so Catalyst sees
   * a plain equi-join key.
+  *
+  * These builders are the views' definitions. `SparkEntry.cat` caches
+  * each one once per catalog (materialized views with the catalog's
+  * lifetime), so the plans above run once per catalog, not per lookup.
   */
 object Views {
 

@@ -1,9 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{SearchOps, Views}
 
 /** Physical-plan assertions for the BASELINE.md performance gates: these
   * pin the PLAN SHAPE, not timings — the properties that survive a 100×
@@ -12,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - duplicate search: union-of-equi-joins, never a nested-loop join;
   *   - top-K scheduling: TakeOrderedAndProject, never a global Sort+Limit;
   *   - view joins: directory/needle sides broadcast (no big-side shuffle);
-  *   - scans: filter pushdown + column pruning reach the parquet reader.
+  *   - scans: filter pushdown + column pruning reach the parquet reader;
+  *   - catalog views: lookups scan the catalog's cached copy, no rebuild.
   */
 class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -34,12 +42,18 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("duplicate-file search plans as broadcast hash joins, no BNLJ") {
     val c = SparkEntry.cat(spark, sfDir)
     val needle = c.vwLl.filter(col("file_id").isin(100L, 102L))
-    val plan = physicalPlan(
-      graft.operators.SearchOps.duplicatesOf(c.vwLl, needle,
-        hashMatch = true, nameMatch = false))
+    val df = graft.operators.SearchOps.duplicatesOf(c.vwLl, needle,
+      hashMatch = true, nameMatch = false)
+    val plan = physicalPlan(df)
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"OR-join decomposition must avoid BNLJ:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"), "needle side should broadcast")
+    // count the query's own joins: the plan string also prints the cached
+    // view's build plan, whose directory broadcast would satisfy a
+    // contains() check on its own. Aqe.collect does not descend into an
+    // InMemoryTableScan. One needle broadcast per union branch (id, path,
+    // sha1, md5).
+    val joins = Aqe.collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 4, s"needle side should broadcast in every branch:\n$plan")
   }
 
   test("T1 scheduling compiles to TakeOrderedAndProject (no global sort)") {
@@ -307,6 +321,15 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = physicalPlan(c.vwLl)
     assert(plan.contains("BroadcastHashJoin"), "directory side should broadcast")
     assert(!plan.contains("BroadcastNestedLoopJoin"), s"no BNLJ in the view:\n$plan")
+    // the catalog serves its materialized copy of the view ...
+    assert(c.vwLl.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]),
+      s"the catalog's vw_ll must be served from its cache:\n$plan")
+    // ... and the view's build plan, uncached, keeps the dimension broadcast
+    val build = Views.vwLl(c.directory, c.file, c.hash)
+    assert(build.storageLevel == StorageLevel.NONE)
+    val buildPlan = physicalPlan(build)
+    assert(buildPlan.contains("BroadcastHashJoin"), s"directory side should broadcast:\n$buildPlan")
+    assert(!buildPlan.contains("BroadcastNestedLoopJoin"), s"no BNLJ in the view:\n$buildPlan")
   }
 
   test("filter + projection push down to the parquet scan") {
@@ -813,5 +836,118 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertOnlyBroadcastJoins(plan)
     assert(plan.split("FileScan").length - 1 <= 4,
       s"expected ≤4 column-pruned scans (dim stats ×2 branches, bucket counts, main):\n$plan")
+  }
+
+  // ---- catalog views: SparkEntry.cat materializes vw_ll, vw_file_detail
+  // and dir_detail once per catalog. Lookups scan the cached copy and never
+  // re-join the base tables; Views.dirDetail over the catalog's tables is
+  // served from the cache by plan matching; the duplicate search scans the
+  // cached view as is — same rows as over the uncached view, no second
+  // pinned copy.
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def cachedRelation(view: DataFrame): InMemoryRelation =
+    view.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r
+      case p => fail(s"expected a cached view:\n$p")
+    }
+
+  /** Runs `df` and returns its final (adaptive) plan. */
+  private def executedFinal(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private def scansOf(plan: SparkPlan, view: DataFrame): Boolean =
+    Aqe.collect(plan) { case s: InMemoryTableScanExec => s }
+      .exists(_.relation.cacheBuilder eq cachedRelation(view).cacheBuilder)
+
+  /** `df` executes as a scan of `view`'s cached copy, with no exchange
+    * (shuffle or broadcast) that would rebuild the view's joins. */
+  private def assertServedFrom(view: DataFrame, df: DataFrame): Unit = {
+    val plan = executedFinal(df)
+    assert(scansOf(plan, view), s"expected a scan of the cached view:\n$plan")
+    assert(Aqe.collect(plan) { case e: Exchange => e }.isEmpty,
+      s"a lookup must not rebuild the view:\n$plan")
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("catalog views: all three are cached with the catalog, right-sized") {
+    val c = SparkEntry.cat(spark, sfDir)
+    Seq(c.vwLl, c.vwFileDetail, c.dirDetail).foreach { v =>
+      assert(v.storageLevel != StorageLevel.NONE)
+      v.count()
+    }
+    // vw_ll / vw_file_detail are materialized through a rebalance, so
+    // their partitions follow bytes and the shuffle-partition count, not
+    // the partitions of their lineage
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Seq(c.vwLl, c.vwFileDetail).foreach { v =>
+      val build = cachedRelation(v).cachedPlan
+      assert(Aqe.collect(build) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REBALANCE_PARTITIONS_BY_NONE => e
+      }.nonEmpty, s"expected a rebalance in the view's build:\n$build")
+      val n = cachedRelation(v).cacheBuilder.cachedColumnBuffers.getNumPartitions
+      assert(n <= shufflePartitions, s"$n partitions")
+    }
+  }
+
+  test("catalog views: the v1/v2 gate queries time the build, not the cached copy") {
+    val c = SparkEntry.cat(spark, sfDir)
+    Seq("v1_vw_ll" -> c.vwLl, "v2_vw_file_detail" -> c.vwFileDetail).foreach { case (q, view) =>
+      val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
+      assert(!scansOf(plan, view), s"$q must not scan the cached view:\n$plan")
+      assert(Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty,
+        s"$q must run the view's joins:\n$plan")
+    }
+  }
+
+  test("catalog views: name, hash and page lookups scan the cached views") {
+    val c = SparkEntry.cat(spark, sfDir)
+    val hashed = c.vwLl.filter(col("md5_hash").isNotNull).orderBy("file_id").head()
+    val dirId = hashed.getAs[Long]("dir_id")
+    assertServedFrom(c.vwLl, SearchOps.searchName(c.vwLl, "order_1%"))
+    assertServedFrom(c.vwLl, SearchOps.searchHash(c.vwLl, hashed.getAs[String]("md5_hash")))
+    assertServedFrom(c.vwFileDetail, SearchOps.resultPage(
+      c.vwFileDetail.filter(col("dir_id") === dirId), Seq("size" -> false, "id" -> true), 25))
+  }
+
+  test("catalog views: Views.dirDetail over the catalog's tables is served from the cache") {
+    val c = SparkEntry.cat(spark, sfDir)
+    val path = c.directory.orderBy("id").head().getAs[String]("dir_path")
+    val df = Views.dirDetail(c.directory, c.file).filter(col("dir_path") === path)
+    assertServedFrom(c.dirDetail, df)
+    assert(df.count() == 1L)
+  }
+
+  test("catalog views: duplicate search over the cached view matches the uncached view") {
+    val c = SparkEntry.cat(spark, sfDir)
+    val bare = Views.vwLl(c.directory, c.file, c.hash)
+    assert(bare.storageLevel == StorageLevel.NONE, "the build plan must stay uncached")
+    val r = c.vwLl.filter(col("sha1_hash").isNotNull).orderBy("file_id").head()
+    val path = r.getAs[String]("full_path")
+    val dir = r.getAs[String]("dir_path")
+    val file = sortedRows(SearchOps.searchDuplicateFile(c.vwLl, path))
+    assert(file.nonEmpty)
+    assert(file == sortedRows(SearchOps.searchDuplicateFile(bare, path)))
+    val dirDups = sortedRows(SearchOps.searchDuplicateDir(c.vwLl, dir))
+    assert(dirDups.nonEmpty)
+    assert(dirDups == sortedRows(SearchOps.searchDuplicateDir(bare, dir)))
+  }
+
+  test("catalog views: duplicate search pins only its needle, never a copy of the view") {
+    val c = SparkEntry.cat(spark, sfDir)
+    c.vwLl.count()
+    val path = c.vwLl.filter(col("type") === "file").orderBy("file_id").head()
+      .getAs[String]("full_path")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val plan = executedFinal(SearchOps.searchDuplicateFile(c.vwLl, path))
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"expected only the needle pin, got ${added.size}")
+    assert(scansOf(plan, c.vwLl), s"the haystack must be the cached view:\n$plan")
+    graft.core.TransientPins.drain(spark)
   }
 }
