@@ -182,7 +182,7 @@ object Bench {
           // (measured: x45 4.12 s mid-sweep vs 0.35 s isolated; the
           // mid-sweep calib detached 2.3x from warm). The drain releases
           // only per-invocation pins (TransientPins contract) — the
-          // session-scoped PinnedViews/catalog caches, whose reuse IS the
+          // session-scoped Memo values (pins, catalog), whose reuse IS the
           // measured semantics, are untouched.
           graft.core.TransientPins.drain(spark)
           (dt, outRows)
@@ -195,7 +195,7 @@ object Bench {
         val best = (if (ok.nonEmpty) ok else runs).minBy(_._1)
         // run 1's wall time rides alongside best-of-N (additions-only,
         // round-19): queries that derive a session-memoized relation
-        // (PinnedViews — the graph family's pair relation, the dedup
+        // (Memo.pinned — the graph family's pair relation, the dedup
         // contraction kernels) pay the derivation exactly once, in run 1
         // of the FIRST sharing query; min() then reports memo-warm time
         // for that query and every later sharer. first_run is the

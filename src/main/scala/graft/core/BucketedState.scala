@@ -56,7 +56,7 @@ class BucketedState(val spark: SparkSession, val root: String,
   def writeAll(df: DataFrame, keyCol: String): Unit = {
     df.withColumn(bucketCol, bucketOf(col(keyCol)))
       .write.mode("overwrite").partitionBy(bucketCol).parquet(path)
-    PinnedViews.invalidate(spark) // root-path plan canonicalization hazard
+    Memo.invalidate(spark) // root-path plan canonicalization hazard
   }
 
   /** Rewrite ONLY the partitions present in `df` (which must already be
@@ -90,7 +90,7 @@ class BucketedState(val spark: SparkSession, val root: String,
     // invalidate AFTER the emptied-bucket cleanup: a pin built between an
     // earlier invalidation and the directory removals would capture the
     // about-to-be-deleted rows and never be dropped again
-    PinnedViews.invalidate(spark) // root-path plan canonicalization hazard
+    Memo.invalidate(spark) // root-path plan canonicalization hazard
   }
 
   /** The M1-shaped merge round against this layout: staged rows touch

@@ -52,7 +52,7 @@ class StateStore(val spark: SparkSession, val root: String) {
     // a re-read of the swapped table is semantically "equal" to the old
     // plan — drop every pin this session holds, or a later duplicate
     // search over the refreshed catalog would scan pre-swap rows
-    PinnedViews.invalidate(spark)
+    Memo.invalidate(spark)
   }
 
   /** Append rows (archive tables are append-only). */
@@ -60,7 +60,7 @@ class StateStore(val spark: SparkSession, val root: String) {
     val schema = Schemas.all(table)
     val aligned = df.select(schema.fieldNames.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
     aligned.write.mode("append").parquet(path(table))
-    PinnedViews.invalidate(spark) // same root-path canonicalization hazard
+    Memo.invalidate(spark) // same root-path canonicalization hazard
   }
 
   private def deleteRecursively(f: File): Unit = {

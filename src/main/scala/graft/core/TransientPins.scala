@@ -24,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * each transient pin here, and the sweep drains the registry between
   * timed actions.
   *
-  * What does NOT go through here: [[PinnedViews]] pins (session-scoped
+  * What does NOT go through here: [[Memo]] pins (session-scoped
   * BY DESIGN — the sign-once/probe-many contract) and catalog-cached
   * tables. Draining is therefore safe by construction: everything in the
   * queue is an RDD whose only consumers are plans from an invocation

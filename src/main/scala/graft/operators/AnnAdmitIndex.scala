@@ -115,14 +115,11 @@ object AnnAdmitIndex {
     * fallback). */
   // quantizer generations are IMMUTABLE once promoted (writeModel's
   // stage+atomic-move; retrain writes a NEW generation) — so the
-  // driver-side collect of a generation's centroids is safe to cache
-  // per (session, resolved dir): round 19, drops one collect job from
-  // every admission query against the same live model. The legacy
-  // root/centroids fallback has no immutability contract and is never
-  // cached.
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IvfOps.IvfModel]
-
+  // driver-side collect of a generation's centroids is safe to keep as
+  // a Memo.session value per resolved dir: round 19, drops one collect
+  // job from every admission query against the same live model. The
+  // legacy root/centroids fallback has no immutability contract and is
+  // never cached.
   def loadModel(spark: SparkSession, root: String): IvfOps.IvfModel = {
     def readAt(dir: String): IvfOps.IvfModel = {
       val rows = spark.read.parquet(dir)
@@ -132,8 +129,8 @@ object AnnAdmitIndex {
     }
     modelEntries(committedEpochs(root)).lastOption match {
       case Some(e) =>
-        modelCache.getOrElseUpdate((spark, s"$root/$e/centroids"),
-          readAt(s"$root/$e/centroids"))
+        val dir = s"$root/$e/centroids"
+        graft.core.Memo.session(spark, ("ann_model", dir))(readAt(dir))
       case None => readAt(s"$root/centroids")
     }
   }
@@ -187,7 +184,7 @@ object AnnAdmitIndex {
     // generation literals / epoch paths) can never serve stale rows.
     // pin=false for per-micro-batch callers (the streaming loop
     // persists its own copy), same contract as the text tiers.
-    if (pin) graft.core.PinnedViews.pinned(out) else out
+    if (pin) graft.core.Memo.pinned(out) else out
   }
 
   /** Commit the batch's ADMITTED vectors as a new epoch under a
@@ -216,7 +213,7 @@ object AnnAdmitIndex {
     * admitted — the `verdict === "admitted"` rows of [[admit]], or
     * equivalently the manifest rows a four-tier streaming loop just
     * wrote (its persisted probe result), so the batch is ADC-probed
-    * once per micro-batch, mirroring the text tiers' PinnedViews
+    * once per micro-batch, mirroring the text tiers' Memo.pinned
     * batch-signing memoization. The relation is evaluated ONLY on the
     * commit path — a replayed (accounted) name returns false without
     * touching it, so a replay never probes an index that already

@@ -369,7 +369,7 @@ object DedupOps {
     * kernels never paired ineligible docs either. Returns the contraction
     * plus the REP-keyed signature relation. */
   /** [[Local]] pins of the CONTRACTION KERNEL tables route through the
-    * session-scoped [[graft.core.PinnedViews]] memo: a gate/bench/
+    * session-scoped [[graft.core.Memo]]: a gate/bench/
     * pipeline session runs MANY consumers of the same kernel (x8/x50/
     * x89/x156/x158/x160/x171 all need the minhash contraction of the
     * same corpus; x23/x159/x161/x83/x10 the simhash one), and signing
@@ -381,7 +381,7 @@ object DedupOps {
     * semantics are unchanged. */
   private[graft] def memoPin(state: IterState)(df: DataFrame): DataFrame =
     state match {
-      case Local => graft.core.PinnedViews.pinned(df)
+      case Local => graft.core.Memo.pinned(df)
       case other => other.pin(df)
     }
 
@@ -456,7 +456,7 @@ object DedupOps {
 
   /** Rep-level band rows plus the hot-bucket set — shared by
     * [[lshContraction]] and [[lshGuardAudit]] so both build the
-    * IDENTICAL pinned plans (one [[graft.core.PinnedViews]] entry per
+    * IDENTICAL pinned plans (one [[graft.core.Memo]] entry per
     * session per corpus). */
   private def lshHot(df: DataFrame, text: Column, state: IterState,
                      maxDf: Long): (Contraction, DataFrame, DataFrame, DataFrame) = {
@@ -2384,10 +2384,10 @@ object DedupOps {
     // broadcast join) — pin it once rather than re-scanning and
     // re-shingling the eval docs per consumer; it is the small side by
     // contract, so the pin is cheap. The pin is SESSION-SCOPED
-    // (PinnedViews) and the sketch is memoized per pin, so repeated
+    // (Memo.pinned) and the sketch is memoized per pin, so repeated
     // invocations over the same eval corpus (bench rounds, explain
     // tooling) pay the checkpoint + bloom build once, not per call.
-    val evalHashed = graft.core.PinnedViews.pinned(
+    val evalHashed = graft.core.Memo.pinned(
       sh(docs.filter(evalPred), "eval_doc")
         .select(col("eval_doc"), col("sh"), HashFunctions.hash60(col("sh")).as("h")))
     val (nEval, bloom) = evalBloom(evalHashed, fpp)
@@ -2402,49 +2402,17 @@ object DedupOps {
       .filter(col("n_shared") >= minShared)
   }
 
-  // Bloom sketch memo, keyed by the PIN's plan: a PinnedViews checkpoint
-  // materializes as a unique LogicalRDD, so after any invalidation the new
-  // pin has a new plan and the stale sketch can never be SERVED — but a
-  // never-served MB-sized sketch still held by the map is a leak on
-  // long-lived sessions with frequent state mutations. The key therefore
-  // carries the pin's PinnedViews generation: lookups evict every entry a
-  // later invalidation superseded (mirroring PinnedViews' own
-  // drop-on-invalidate), and an insert that lost a race with invalidate
-  // stays uncached, same as pinned(). fpp joins the key so different
-  // precisions don't collide.
-  private val bloomCache = scala.collection.mutable.HashMap
-    .empty[(org.apache.spark.sql.SparkSession, Long, Int, Long), List[
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        (Long, org.apache.spark.util.sketch.BloomFilter))]]
-
+  // Bloom sketch memo, keyed by the PIN's plan (fpp joins the key so
+  // different precisions don't collide). A checkpoint materializes as a
+  // unique LogicalRDD, so a stale sketch could never be SERVED after a
+  // re-pin; byPlan's invalidation also drops it, so an MB-sized sketch
+  // is not held past the next state mutation on a long-lived session.
   private def evalBloom(pinnedEval: DataFrame,
-                        fpp: Double): (Long, org.apache.spark.util.sketch.BloomFilter) = {
-    val session = pinnedEval.sparkSession
-    val plan = pinnedEval.queryExecution.analyzed
-    val gen = graft.core.PinnedViews.generation(session)
-    val key = (session, gen, plan.semanticHash(),
-      java.lang.Double.doubleToLongBits(fpp))
-    val hit = bloomCache.synchronized {
-      bloomCache.keys.filter(k => k._1.sparkContext.isStopped ||
-          ((k._1 eq session) && k._2 != gen)).toList
-        .foreach(bloomCache.remove)
-      bloomCache.getOrElse(key, Nil).find(_._1.sameResult(plan)).map(_._2)
+                        fpp: Double): (Long, org.apache.spark.util.sketch.BloomFilter) =
+    graft.core.Memo.byPlan(pinnedEval, ("bloom", java.lang.Double.doubleToLongBits(fpp))) {
+      val nEval = pinnedEval.count()
+      (nEval, if (nEval == 0) null else pinnedEval.stat.bloomFilter("h", nEval, fpp))
     }
-    hit.getOrElse {
-      val nEval = pinnedEval.count() // Spark jobs run outside the monitor
-      val built =
-        (nEval, if (nEval == 0) null else pinnedEval.stat.bloomFilter("h", nEval, fpp))
-      bloomCache.synchronized {
-        if (graft.core.PinnedViews.generation(session) != gen) built // superseded mid-build
-        else bloomCache.getOrElse(key, Nil).find(_._1.sameResult(plan)) match {
-          case Some(winner) => winner._2
-          case None =>
-            bloomCache.update(key, (plan, built) :: bloomCache.getOrElse(key, Nil))
-            built
-        }
-      }
-    }
-  }
 
   def contaminationReportSql(evalPredSql: String, n: Int = 5,
                              minShared: Long = 3,

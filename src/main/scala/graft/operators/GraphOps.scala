@@ -48,7 +48,7 @@ object GraphOps {
     * 0 = uncapped — the gate SFs run the exact graph.
     *
     * Round 18 (guide §2.4 remove shuffles outright): the RESULT rides
-    * the session-scoped [[graft.core.PinnedViews]] memo (via
+    * the session-scoped [[graft.core.Memo]] (via
     * [[DedupOps.memoPin]], so `Reliable`/`Unpinned` semantics are
     * unchanged). Every consumer references the pair relation through
     * several branches (degree aggregate + per-side joins + round
@@ -62,7 +62,7 @@ object GraphOps {
   def overlapPairs(events: DataFrame, gapMinutes: Int = 30,
                    maxDegree: Int = 0,
                    state: IterState = Local): DataFrame = {
-    val sess = graft.core.PinnedViews.pinned(
+    val sess = graft.core.Memo.pinned(
       graft.streaming.EventStreams.userSessions(events, gapMinutes)
         .select(col("user_id"), col("session_start_epoch"),
           col("session_end_epoch")))

@@ -1053,7 +1053,7 @@ object IvfOps {
     // put a FRESH LogicalRDD leaf under the pairs plan, so every
     // componentLabels memoPin below missed the session memo and each
     // invocation permanently accumulated a new set of Borůvka-round
-    // pins that TransientPins.drain never releases (they are PinnedViews
+    // pins that TransientPins.drain never releases (they are Memo.pinned
     // entries) — the same in-sweep storage squeeze round 18 fixed,
     // reintroduced one query at a time. Memo-keyed on the canonicalized
     // semDedup plan (emb scan + model literals — stable per session),
@@ -1231,7 +1231,7 @@ object IvfOps {
     // contract on the flat saveIndex layout: batch-sized, plan-keyed
     // (probe form, model literals, postings paths all in the key).
     // pin=false for per-micro-batch callers.
-    if (pin) graft.core.PinnedViews.pinned(out) else out
+    if (pin) graft.core.Memo.pinned(out) else out
   }
 
   /** [[admitVectors]] over an already-assembled postings relation —

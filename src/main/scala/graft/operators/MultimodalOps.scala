@@ -667,7 +667,7 @@ object MultimodalOps {
     * doc-keyed aggregates — nothing quadratic in the corpus. */
   def frameDupPairs(frames: DataFrame, minShared: Long = 2,
                     maxDf: Long = 64): DataFrame = {
-    val f = graft.core.PinnedViews.pinned(
+    val f = graft.core.Memo.pinned(
       frames.select(col("doc_id"), col("frame_fp")))
     val byDf = f.groupBy("frame_fp").agg(count(lit(1)).as("df"))
     val guarded = byDf.filter(col("df") >= 2 && col("df") <= maxDf)

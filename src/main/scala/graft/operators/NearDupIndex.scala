@@ -109,20 +109,20 @@ object NearDupIndex {
     (cliques, sigs, lshBands(sigs))
   }
 
-  /** [[signCorpus]] through the session's [[graft.core.PinnedViews]]
-    * cache: the analytic probe surfaces (admit / yield / audit /
+  /** [[signCorpus]] through [[graft.core.Memo.pinned]]: the analytic
+    * probe surfaces (admit / yield / audit /
     * guarded / banding) all sign the SAME batch — memoizing by
     * semantic plan signs it once per session, the memoPin discipline
     * of the dedup kernels. NOT used on the write paths
     * (build/extendEpoch): a streaming ingest signs a DIFFERENT batch
     * every micro-batch, and per-batch pins would accumulate in the
-    * session cache for the stream's lifetime. */
+    * memo for the stream's lifetime. */
   private def signCorpusPinned(df: DataFrame, text: Column)
       : (DataFrame, DataFrame, DataFrame) = {
     val (cliques, sigs, bands) = signCorpus(df, text)
-    (graft.core.PinnedViews.pinned(cliques),
-      graft.core.PinnedViews.pinned(sigs),
-      graft.core.PinnedViews.pinned(bands))
+    (graft.core.Memo.pinned(cliques),
+      graft.core.Memo.pinned(sigs),
+      graft.core.Memo.pinned(bands))
   }
 
   /** Zero-row rejections ledger with the persisted schema. */
@@ -356,7 +356,7 @@ object NearDupIndex {
     // pinned rows. Keyed by canonicalized plan: an extension/compaction
     // /retraction changes the epoch path set, so a mutated index can
     // never serve a stale verdict. pin=false (streaming) is untouched.
-    if (pin) graft.core.PinnedViews.pinned(out) else out
+    if (pin) graft.core.Memo.pinned(out) else out
   }
 
   /** [[admit]] under the x78/x182 hot-bucket discipline, applied to the

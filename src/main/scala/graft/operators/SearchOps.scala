@@ -119,7 +119,7 @@ object SearchOps {
     * caller already materialized (cached, e.g. `SparkEntry.cat`'s views)
     * is scanned as is: a second, checkpointed copy would only double the
     * pinned bytes. An uncached view is pinned through the session-scoped
-    * [[graft.core.PinnedViews]] — otherwise each branch would re-join the
+    * [[graft.core.Memo]] — otherwise each branch would re-join the
     * base tables to rebuild it. That pin is eager (one job on the first
     * search over a view): a lazy checkpoint persists only after its first
     * job, so within the single union job every branch would still rebuild
@@ -127,7 +127,7 @@ object SearchOps {
     * searches cost one checkpoint, not N. */
   private def oneCopy(vwLl: DataFrame): DataFrame =
     if (vwLl.storageLevel != StorageLevel.NONE) vwLl
-    else graft.core.PinnedViews.pinned(vwLl)
+    else graft.core.Memo.pinned(vwLl)
 
   /** Union-of-equi-joins duplicate search core (shared by the file/dir
     * entry points; also used directly by the verify queries, which key the

@@ -108,7 +108,7 @@ object ShardAdmission {
     * it persists ONE [[AnnAdmitIndex.admit]] result per micro-batch
     * and feeds it to both this manifest overlay and the ANN index
     * extension, so the growing-with-the-corpus ADC probe runs once per
-    * batch, not twice (the text tiers' PinnedViews memoization,
+    * batch, not twice (the text tiers' Memo.pinned memoization,
     * embedding form). Identical decision semantics to
     * [[reportFullEpoch]] when `embVerdicts` is that probe's result. */
   def reportFullWith(batch: DataFrame, embVerdicts: DataFrame,

@@ -123,7 +123,7 @@ object SpanIndex {
                 text: Column = col("text"), pin: Boolean = true): DataFrame = {
     val wins0 = SubstringOps.windows(incoming, w, text)
     val wins =
-      if (pin) graft.core.PinnedViews.pinned(wins0)
+      if (pin) graft.core.Memo.pinned(wins0)
       else graft.core.TransientPins.track(wins0.localCheckpoint(true))
     val batchFirst = wins.groupBy("whash")
       .agg(min(col("doc_id")).as("bfirst"))
@@ -164,7 +164,7 @@ object SpanIndex {
     // Plan-keyed, so extension/compaction (new epoch paths) and the
     // rebuilt/compacted fixture roots key separately; pin=false
     // (streaming) bypasses as before.
-    if (pin) graft.core.PinnedViews.pinned(out) else out
+    if (pin) graft.core.Memo.pinned(out) else out
   }
 
   /** Commit the batch's NOVEL window hashes as a new epoch under a

@@ -205,7 +205,7 @@ object SubstringOps {
     * else is doc-keyed. Integer arithmetic throughout. */
   def keepFirstSpanBill(df: DataFrame, w: Int = 8,
                         text: Column = col("text")): DataFrame = {
-    val wins = graft.core.PinnedViews.pinned(
+    val wins = graft.core.Memo.pinned(
       windows(df, w, text, fastHash = true)) // whash internal-only
     val first = wins.groupBy("whash").agg(min(col("doc_id")).as("first_doc"))
     val dup = wins.join(first, Seq("whash"))

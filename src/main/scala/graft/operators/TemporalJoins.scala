@@ -232,8 +232,8 @@ object TemporalJoins {
     // NOTE: the FIRST build is eager (runs the sessionization job — see
     // SearchOps.oneCopy for why lazy alternatives don't deliver
     // the reuse); repeat builds over the same corpus reuse the
-    // session-scoped pin (PinnedViews), so N invocations sessionize once.
-    val sess = graft.core.PinnedViews.pinned(
+    // session-scoped pin (Memo.pinned), so N invocations sessionize once.
+    val sess = graft.core.Memo.pinned(
       graft.streaming.EventStreams.userSessions(events, gapMinutes)
         .select(col("user_id"), col("session_no"),
           col("session_start_epoch"), col("session_end_epoch")))

@@ -347,7 +347,7 @@ object TextOps {
     // TwoPhase double-evaluations of the union) — pin it once or every
     // branch re-scans the corpus and re-evaluates the quality score; it
     // is |sources|·grid-bounded by construction, so the pin is cheap
-    val perQ = graft.core.PinnedViews.pinned(
+    val perQ = graft.core.Memo.pinned(
       t.groupBy("source", "q_micro").agg(count(lit(1)).as("c")))
     val sGrid = perQ
       .withColumn("cc", sum(col("c")).over(Window.partitionBy("source")

@@ -343,21 +343,6 @@ object CrawlPipeline {
     n
   }
 
-  /** M8 (`SQLUtil.py:402-441`): crash recovery at startup. The reference
-    * truncates staging/process tables and nulls out worker claims; in the
-    * claim-free batch model only the staging drops need clearing — a
-    * re-run round rebuilds them idempotently. */
-  def resetProcessState(state: StateStore): Unit = {
-    Seq(".stage_scrape", ".stage_hash").foreach { d =>
-      val f = new java.io.File(s"${state.root}/$d")
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete(): Unit
-      }
-      if (f.exists()) rm(f)
-    }
-  }
-
   /** `(id, full_path)` of every file — the vw_file_detail projection the
     * hash selector joins against. */
   private def fullPaths(state: StateStore, cfg: Config = Config()): DataFrame = {

@@ -75,11 +75,4 @@ object HashSource {
         }
       })
   }
-
-  /** Successful hashes as `hash`-table-shaped staged rows (M4 input). */
-  def asStagedHashes(hashed: Dataset[HashedFile]): DataFrame =
-    hashed.toDF().filter(col("error").isNull).select(
-      col("file_id").as("id"), col("file_id"),
-      col("md5_hash"), col("hashed_on").as("md5_hash_time"),
-      col("sha1_hash"), col("hashed_on").as("sha1_hash_time"))
 }

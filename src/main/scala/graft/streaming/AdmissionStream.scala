@@ -117,7 +117,7 @@ object AdmissionStream {
         // by the manifest overlay AND the ANN extension — the probe is
         // the one per-batch cost that grows with the corpus, and the
         // unmemoized form paid it twice (the text tiers' batch signing
-        // is memoized through PinnedViews; this is the embed analog).
+        // is memoized through Memo.pinned; this is the embed analog).
         // Evaluation is lazy: on a full replay neither consumer runs,
         // so the probe never reads an index that already holds b<id>.
         val verdicts = AnnAdmitIndex

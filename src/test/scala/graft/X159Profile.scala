@@ -21,7 +21,7 @@ object X159Profile {
     def time(name: String)(f: => DataFrame): Unit = {
       // best-of-2 through the bench checksum sink (forces all columns)
       val ts = (1 to 2).map { _ =>
-        graft.core.PinnedViews.invalidate(spark)
+        graft.core.Memo.invalidate(spark)
         val t0 = System.nanoTime()
         val df = f
         df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
