@@ -981,14 +981,8 @@ object SparkEntry {
       SearchOps.duplicatesOf(c.vwLl, needle, hashMatch = true, nameMatch = false)
     }),
 
-    "j7_duplicate_simple" -> ((s, dir) => {
-      val c = cat(s, dir)
-      val needle = c.vwFileDetail.filter(col("id") === 100L)
-        .select(col("sha1_hash").as("n_sha1"), col("size").as("n_size")).distinct()
-      c.vwFileDetail.join(broadcast(needle),
-        col("sha1_hash") === col("n_sha1") && col("size") === col("n_size"))
-        .drop("n_sha1", "n_size")
-    }),
+    "j7_duplicate_simple" -> ((s, dir) =>
+      SearchOps.duplicatesSimpleWhere(cat(s, dir).vwFileDetail, col("id") === 100L)),
 
     "j8_search_full_path" -> ((s, dir) =>
       SearchOps.searchFullPath(cat(s, dir).vwLl,
@@ -1158,7 +1152,7 @@ object SparkEntry {
           .otherwise(col("next_crawl")).as("next_crawl"))),
 
     // J6 — the reference's second flagship (`Search.py:297-345`): needle =
-    // every vw_ll row of one directory, same union-of-equi-joins core as j5
+    // every vw_ll row of one directory, same one-pass existence-join core as j5
     "j6_duplicate_dir" -> ((s, dir) =>
       SearchOps.searchDuplicateDir(cat(s, dir).vwLl, "/AFRICA/NATION_0")),
 

@@ -98,10 +98,9 @@ object Memo {
 
   /** The pinned twin of `df`: localCheckpoint'd once per (session,
     * semantic plan). The pin is eager by necessity — a lazy checkpoint
-    * only persists after the first job, so within one union job every
-    * branch would still rebuild the view — and memoized so N invocations
-    * over the same view (bench rounds, explain tooling, plan-shape
-    * specs) pay the checkpoint once. */
+    * only persists after the first job, so that job would still rebuild
+    * the view — and memoized so N invocations over the same view (bench
+    * rounds, explain tooling, plan-shape specs) pay the checkpoint once. */
   def pinned(df: DataFrame): DataFrame = byPlan(df, "pin")(df.localCheckpoint(true))
 
   /** Drop every [[byPlan]] value held for `session` (called by the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.PathFunctions._
@@ -11,10 +11,11 @@ import graft.functions.PathExpressions.basenameFast
   *
   * The duplicate-file/dir searches are the reference's flagship queries.
   * Its formulation is a self-join with an OR-of-conjunctions predicate —
-  * on Spark that would force a broadcast nested-loop join. We decompose it
-  * into a UNION of equi-joins (id-match ∪ sha1+size ∪ md5+size ∪ name),
-  * each of which hash-joins with the (tiny) needle side broadcast, then
-  * de-duplicate. Same result set, no BNLJ (SURVEY §4 "manual rewrites").
+  * on Spark that would force a broadcast nested-loop join. We express it
+  * as ONE filter over the haystack whose branches (id-match, sha1+size,
+  * md5+size, name) are subqueries on the pinned (tiny) needle; Catalyst
+  * plans them as broadcast existence joins in one pass over the haystack.
+  * Same result set, no BNLJ, no shuffle (SURVEY §4 "manual rewrites").
   */
 object SearchOps {
 
@@ -82,7 +83,8 @@ object SearchOps {
       .join(broadcast(d), col("dir_id") === col("d_id"), "left_semi").isEmpty
   }
 
-  /** `search_duplicate_file` (`Search.py:248-295`) as union-of-equi-joins.
+  /** `search_duplicate_file` (`Search.py:248-295`) as one filter over the
+    * haystack (see [[duplicatesCore]]).
     *
     * Needle = rows of `vw_ll` at the exact path. Haystack rows qualify via
     * any of: same file_id (the reference writes `f.id=n.id` against a view
@@ -109,82 +111,79 @@ object SearchOps {
     * `needlePred`, derived from the SAME one-copy evaluation the haystack
     * scans (see [[oneCopy]]) — the whole query costs at most one view
     * build, like the reference's one-scan OR-join. */
-  def duplicatesWhere(vwLl: DataFrame, needlePred: org.apache.spark.sql.Column,
+  def duplicatesWhere(vwLl: DataFrame, needlePred: Column,
                       hashMatch: Boolean, nameMatch: Boolean): DataFrame = {
     val hay = oneCopy(vwLl)
     duplicatesCore(hay, hay.filter(needlePred), hashMatch, nameMatch)
   }
 
-  /** The single copy of `vwLl` every union branch scans. A view the
-    * caller already materialized (cached, e.g. `SparkEntry.cat`'s views)
-    * is scanned as is: a second, checkpointed copy would only double the
+  /** The single copy of `vwLl` the search scans. A view the caller
+    * already materialized (cached, e.g. `SparkEntry.cat`'s views) is
+    * scanned as is: a second, checkpointed copy would only double the
     * pinned bytes. An uncached view is pinned through the session-scoped
-    * [[graft.core.Memo]] — otherwise each branch would re-join the
-    * base tables to rebuild it. That pin is eager (one job on the first
-    * search over a view): a lazy checkpoint persists only after its first
-    * job, so within the single union job every branch would still rebuild
-    * the view. Repeat searches over the same view reuse the pin, so N
-    * searches cost one checkpoint, not N. */
+    * [[graft.core.Memo]] — otherwise the needle pin and the search would
+    * each re-join the base tables to rebuild it. Repeat searches over the
+    * same view reuse the pin, so N searches cost one checkpoint, not N. */
   private def oneCopy(vwLl: DataFrame): DataFrame =
     if (vwLl.storageLevel != StorageLevel.NONE) vwLl
     else graft.core.Memo.pinned(vwLl)
 
-  /** Union-of-equi-joins duplicate search core (shared by the file/dir
-    * entry points; also used directly by the verify queries, which key the
-    * needle by id because full paths are data-dependent). `needle` should
-    * derive from `vwLl` cheaply (pushable predicate) — path-shaped needles
-    * route through [[duplicatesWhere]], which derives them from the
-    * haystack copy instead. */
+  /** Duplicate search core (shared by the file/dir entry points; also
+    * used directly by the verify queries, which key the needle by id
+    * because full paths are data-dependent). `needle` should derive from
+    * `vwLl` cheaply (pushable predicate) — path-shaped needles route
+    * through [[duplicatesWhere]], which derives them from the haystack
+    * copy instead. */
   def duplicatesOf(vwLl: DataFrame, needle: DataFrame,
                    hashMatch: Boolean, nameMatch: Boolean): DataFrame =
     // one view evaluation per query, like the reference's OR-join form (a
     // Postgres view inlines and is scanned ONCE)
     duplicatesCore(oneCopy(vwLl), needle, hashMatch, nameMatch)
 
+  /** The reference's OR-of-conjunctions self-join as ONE filter over the
+    * haystack: each branch is an IN / correlated EXISTS subquery on the
+    * needle, which Catalyst rewrites into a chain of broadcast
+    * `ExistenceJoin`s over a single haystack scan — no union, no shuffle,
+    * no nested-loop join, and a many-row needle cannot multiply rows.
+    * Preconditions:
+    *  - `hay` has one row per `(type, file_id, full_path)` (vw_ll: one
+    *    hash row per file_id, one directory row per dir_path): a filter
+    *    emits each haystack row at most once but does not de-duplicate.
+    *  - The needle is pinned before the subqueries reference it: its
+    *    fresh lineage is what lets `outer()` resolve to the haystack. A
+    *    needle that is a plain filter of `hay` would correlate with its
+    *    own rows and match the whole haystack. */
   private def duplicatesCore(hay: DataFrame, needle: DataFrame,
                              hashMatch: Boolean, nameMatch: Boolean): DataFrame = {
-    // the needle is tiny by contract (one path / one directory's rows) —
-    // pin its projection so the four union branches below broadcast it
-    // without re-deriving it four times
-    val n = needle.select(
-      col("type").as("n_type"), col("full_path").as("n_path"),
-      col("file_id").as("n_file_id"), col("name").as("n_name"),
-      col("size").as("n_size"), col("md5_hash").as("n_md5"), col("sha1_hash").as("n_sha1"))
-      .localCheckpoint(true)
-    graft.core.TransientPins.track(n) // per-invocation needle pin
+    // the needle is tiny by contract (one path / one directory's rows);
+    // the hint keeps every branch a broadcast even when the pin's size
+    // estimate is the pinned view's (an uncached haystack)
+    val n = broadcast(graft.core.TransientPins.track( // per-invocation needle pin
+      needle.select(
+        col("type").as("n_type"), col("full_path").as("n_path"),
+        col("file_id").as("n_file_id"), col("name").as("n_name"),
+        col("size").as("n_size"), col("md5_hash").as("n_md5"), col("sha1_hash").as("n_sha1"))
+        .localCheckpoint(true)))
 
-    // identity branch: file rows match by file_id — restricted to files,
-    // because vw_ll dir rows share the sentinel file_id=0 (a dir needle
-    // would otherwise match EVERY dir row); dir rows match by full_path,
-    // the only identity a vw_ll dir row carries.
-    val byId = hay.filter(col("type") === "file").join(
-      broadcast(n.filter(col("n_type") === "file").select("n_file_id").distinct()),
-      col("file_id") === col("n_file_id")).drop("n_file_id")
-
-    val byPath = hay.filter(col("type") === "dir").join(
-      broadcast(n.filter(col("n_type") === "dir").select("n_path").distinct()),
-      col("full_path") === col("n_path")).drop("n_path")
-
-    val bySha1 = hay.join(
-      broadcast(n.filter(col("n_sha1").isNotNull).select("n_sha1", "n_size").distinct()),
-      col("sha1_hash") === col("n_sha1") && col("size") === col("n_size"))
-      .drop("n_sha1", "n_size")
-
+    def sameContent(digest: String, nDigest: String): Column =
+      col(nDigest) === col(digest).outer() && col("n_size") === col("size").outer()
+    // identity: file rows match by file_id — restricted to files, because
+    // vw_ll dir rows share the sentinel file_id=0 (a dir needle would
+    // otherwise match EVERY dir row); dir rows match by full_path, the
+    // only identity a vw_ll dir row carries.
+    val byId =
+      (col("type") === "file" &&
+        col("file_id").isin(n.filter(col("n_type") === "file").select("n_file_id"))) ||
+      (col("type") === "dir" &&
+        col("full_path").isin(n.filter(col("n_type") === "dir").select("n_path")))
+    val bySha1 = n.filter(sameContent("sha1_hash", "n_sha1")).exists()
     // md5 fallback: fires when sha1 is missing on EITHER side (Search.py:280-285)
-    val byMd5 = hay.join(
-      broadcast(n.filter(col("n_md5").isNotNull)
-        .select("n_md5", "n_size", "n_sha1").distinct()),
-      col("md5_hash") === col("n_md5") && col("size") === col("n_size") &&
-        (col("sha1_hash").isNull || col("n_sha1").isNull))
-      .drop("n_md5", "n_size", "n_sha1")
+    val byMd5 = n.filter(sameContent("md5_hash", "n_md5") &&
+      (col("sha1_hash").outer().isNull || col("n_sha1").isNull)).exists()
+    val byName = col("name").isin(n.select("n_name"))
 
-    val byName = hay.join(broadcast(n.select("n_name").distinct()),
-      col("name") === col("n_name")).drop("n_name")
-
-    val base = byId.unionByName(byPath)
-    val withHash = if (hashMatch) base.unionByName(bySha1).unionByName(byMd5) else base
-    val all = if (nameMatch) withHash.unionByName(byName) else withHash
-    all.dropDuplicates("type", "file_id", "full_path")
+    val withHash = if (hashMatch) byId || bySha1 || byMd5 else byId
+    hay.filter(if (nameMatch) withHash || byName else withHash)
   }
 
   /** The simplified readme flagship (`API/Search.py:26-37`,
@@ -192,12 +191,19 @@ object SearchOps {
     * `vw_file_detail`. */
   def searchDuplicateFileSimple(vwFileDetail: DataFrame, fullPath: String): DataFrame = {
     val p = parseExactSearch(fullPath)
-    val needle = vwFileDetail
-      .filter(col("dir_path") === basepathScala(p) && col("name") === basenameScala(p))
-      .select(col("sha1_hash").as("n_sha1"), col("size").as("n_size")).distinct()
+    duplicatesSimpleWhere(vwFileDetail,
+      col("dir_path") === basepathScala(p) && col("name") === basenameScala(p))
+  }
+
+  /** Predicate-needle form of [[searchDuplicateFileSimple]]: `vwFileDetail`
+    * rows whose (sha1, size) equals that of any row matching `needlePred`.
+    * A broadcast left-semi join returns each row once, so the needle
+    * needs no `distinct` (and no shuffle). */
+  def duplicatesSimpleWhere(vwFileDetail: DataFrame, needlePred: Column): DataFrame = {
+    val needle = vwFileDetail.filter(needlePred)
+      .select(col("sha1_hash").as("n_sha1"), col("size").as("n_size"))
     vwFileDetail.join(broadcast(needle),
-      col("sha1_hash") === col("n_sha1") && col("size") === col("n_size"))
-      .drop("n_sha1", "n_size")
+      col("sha1_hash") === col("n_sha1") && col("size") === col("n_size"), "left_semi")
   }
 
   /** T5 result paging (`API/Schedule.py:20-44`, `API/Util.py:58-90`):

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,42 +26,43 @@ class DuplicateSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    vwLl = catalog(
+      Seq((1L, "/fixture"), (2L, "/fixture/a"), (3L, "/fixture/b"),
+        (4L, "C:\\fx"), (5L, "C:\\fx\\sub")),
+      // (id, name, dir_id, sizeMb)
+      Seq(
+        (10L, "dup1.bin", 2L, "1.000000"),
+        (11L, "dup2.bin", 3L, "1.000000"), // sha1+size dup of dup1
+        (12L, "md5only.bin", 3L, "1.000000"), // md5+size dup, NO sha1
+        (13L, "samename.txt", 2L, "0.500000"),
+        (14L, "samename.txt", 5L, "9.000000"), // name dup, different content
+        (15L, "unique.bin", 4L, "3.000000")),
+      // dup1/dup2 share both digests; md5only shares ONLY md5 (sha1 null);
+      // samename/unique have distinct digests; file 14 has no hash row at all
+      Seq((10L, "AAAA", "S1"), (11L, "AAAA", "S1"), (12L, "AAAA", null),
+        (13L, "BBBB", "S3"), (15L, "CCCC", "S5"))).cache()
+  }
+
+  /** `vw_ll` over hand-authored (id, dir_path) directories, (id, name,
+    * dir_id, sizeMb) files and (file_id, md5, sha1) hash rows. */
+  private def catalog(dirs: Seq[(Long, String)], files: Seq[(Long, String, Long, String)],
+                      hashes: Seq[(Long, String, String)]): DataFrame = {
     val s = spark
     import s.implicits._
-
-    val directory = Seq(
-      (1L, "/fixture"), (2L, "/fixture/a"), (3L, "/fixture/b"),
-      (4L, "C:\\fx"), (5L, "C:\\fx\\sub"))
-      .toDF("id", "dir_path")
+    val directory = dirs.toDF("id", "dir_path")
       .selectExpr("id", "dir_path",
         "timestamp'2024-01-01' AS ctime", "timestamp'2024-01-01' AS mtime",
         "timestamp'2024-01-01' AS inserted_on", "timestamp'2024-01-01' AS updated_on")
-
-    // (id, name, dir_id, sizeMb)
-    val file = Seq(
-      (10L, "dup1.bin", 2L, "1.000000"),
-      (11L, "dup2.bin", 3L, "1.000000"), // sha1+size dup of dup1
-      (12L, "md5only.bin", 3L, "1.000000"), // md5+size dup, NO sha1
-      (13L, "samename.txt", 2L, "0.500000"),
-      (14L, "samename.txt", 5L, "9.000000"), // name dup, different content
-      (15L, "unique.bin", 4L, "3.000000"))
-      .toDF("id", "name", "dir_id", "size")
+    val file = files.toDF("id", "name", "dir_id", "size")
       .selectExpr("id", "name", "dir_id", "CAST(size AS DECIMAL(18,6)) AS size",
         "timestamp'2024-01-01' AS ctime", "timestamp'2024-01-01' AS mtime",
         "CAST(NULL AS TIMESTAMP) AS atime",
         "timestamp'2024-01-01' AS inserted_on", "timestamp'2024-01-01' AS updated_on")
-
-    // dup1/dup2 share both digests; md5only shares ONLY md5 (sha1 null);
-    // samename/unique have distinct digests; file 14 has no hash row at all
-    val hash = Seq(
-      (10L, "AAAA", "S1"), (11L, "AAAA", "S1"), (12L, "AAAA", null),
-      (13L, "BBBB", "S3"), (15L, "CCCC", "S5"))
-      .toDF("file_id", "md5_hash", "sha1_hash")
+    val hash = hashes.toDF("file_id", "md5_hash", "sha1_hash")
       .selectExpr("file_id AS id", "file_id", "md5_hash",
         "timestamp'2024-01-01' AS md5_hash_time", "sha1_hash",
         "timestamp'2024-01-01' AS sha1_hash_time")
-
-    vwLl = Views.vwLl(directory, file, hash).cache()
+    Views.vwLl(directory, file, hash)
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
@@ -113,5 +115,36 @@ class DuplicateSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dups = SearchOps.searchDuplicateFile(vwLl, "/fixture/a/dup1.bin",
       hashMatch = false)
     assert(names(dups) === Seq("dup1.bin"))
+  }
+
+  private def paths(df: DataFrame): Seq[String] =
+    df.collect().map(_.getAs[String]("full_path")).sorted.toSeq
+
+  test("needle derived from the haystack's own view matches only its duplicates") {
+    // the search correlates its subqueries with the haystack; a needle
+    // that is a plain filter of that same view must not correlate with
+    // its own rows (which would return the whole haystack)
+    val dups = SearchOps.duplicatesOf(vwLl, vwLl.filter(col("name") === "dup1.bin"),
+      hashMatch = true, nameMatch = false)
+    assert(paths(dups) === Seq("/fixture/a/dup1.bin", "/fixture/b/dup2.bin",
+      "/fixture/b/md5only.bin"))
+  }
+
+  test("a row qualifying through several branches comes back once") {
+    // dup1 matches its own needle by file_id, by sha1+size and (flag on)
+    // by name; dup2 by sha1+size
+    val dups = SearchOps.searchDuplicateFile(vwLl, "/fixture/a/dup1.bin", nameMatch = true)
+    assert(paths(dups) === Seq("/fixture/a/dup1.bin", "/fixture/b/dup2.bin",
+      "/fixture/b/md5only.bin"))
+  }
+
+  test("dir needle whose files share one (sha1, size) returns each match once") {
+    val twins = catalog(
+      Seq((1L, "/t"), (2L, "/t/twins"), (3L, "/t/other")),
+      Seq((10L, "a.bin", 2L, "2.000000"), (11L, "b.bin", 2L, "2.000000"),
+        (12L, "c.bin", 3L, "2.000000"), (13L, "d.bin", 3L, "5.000000")),
+      Seq((10L, "M9", "S9"), (11L, "M9", "S9"), (12L, "M9", "S9"), (13L, "M8", "S8")))
+    val dups = SearchOps.searchDuplicateDir(twins, "/t/twins")
+    assert(paths(dups) === Seq("/t/other/c.bin", "/t/twins/a.bin", "/t/twins/b.bin"))
   }
 }

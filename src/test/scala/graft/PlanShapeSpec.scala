@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.ExistenceJoin
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.BeforeAndAfterAll
@@ -16,7 +17,8 @@ import graft.operators.{SearchOps, Views}
   * pin the PLAN SHAPE, not timings — the properties that survive a 100×
   * scale-up. If a refactor regresses one of these, the bench will follow.
   *
-  *   - duplicate search: union-of-equi-joins, never a nested-loop join;
+  *   - duplicate search: one haystack pass of broadcast existence joins,
+  *     never a nested-loop join, a shuffle or a sort-merge join;
   *   - top-K scheduling: TakeOrderedAndProject, never a global Sort+Limit;
   *   - view joins: directory/needle sides broadcast (no big-side shuffle);
   *   - scans: filter pushdown + column pruning reach the parquet reader;
@@ -39,21 +41,47 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def physicalPlan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("duplicate-file search plans as broadcast hash joins, no BNLJ") {
-    val c = SparkEntry.cat(spark, sfDir)
-    val needle = c.vwLl.filter(col("file_id").isin(100L, 102L))
-    val df = graft.operators.SearchOps.duplicatesOf(c.vwLl, needle,
-      hashMatch = true, nameMatch = false)
+  /** The duplicate search runs in one pass over the haystack: no BNLJ,
+    * one broadcast existence join per branch (id, path, sha1, md5), and
+    * no shuffle or sort-merge join anywhere in the query's own plan. */
+  private def assertOnePassDuplicateSearch(df: DataFrame): Unit = {
     val plan = physicalPlan(df)
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"OR-join decomposition must avoid BNLJ:\n$plan")
     // count the query's own joins: the plan string also prints the cached
     // view's build plan, whose directory broadcast would satisfy a
     // contains() check on its own. Aqe.collect does not descend into an
-    // InMemoryTableScan. One needle broadcast per union branch (id, path,
-    // sha1, md5).
-    val joins = Aqe.collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
+    // InMemoryTableScan.
+    val own = df.queryExecution.executedPlan
+    val joins = Aqe.collect(own) { case j: BroadcastHashJoinExec => j }
     assert(joins.size == 4, s"needle side should broadcast in every branch:\n$plan")
+    assert(joins.forall(_.joinType.isInstanceOf[ExistenceJoin]),
+      s"every branch should be an existence join:\n$plan")
+    assert(Aqe.collect(own) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the search must not shuffle:\n$plan")
+    assert(Aqe.collect(own) { case j: SortMergeJoinExec => j }.isEmpty,
+      s"the search must not sort-merge join:\n$plan")
+  }
+
+  test("duplicate-file search plans as broadcast hash joins, no BNLJ") {
+    val c = SparkEntry.cat(spark, sfDir)
+    val needle = c.vwLl.filter(col("file_id").isin(100L, 102L))
+    assertOnePassDuplicateSearch(SearchOps.duplicatesOf(c.vwLl, needle,
+      hashMatch = true, nameMatch = false))
+  }
+
+  test("duplicate-dir search (j6 shape) plans as one pass of existence joins") {
+    val c = SparkEntry.cat(spark, sfDir)
+    assertOnePassDuplicateSearch(SearchOps.searchDuplicateDir(c.vwLl, "/AFRICA/NATION_0"))
+  }
+
+  test("duplicate search over an uncached view plans as one pass of existence joins") {
+    val c = SparkEntry.cat(spark, sfDir)
+    val bare = Views.vwLl(c.directory, c.file, c.hash)
+    assert(bare.storageLevel == StorageLevel.NONE, "the build plan must stay uncached")
+    val path = c.vwLl.filter(col("type") === "file").orderBy("file_id").head()
+      .getAs[String]("full_path")
+    assertOnePassDuplicateSearch(SearchOps.searchDuplicateFile(bare, path))
   }
 
   test("T1 scheduling compiles to TakeOrderedAndProject (no global sort)") {
@@ -936,6 +964,14 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dirDups = sortedRows(SearchOps.searchDuplicateDir(c.vwLl, dir))
     assert(dirDups.nonEmpty)
     assert(dirDups == sortedRows(SearchOps.searchDuplicateDir(bare, dir)))
+  }
+
+  test("catalog views: vw_ll is unique on (type, file_id, full_path)") {
+    // the duplicate search filters the haystack instead of de-duplicating
+    // its output, which is exact only on a view with one row per identity
+    val keys = SparkEntry.cat(spark, sfDir).vwLl.select("type", "file_id", "full_path")
+    assert(keys.count() > 0)
+    assert(keys.distinct().count() === keys.count())
   }
 
   test("catalog views: duplicate search pins only its needle, never a copy of the view") {
