@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's mutation pipelines (SURVEY §2.8 M1/M2/M4/M6) as pure
@@ -104,8 +104,7 @@ object MergeOps {
     val isStaged = col("s_path").isNotNull
     val ts = lit(asOf)
     joined.select(
-      when(isNew, pmod(xxhash64(col("s_path")), lit(Long.MaxValue - nextId)) + nextId)
-        .otherwise(col("id")).as("id"),
+      when(isNew, newDirId(col("s_path"), nextId)).otherwise(col("id")).as("id"),
       coalesce(col("dir_path"), col("s_path")).as("dir_path"),
       when(isStaged && (isNew || changed), col("s_ctime")).otherwise(col("ctime")).as("ctime"),
       when(isStaged && (isNew || changed), col("s_mtime")).otherwise(col("mtime")).as("mtime"),
@@ -113,6 +112,11 @@ object MergeOps {
       when(isNew, ts).otherwise(when(isStaged && changed, ts).otherwise(col("updated_on")))
         .as("updated_on"))
   }
+
+  /** The id [[upsertDirs]] gives a directory path it inserts: a keyed
+    * hash, so no max(id)+row_number pass serializes the round. */
+  def newDirId(path: Column, nextId: Long = 1000000L): Column =
+    pmod(xxhash64(path), lit(Long.MaxValue - nextId)) + nextId
 
   /** M4+M5 (`DirectoryCrawl.py:771-795`, `Hash.py:110-179`): merge staged
     * hashes into `hash` keyed `file_id` and drop the drained rows from
@@ -179,17 +183,28 @@ object MergeOps {
                              hashControl: DataFrame, doomed: DataFrame,
                              asOf: java.sql.Timestamp)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val ts = lit(asOf)
     val doomedIds = doomed.select(col("id").as("file_id"))
-    val archive = doomed.select(col("id"), col("name"), col("dir_id"),
-      col("size"), col("ctime"), col("mtime"), col("atime"),
-      col("inserted_on").as("original_inserted_on"),
-      col("updated_on").as("original_updated_on"), ts.as("deleted_on"))
     (file.join(doomedIds, col("id") === col("file_id"), "left_anti"),
       hash.join(doomedIds, Seq("file_id"), "left_anti"),
       hashControl.join(doomedIds, Seq("file_id"), "left_anti"),
-      archive)
+      fileArchiveRows(doomed, asOf))
   }
+
+  /** `file_archive` rows for deleted `file` rows: the original audit
+    * timestamps plus `deleted_on = asOf`. */
+  def fileArchiveRows(doomed: DataFrame, asOf: java.sql.Timestamp): DataFrame =
+    doomed.select(col("id"), col("name"), col("dir_id"),
+      col("size"), col("ctime"), col("mtime"), col("atime"),
+      col("inserted_on").as("original_inserted_on"),
+      col("updated_on").as("original_updated_on"), lit(asOf).as("deleted_on"))
+
+  /** `directory_archive` rows for deleted `directory` rows. */
+  def dirArchiveRows(doomed: DataFrame, asOf: java.sql.Timestamp): DataFrame =
+    doomed.select(col("id"), col("dir_path"),
+      col("ctime"), col("mtime"),
+      col("inserted_on").as("original_inserted_on"),
+      col("updated_on").as("original_updated_on"),
+      lit(asOf).as("deleted_on"))
 
   /** M6 (`FileDbDAL/File.py:263-344`, `Directory.py:195-358`): delete the
     * directories matching `dirPaths` (plus, when `deleteSubdirs`, their
@@ -229,29 +244,29 @@ object MergeOps {
   def deleteDirectoriesDf(directory: DataFrame, file: DataFrame,
                           roots: DataFrame, deleteSubdirs: Boolean,
                           asOf: java.sql.Timestamp): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val r = broadcast(roots.select(col("root_path")).distinct())
-    val cond = if (deleteSubdirs)
-      col("dir_path") === col("root_path") ||
-        col("dir_path").startsWith(concat(col("root_path"), lit("/"))) ||
-        col("dir_path").startsWith(concat(col("root_path"), lit("\\")))
-    else col("dir_path") === col("root_path")
-    val doomedDirs = directory.join(r, cond, "left_semi")
-    val remainingDirs = directory.join(r, cond, "left_anti")
+    val doomedDirs = directoryClosure(directory, roots, deleteSubdirs)
+    val remainingDirs = directory.join(broadcastRoots(roots), closureCond(deleteSubdirs), "left_anti")
     val doomedFiles = file.join(doomedDirs.select(col("id").as("dd_id")),
       col("dir_id") === col("dd_id"), "left_semi")
     val remainingFiles = file.join(doomedDirs.select(col("id").as("dd_id")),
       col("dir_id") === col("dd_id"), "left_anti")
-    val ts = lit(asOf)
-    val dirArchive = doomedDirs.select(col("id"), col("dir_path"),
-      col("ctime"), col("mtime"),
-      col("inserted_on").as("original_inserted_on"),
-      col("updated_on").as("original_updated_on"),
-      ts.as("deleted_on"))
-    val fileArchive = doomedFiles.select(col("id"), col("name"), col("dir_id"),
-      col("size"), col("ctime"), col("mtime"), col("atime"),
-      col("inserted_on").as("original_inserted_on"),
-      col("updated_on").as("original_updated_on"),
-      ts.as("deleted_on"))
-    (remainingDirs, remainingFiles, dirArchive, fileArchive)
+    (remainingDirs, remainingFiles, dirArchiveRows(doomedDirs, asOf),
+      fileArchiveRows(doomedFiles, asOf))
   }
+
+  /** The `directory` rows [[deleteDirectoriesDf]] deletes: those at a
+    * `root_path` of `roots` or, with `deleteSubdirs`, under one. */
+  def directoryClosure(directory: DataFrame, roots: DataFrame,
+                       deleteSubdirs: Boolean): DataFrame =
+    directory.join(broadcastRoots(roots), closureCond(deleteSubdirs), "left_semi")
+
+  private def broadcastRoots(roots: DataFrame): DataFrame =
+    broadcast(roots.select(col("root_path")).distinct())
+
+  private def closureCond(deleteSubdirs: Boolean) =
+    if (deleteSubdirs)
+      col("dir_path") === col("root_path") ||
+        col("dir_path").startsWith(concat(col("root_path"), lit("/"))) ||
+        col("dir_path").startsWith(concat(col("root_path"), lit("\\")))
+    else col("dir_path") === col("root_path")
 }

@@ -2,7 +2,7 @@ package graft.server
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{BucketedState, Schemas, StateStore}
@@ -24,6 +24,22 @@ import graft.sources.{FsScrape, HashSource}
   *     (same end state, one less moving part);
   *   - cross-table atomicity is per-table swap + idempotent re-run,
   *     mirroring the reference's `ON CONFLICT DO NOTHING` posture.
+  *
+  * Like the reference's one `WITH … DELETE … RETURNING → INSERT` statement
+  * per table (`DirectoryCrawl.py:797-1045`), a round evaluates each staged
+  * relation once and writes each state table once:
+  *   - pin once: every relation a round reads more than once is pinned
+  *     (`localCheckpoint`) — and only O(batch) ones: the frontier, the
+  *     per-dir M3/M7 inputs, the staged dirs with their ids, the removed
+  *     roots and their closure, the staged files, the removed files, the
+  *     hash work list.
+  *     Nothing O(table) (`file`, `hash`, `hash_control`, `directory`, the
+  *     upserts over them) is ever pinned; those are read where they are
+  *     written. A round's pins are released when it returns.
+  *   - write once, in this order: the archives, `hash`, `file`,
+  *     `hash_control`, `directory`, and `directory_control` last — the
+  *     schedule is the round's commit, so a round cut short before it is
+  *     re-run from the same frontier.
   */
 object CrawlPipeline {
 
@@ -73,22 +89,27 @@ object CrawlPipeline {
   /** One crawl round. Returns stats; `dueDirs == 0` means fixpoint. */
   def crawlRound(state: StateStore, now: Timestamp,
                  cfg: Config = Config()): RoundStats = {
+    val pins = new RoundPins
+    try crawlWith(state, now, cfg, pins) finally pins.release()
+  }
+
+  private def crawlWith(state: StateStore, now: Timestamp, cfg: Config,
+                        pin: RoundPins): RoundStats = {
     val spark = state.spark
     val ts = lit(now)
-
-    // T1 frontier selection (claim-free batch ownership). The frontier is
-    // pinned (localCheckpoint, bounded by batchSize) because later plans
-    // reuse it after directory_control has been swap-written mid-round —
-    // a stale file listing would otherwise FAILED_READ_FILE.
+    // the versions every plan below reads; each is swap-written once, in
+    // the order at the end, so a plan over one runs before its swap
     val ctl = state.read("directory_control")
-    val due = ctl.filter(col("next_crawl") <= ts && !col("dir_missing"))
+    val directory = state.read("directory")
+
+    // T1 frontier selection (claim-free batch ownership); `inserted_on`
+    // rides along for M7
+    val due = pin(ctl.filter(col("next_crawl") <= ts && !col("dir_missing"))
       .withColumn("priority", ScheduleOps.crawlPriority(ts))
       .orderBy(col("priority").desc, col("dir_path"))
       .limit(cfg.batchSize)
-      .select("dir_path")
-      .localCheckpoint(true)
-    val nDue = due.count()
-    if (nDue == 0) return RoundStats(0, 0, 0, 0, 0)
+      .select("dir_path", "inserted_on"))
+    if (due.isEmpty) return RoundStats(0, 0, 0, 0, 0)
 
     // S1–S3 scrape; materialize once to the staging area (the micro-batch
     // IS the staging table — SURVEY §1.1) so lazy re-reads don't re-scrape
@@ -99,176 +120,160 @@ object CrawlPipeline {
       col("name"), col("dirPath").as("dir_path"),
       col("sizeMb").cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("size"),
       col("ctime"), col("mtime"), col("atime"))
-    val dirs0 = stagedAll.filter(col("kind") === "dir").select(
-      col("fullPath").as("dir_path"), col("ctime"), col("mtime"))
     val missing0 = stagedAll.filter(col("kind") === "missing_dir")
       .select(col("dirPath").as("dir_path"))
+    // M3 + M7 inputs per due dir, from one aggregate over the scrape: file
+    // and subdir counts, and the adaptive frequency from the newest ctime
+    val crawledInfo = pin(ScheduleOps.crawlFrequency(
+        due.join(stagedAll.filter(col("kind").isin("file", "dir"))
+          .groupBy(col("dirPath").as("dir_path"))
+          .agg(count(when(col("kind") === "file", true)).as("fc"),
+            count(when(col("kind") === "dir", true)).as("sc"),
+            max(col("ctime")).as("last_ctime")), Seq("dir_path"), "left"),
+        ts, cfg.divideSeconds, cfg.minFrequencySeconds, cfg.maxFrequencySeconds)
+      .select(col("dir_path"), col("fc"), col("sc"), col("crawl_frequency").as("new_freq")))
 
-    // M2: upsert scraped subdirs AND the crawled dirs themselves (their
-    // own metadata arrives as `self` records — S3)
-    val selfDirs = stagedAll.filter(col("kind") === "self").select(
-      col("fullPath").as("dir_path"), col("ctime"), col("mtime"))
-    val dirStage = dirs0.unionByName(selfDirs).dropDuplicates("dir_path")
-    val newDirectory = MergeOps.upsertDirs(state.read("directory"), dirStage, now)
-    state.write("directory", newDirectory)
-    val directory = state.read("directory")
+    // M2: upsert scraped subdirs and the crawled dirs themselves (a
+    // crawled dir's own metadata arrives as its `self` record — S3)
+    val dirRecords = stagedAll.filter(col("kind").isin("dir", "self"))
+    val upsertedDirs = MergeOps.upsertDirs(directory,
+      dirRecords.select(col("fullPath").as("dir_path"), col("ctime"), col("mtime")), now)
 
-    val bucketed = if (cfg.fileBuckets > 0)
-      Some(new BucketedState(spark, state.root, "file", cfg.fileBuckets)) else None
-    def readFileFull(): DataFrame =
-      bucketed.map(_.read(Schemas.file)).getOrElse(state.read("file"))
+    // each staged dir path once: listed by a scraped parent and/or scraped
+    // itself (only dirs that scraped assert anything about their children
+    // and files), with the id the M2 upsert gives it; the semi-join keeps
+    // the `directory` side of the id lookup O(batch)
+    val dirFlags = dirRecords.groupBy(col("fullPath").as("dir_path"))
+      .agg(max(col("kind") === "dir").as("listed"), max(col("kind") === "self").as("scraped"))
+    val stagedDirs = pin(dirFlags
+      .join(directory.join(dirFlags.select("dir_path"), Seq("dir_path"), "left_semi")
+        .select("dir_path", "id"), Seq("dir_path"), "left")
+      .select(col("dir_path"), coalesce(col("id"), MergeOps.newDirId(col("dir_path"))).as("dir_id"),
+        col("listed"), col("scraped")))
 
     // J11: subdirs recorded under a crawled parent but absent from its
-    // scrape vanished on disk — delete their whole closure (recursive via
-    // the path-prefix join inside deleteDirectoriesDf) with archiving.
-    // The vanished roots stay a DataFrame end-to-end (no driver collect —
-    // a mass-deletion round is a broadcast prefix join, not a 100k-term
-    // literal filter). localCheckpoint pins the root set so the many
-    // consumers below don't re-derive it, and so it survives the
-    // directory-table swap. Write order matters: every plan below reads
-    // the ORIGINAL directory/file tables, so those two swap LAST.
-    val removedRoots: DataFrame = if (cfg.deleteMissing) {
-      directory
+    // scrape vanished on disk — delete their whole closure (the path-prefix
+    // join of MergeOps.directoryClosure) with archiving. The roots stay a
+    // DataFrame end-to-end (no driver collect). Every path the upsert adds
+    // is a staged one, which the anti-join drops, so `directory` yields the
+    // same roots as the upserted table.
+    val doomedDirs: Option[DataFrame] = if (!cfg.deleteMissing) None else {
+      val roots = pin(directory
         .withColumn("parent_path",
           graft.functions.PathExpressions.basepathFast(col("dir_path")))
         // key on dirs that actually SCRAPED (self record), not merely due:
         // a parent whose scrape failed (missing/unmounted) asserts nothing
         // about its children — deleting them would turn a transient mount
         // failure into data loss
-        .join(selfDirs.select(col("dir_path").as("parent_path")), Seq("parent_path"), "left_semi")
+        .join(stagedDirs.filter(col("scraped")).select(col("dir_path").as("parent_path")),
+          Seq("parent_path"), "left_semi")
         // a drive root self-parents (basepath of a top-level path is
         // itself) — roots are never deleted here, only flagged missing
         .filter(col("parent_path") =!= col("dir_path"))
-        .join(dirs0.select("dir_path"), Seq("dir_path"), "left_anti") // parent scrape lists it → alive
-        .join(selfDirs.select("dir_path"), Seq("dir_path"), "left_anti") // it scraped itself → alive
-        .select(col("dir_path").as("root_path")).localCheckpoint(true)
-    } else spark.emptyDataFrame.withColumn("root_path", lit(""))
-    if (cfg.deleteMissing && !removedRoots.isEmpty) {
-      val (remainingDirs, remainingFiles, dirArchive, fileArchive) =
-        MergeOps.deleteDirectoriesDf(directory, readFileFull(),
-          removedRoots, deleteSubdirs = true, now)
-      state.append("directory_archive", dirArchive)
-      state.append("file_archive", fileArchive)
-      val doomedFileIds = fileArchive.select(col("id").as("file_id"))
-      state.write("hash",
-        state.read("hash").join(doomedFileIds, Seq("file_id"), "left_anti"))
-      state.write("hash_control",
-        state.read("hash_control").join(doomedFileIds, Seq("file_id"), "left_anti"))
-      state.write("directory_control",
-        state.read("directory_control")
-          .join(dirArchive.select(col("dir_path")), Seq("dir_path"), "left_anti"))
-      bucketed match {
-        case Some(bs) =>
-          val affected = fileArchive.select(bs.bucketOf(col("dir_id")).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          if (affected.nonEmpty)
-            bs.overwriteBuckets(
-              bs.readBuckets(Schemas.file, affected)
-                .join(doomedFileIds, col("id") === col("file_id"), "left_anti"),
-              "dir_id", affected)
-        case None => state.write("file", remainingFiles)
-      }
-      state.write("directory", remainingDirs) // LAST — upstream plans read it
+        // alive: its parent's scrape lists it, or it scraped itself
+        .join(stagedDirs.select("dir_path"), Seq("dir_path"), "left_anti")
+        .select(col("dir_path").as("root_path")))
+      if (roots.isEmpty) None
+      else Some(pin(MergeOps.dirArchiveRows(
+        MergeOps.directoryClosure(upsertedDirs, roots, deleteSubdirs = true), now)))
     }
-    val directoryAfterRemoval = state.read("directory")
-    // fresh handle: the removal block may have swap-written the control
-    // table, invalidating `ctl`'s captured file listing
-    val ctlAfterRemoval = state.read("directory_control")
+    def withoutDoomed(df: DataFrame): DataFrame = doomedDirs.fold(df)(d =>
+      df.join(d.select("dir_path"), Seq("dir_path"), "left_anti"))
 
-    // resolve staged files to dir ids
-    val dirIds = directoryAfterRemoval.select(col("id").as("dir_id"), col("dir_path"))
-    val stagedFiles = files0.join(dirIds, Seq("dir_path")).drop("dir_path")
+    val liveDirs = withoutDoomed(stagedDirs)
+    val stagedFiles = pin(files0.join(liveDirs.select("dir_path", "dir_id"), Seq("dir_path"))
+      .drop("dir_path"))
     // completeness is asserted only by dirs that actually scraped — a due
     // dir whose scrape failed must not have its files declared vanished
-    val crawledDirIds = selfDirs.select("dir_path").join(dirIds, Seq("dir_path"))
-      .select("dir_id")
+    val crawledDirIds = liveDirs.filter(col("scraped")).select("dir_id")
 
-    // M1 removal branch (J10): files under crawled dirs absent from the
-    // snapshot → archive + delete (+ hash/hash_control cleanup, M6 shape).
-    // In bucketed mode the merge only ever reads/writes the buckets of
-    // the crawled dirs (staged + vanished rows all live there).
+    // In bucketed mode the merge only ever reads/writes the buckets of the
+    // crawled and deleted dirs (staged, vanished and doomed rows live there)
+    val bucketed = if (cfg.fileBuckets > 0)
+      Some(new BucketedState(spark, state.root, "file", cfg.fileBuckets)) else None
     val affectedBuckets: Seq[Int] = bucketed.map { bs =>
-      crawledDirIds.select(bs.bucketOf(col("dir_id")).as("b")).distinct()
+      doomedDirs.fold(crawledDirIds)(d => crawledDirIds.unionByName(d.select(col("id").as("dir_id"))))
+        .select(bs.bucketOf(col("dir_id")).as("b")).distinct()
         .collect().map(_.getInt(0)).toSeq
     }.getOrElse(Nil)
-    val fileTable = bucketed
+    def readFiles(): DataFrame = bucketed
       .map(_.readBuckets(Schemas.file, affectedBuckets))
       .getOrElse(state.read("file"))
+    val fileTable = readFiles()
+
+    // M1 removal branch (J10): files under crawled dirs absent from the
+    // snapshot, plus the files of the deleted dirs — archived, and dropped
+    // from file, hash and hash_control (M6 shape)
     val vanished = if (cfg.deleteMissing)
       MergeOps.missingFilesIn(fileTable, stagedFiles, crawledDirIds)
     else fileTable.limit(0)
-    val nVanished = vanished.count()
-    if (nVanished > 0) {
-      state.append("file_archive", vanished.select(
-        col("id"), col("name"), col("dir_id"), col("size"),
-        col("ctime"), col("mtime"), col("atime"),
-        col("inserted_on").as("original_inserted_on"),
-        col("updated_on").as("original_updated_on"), ts.as("deleted_on")))
-      val vanishedIds = vanished.select(col("id").as("file_id"))
+    val gone = pin(doomedDirs.foldLeft(
+        MergeOps.fileArchiveRows(vanished, now).withColumn("kind", lit("vanished"))) { (v, d) =>
+      v.unionByName(MergeOps.fileArchiveRows(
+        fileTable.join(d.select(col("id").as("dir_id")), Seq("dir_id"), "left_semi"), now)
+        .withColumn("kind", lit("doomed_file")))
+    })
+    val goneIds = gone.select(col("id").as("file_id"))
+
+    // every count the round needs, in one pass over the scrape and the pins
+    val perKind = Seq("due", "dir", "missing_dir", "staged_file", "vanished", "doomed_file")
+      .map(k => count(when(col("kind") === k, true)))
+    val counts = stagedAll.select("kind")
+      .unionByName(due.select(lit("due").as("kind")))
+      .unionByName(stagedFiles.select(lit("staged_file").as("kind")))
+      .unionByName(gone.select("kind"))
+      .agg(perKind.head, perKind.tail: _*)
+      .head()
+    val Seq(nDue, nDirs, nMissing, nStaged, nVanished, nDoomedFiles) =
+      perKind.indices.map(counts.getLong)
+    val anyGone = nVanished + nDoomedFiles > 0
+
+    doomedDirs.foreach(d => state.append("directory_archive", d))
+    if (anyGone) {
+      state.append("file_archive", gone)
       state.write("hash",
-        state.read("hash").join(vanishedIds, Seq("file_id"), "left_anti"))
-      state.write("hash_control",
-        state.read("hash_control").join(vanishedIds, Seq("file_id"), "left_anti"))
+        state.read("hash").join(goneIds, Seq("file_id"), "left_anti"))
     }
 
-    // M1 upsert (change-only updates) — then drop vanished rows
+    // M1 upsert (change-only updates), then drop the removed rows
     val upserted = MergeOps.upsertFiles(fileTable, stagedFiles, now)
     val newFile =
-      if (nVanished > 0)
-        upserted.join(vanished.select(col("id")), Seq("id"), "left_anti")
+      if (anyGone) upserted.join(goneIds.select(col("file_id").as("id")), Seq("id"), "left_anti")
       else upserted
     bucketed match {
       case Some(bs) => bs.overwriteBuckets(newFile, "dir_id", affectedBuckets)
       case None => state.write("file", newFile)
     }
-    val fileAfter = bucketed
-      .map(_.readBuckets(Schemas.file, affectedBuckets))
-      .getOrElse(state.read("file"))
 
-    // M1 hash-scheduling branch: staged files that are not hashed yet
-    // (J12) OR changed this round (DirectoryCrawl.py:856-873 re-queues on
-    // mtime change — our change-only upsert stamped those updated_on=now)
-    val stagedKeys = stagedFiles.select("dir_id", "name").distinct()
-    val stagedCurrent = fileAfter.join(stagedKeys, Seq("dir_id", "name"), "left_semi")
-    val unhashed = stagedCurrent.join(state.read("hash").select(col("file_id")),
-      col("id") === col("file_id"), "left_anti")
-    val changedNow = stagedCurrent.filter(col("updated_on") === ts)
-    val needHash = unhashed.unionByName(changedNow).dropDuplicates("id")
+    // M1 hash-scheduling branch: staged files that changed this round
+    // (DirectoryCrawl.py:856-873 re-queues on mtime change — our
+    // change-only upsert stamped those updated_on=now) OR are not hashed
+    // yet (J12), unless already queued; the queue minus removed files
+    val hash = state.read("hash")
+    val hashCtl = state.read("hash_control")
+    val needHash = readFiles()
+      .join(stagedFiles.select("dir_id", "name"), Seq("dir_id", "name"), "left_semi")
+      .filter(col("updated_on") === ts ||
+        !hash.filter(col("file_id") === col("id").outer()).exists())
       .select(col("id").as("file_id"), col("mtime"),
         col("size").as("file_size"),
         lit(null).cast("timestamp").as("process_assigned_on"),
         lit(false).as("file_missing"), ts.as("inserted_on"))
-      .join(state.read("hash_control").select("file_id"), Seq("file_id"), "left_anti")
-    state.write("hash_control", state.read("hash_control").unionByName(needHash))
+      .join(hashCtl.select("file_id"), Seq("file_id"), "left_anti")
+    val keptQueue = if (anyGone) hashCtl.join(goneIds, Seq("file_id"), "left_anti") else hashCtl
+    state.write("hash_control", keptQueue.unionByName(needHash))
 
-    // M3 + M7: reschedule crawled dirs from the snapshot's activity
-    // (counts/activity key on the scraped parent path directly)
-    val fileCounts = stagedAll.filter(col("kind") === "file")
-      .groupBy(col("dirPath").as("dir_path")).agg(count(lit(1)).as("fc"))
-    val subdirCounts = stagedAll.filter(col("kind") === "dir")
-      .groupBy(col("dirPath").as("dir_path")).agg(count(lit(1)).as("sc"))
-    val activity = stagedAll.filter(col("kind").isin("file", "dir"))
-      .select(col("dirPath").as("dir_path"), col("ctime"))
-      .groupBy("dir_path").agg(max(col("ctime")).as("last_ctime"))
-    val freq = due
-      .join(activity, Seq("dir_path"), "left")
-      .join(ctlAfterRemoval.select(col("dir_path"), col("inserted_on")), Seq("dir_path"))
-    val withFreq = ScheduleOps.crawlFrequency(freq, ts, cfg.divideSeconds,
-      cfg.minFrequencySeconds, cfg.maxFrequencySeconds)
-      .select(col("dir_path"), col("crawl_frequency").as("new_freq"))
+    state.write("directory", withoutDoomed(upsertedDirs))
+    val dirIds = state.read("directory").select(col("id").as("dir_id"), col("dir_path"))
 
-    // M3 core is the shared operator (oracle-gated as m3_mark_crawled);
-    // the pipeline's claim-free batch model clears every claim and
-    // un-flags missing dirs each round (the retry path — see the
-    // markDirsCrawled doc), then re-resolves dir ids for dirs first seen
-    // this round.
-    val crawledInfo = due.select(col("dir_path"))
-      .join(fileCounts, Seq("dir_path"), "left")
-      .join(subdirCounts, Seq("dir_path"), "left")
-      .join(withFreq, Seq("dir_path"), "left")
-      .select(col("dir_path"), col("fc"), col("sc"), col("new_freq"))
+    // M3 + M7: reschedule crawled dirs. M3 core is the shared operator
+    // (oracle-gated as m3_mark_crawled); the pipeline's claim-free batch
+    // model clears every claim and un-flags missing dirs each round (the
+    // retry path — see the markDirsCrawled doc), then re-resolves dir ids
+    // for dirs first seen this round.
+    val ctlKept = withoutDoomed(ctl)
     val crawledUpdate = ScheduleOps.markDirsCrawled(
-        ctlAfterRemoval, crawledInfo, missing0, ts,
+        ctlKept, crawledInfo, missing0, ts,
         cfg.missingRetrySeconds, clearAllClaims = true, preserveMissing = false)
       .join(dirIds.select(col("dir_path"), col("dir_id").as("resolved_id")),
         Seq("dir_path"), "left")
@@ -277,9 +282,8 @@ object CrawlPipeline {
 
     // schedule newly discovered subdirs (M2 insert branch — never reschedule
     // existing entries: DirectoryCrawl.py:933-945)
-    val newCtl = dirs0.select("dir_path").distinct()
-      .join(ctlAfterRemoval.select("dir_path"), Seq("dir_path"), "left_anti")
-      .join(dirIds, Seq("dir_path"))
+    val newCtl = liveDirs.filter(col("listed"))
+      .join(ctlKept.select("dir_path"), Seq("dir_path"), "left_anti")
       .select(col("dir_path"), col("dir_id"),
         lit(0).as("file_count"), lit(0).as("subdir_count"),
         ts.as("next_crawl"), lit(86400L).as("crawl_frequency"),
@@ -291,7 +295,7 @@ object CrawlPipeline {
 
     state.write("directory_control", crawledUpdate.unionByName(newCtl))
 
-    RoundStats(nDue, stagedFiles.count(), dirs0.count(), missing0.count(), nVanished)
+    RoundStats(nDue, nStaged, nDirs, nMissing, nVanished)
   }
 
   /** Run crawl rounds until the frontier drains (or maxRounds). Returns
@@ -315,10 +319,16 @@ object CrawlPipeline {
     * dual-hash → M4 merge into `hash` + drain `hash_control`. */
   def hashRound(state: StateStore, now: Timestamp, limit: Int = 10000,
                 cfg: Config = Config()): Long = {
+    val pins = new RoundPins
+    try hashWith(state, now, limit, cfg, pins) finally pins.release()
+  }
+
+  private def hashWith(state: StateStore, now: Timestamp, limit: Int,
+                       cfg: Config, pin: RoundPins): Long = {
     val spark = state.spark
-    val work = ScheduleOps.filesToHash(
+    val work = pin(ScheduleOps.filesToHash(
       state.read("hash_control"),
-      fullPaths(state, cfg), limit)
+      fullPaths(state, cfg), limit))
     if (work.isEmpty) return 0L
     val hashed = HashSource.hashBatch(spark, work, now)
     hashed.write.mode("overwrite").parquet(s"${state.root}/.stage_hash")
@@ -355,5 +365,23 @@ object CrawlPipeline {
       .join(d, col("dir_id") === col("d_id"))
       .select(col("id"),
         graft.functions.PathFunctions.pathJoin(col("dir_path"), col("name")).as("full_path"))
+  }
+
+  /** The pins one crawl or hash round creates (`localCheckpoint`, O(batch)
+    * relations only), released together once the round's last write is
+    * done — a long-lived server loop must not wait for GC and the
+    * ContextCleaner to free them. */
+  private final class RoundPins {
+    private val rdds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+
+    def apply(df: DataFrame): DataFrame = {
+      val pinned = df.localCheckpoint(true)
+      rdds ++= pinned.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }
+      pinned
+    }
+
+    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
   }
 }

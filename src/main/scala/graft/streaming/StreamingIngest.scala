@@ -165,11 +165,7 @@ object StreamingIngest {
     else state.read("file").limit(0)
     val anyVanished = deleteMissing && !vanished.isEmpty
     if (anyVanished) {
-      state.append("file_archive", vanished.select(
-        col("id"), col("name"), col("dir_id"), col("size"),
-        col("ctime"), col("mtime"), col("atime"),
-        col("inserted_on").as("original_inserted_on"),
-        col("updated_on").as("original_updated_on"), ts.as("deleted_on")))
+      state.append("file_archive", MergeOps.fileArchiveRows(vanished, asOf))
       val vanishedIds = vanished.select(col("id").as("file_id"))
       state.write("hash",
         state.read("hash").join(vanishedIds, Seq("file_id"), "left_anti"))

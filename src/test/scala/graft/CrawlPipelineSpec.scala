@@ -253,6 +253,92 @@ class CrawlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(st.read("directory").count() === 2)
   }
 
+  /** A fresh state over a fresh copy of the spec's fixture tree, crawled
+    * to fixpoint and hashed at `t1`. */
+  private def crawledCopy(): (StateStore, Path) = {
+    val st = new StateStore(spark, Files.createTempDirectory("graft_cstate").toString)
+    val fx = Files.createTempDirectory("graft_cfixture")
+    val sub = Files.createDirectories(fx.resolve("sub"))
+    Files.createDirectories(fx.resolve("empty"))
+    Files.write(fx.resolve("a.bin"), "duplicate-content".getBytes)
+    Files.write(fx.resolve("b.bin"), "duplicate-content".getBytes)
+    Files.write(sub.resolve("c.bin"), "unique-content".getBytes)
+    CrawlPipeline.seedDrives(st, Seq(fx.toString), t1)
+    CrawlPipeline.runToFixpoint(st, t1)
+    CrawlPipeline.hashRound(st, t1)
+    (st, fx)
+  }
+
+  test("a round releases its pins") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (st, fx) = crawledCopy()
+    Files.write(fx.resolve("new.bin"), "new".getBytes)
+    Files.delete(fx.resolve("b.bin"))
+    CrawlPipeline.runToFixpoint(st, t2)
+    assert(CrawlPipeline.hashRound(st, t2) > 0)
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
+
+  test("a file queued for hashing and deleted before its hash round is archived once") {
+    val (st, fx) = crawledCopy()
+    Files.write(fx.resolve("z.bin"), "short-lived".getBytes)
+    CrawlPipeline.runToFixpoint(st, t2)
+    val zId = st.read("file").filter(col("name") === "z.bin").head().getAs[Long]("id")
+    assert(st.read("hash_control").filter(col("file_id") === zId).count() === 1)
+    val hashBefore = st.read("hash").collect().toSet
+    assert(hashBefore.nonEmpty)
+
+    Files.delete(fx.resolve("z.bin"))
+    val t3 = Timestamp.valueOf("2024-01-03 00:00:00")
+    val rounds = CrawlPipeline.runToFixpoint(st, t3)
+    assert(rounds.map(_.removedFiles).sum === 1)
+    val arch = st.read("file_archive").filter(col("id") === zId)
+    assert(arch.count() === 1)
+    assert(arch.head().getAs[Timestamp]("deleted_on") === t3)
+    assert(st.read("file").filter(col("id") === zId).count() === 0)
+    assert(st.read("hash_control").filter(col("file_id") === zId).count() === 0)
+    assert(st.read("hash").collect().toSet === hashBefore)
+  }
+
+  test("a re-crawl round stays within its Spark job budget") {
+    // Bound measured with this spec's session (local[4], 4 shuffle
+    // partitions, AQE on): the round below ran 44 jobs, counting every
+    // shuffle stage and broadcast AQE submits as its own job. A round that
+    // re-derived its intermediates and wrote `hash_control` twice ran 71.
+    val (st, fx) = crawledCopy()
+    Files.write(fx.resolve("sub").resolve("c.bin"), "changed-content!".getBytes)
+    Files.write(fx.resolve("e.bin"), "fresh".getBytes)
+    Files.delete(fx.resolve("b.bin"))
+    // the round's jobs carry a thread-local tag (Spark SQL hands local
+    // properties on to the threads that run broadcasts and AQE stages), so
+    // no job of another thread is counted
+    val sc = spark.sparkContext
+    val tag = "graft.spec.round"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) == "1")) jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    val stats = try CrawlPipeline.crawlRound(st, t2)
+      finally {
+        sc.setLocalProperty(tag, null)
+        org.apache.spark.graftbridge.ListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(stats.dueDirs === 3 && stats.removedFiles === 1)
+    assert(jobs.get() <= 44, s"${jobs.get()} Spark jobs in one crawl round")
+  }
+
+  test("server rounds print as one JSON line") {
+    val line = graft.server.ServerMain.roundJson(
+      CrawlPipeline.RoundStats(3, 24, 1, 0, 2), hashed = 24, crawlMs = 812, hashMs = 95)
+    assert(line === """{"due": 3, "staged_files": 24, "new_dirs": 1, "missing": 0, """ +
+      """"removed": 2, "hashed": 24, "crawl_ms": 812, "hash_ms": 95}""")
+  }
+
   test("missing drive root is flagged, retried later, not fatal") {
     val ghostState = new StateStore(spark,
       Files.createTempDirectory("graft_ghost").toString)
