@@ -45,10 +45,7 @@ object MergeOps {
       col("name") === col("s_name") && col("dir_id") === col("s_dir_id"),
       "full_outer")
 
-    val changed = !(col("size") <=> col("s_size")) ||
-      !(col("ctime") <=> col("s_ctime")) ||
-      !(col("mtime") <=> col("s_mtime")) ||
-      !(col("atime") <=> col("s_atime"))
+    val changed = fileChanged
     val isNew = col("id").isNull
     val isStaged = col("s_name").isNotNull
     val ts = lit(asOf)
@@ -57,8 +54,7 @@ object MergeOps {
       // New files get deterministic ids derived from their key — at scale a
       // max(id)+row_number pass would serialize; a keyed hash doesn't
       // (SURVEY §7.4.2). nextId offsets keep them out of the existing range.
-      when(isNew, pmod(xxhash64(col("s_name"), col("s_dir_id")), lit(Long.MaxValue - nextId)) + nextId)
-        .otherwise(col("id")).as("id"),
+      when(isNew, newFileId(col("s_name"), col("s_dir_id"), nextId)).otherwise(col("id")).as("id"),
       coalesce(col("name"), col("s_name")).as("name"),
       coalesce(col("dir_id"), col("s_dir_id")).as("dir_id"),
       when(isStaged && (isNew || changed), col("s_size")).otherwise(col("size"))
@@ -70,6 +66,16 @@ object MergeOps {
       when(isNew, ts).otherwise(when(isStaged && changed, ts).otherwise(col("updated_on")))
         .as("updated_on"))
   }
+
+  /** The id [[upsertFiles]] gives a file it inserts: a keyed hash of its
+    * `(name, dir_id)`. */
+  def newFileId(name: Column, dirId: Column, nextId: Long = 1000000L): Column =
+    pmod(xxhash64(name, dirId), lit(Long.MaxValue - nextId)) + nextId
+
+  /** The M1 change rule: size, ctime, mtime or atime differs (null-safe)
+    * between a `file` row and its `s_`-prefixed staged twin. */
+  def fileChanged: Column =
+    Seq("size", "ctime", "mtime", "atime").map(c => !(col(c) <=> col(s"s_$c"))).reduce(_ || _)
 
   /** M1 removal branch (J10, `DirectoryCrawl.py:816-833`): files recorded
     * under the staged batch's directories but absent from the staged

@@ -2,8 +2,9 @@ package graft.server
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.core.{BucketedState, Schemas, StateStore}
 import graft.operators.{MergeOps, ScheduleOps}
@@ -25,21 +26,23 @@ import graft.sources.{FsScrape, HashSource}
   *   - cross-table atomicity is per-table swap + idempotent re-run,
   *     mirroring the reference's `ON CONFLICT DO NOTHING` posture.
   *
-  * Like the reference's one `WITH … DELETE … RETURNING → INSERT` statement
-  * per table (`DirectoryCrawl.py:797-1045`), a round evaluates each staged
-  * relation once and writes each state table once:
-  *   - pin once: every relation a round reads more than once is pinned
-  *     (`localCheckpoint`) — and only O(batch) ones: the frontier, the
-  *     per-dir M3/M7 inputs, the staged dirs with their ids, the removed
-  *     roots and their closure, the staged files, the removed files, the
-  *     hash work list.
-  *     Nothing O(table) (`file`, `hash`, `hash_control`, `directory`, the
-  *     upserts over them) is ever pinned; those are read where they are
-  *     written. A round's pins are released when it returns.
+  * The merge after the scrape is [[mergeScrape]], the one core that both
+  * `crawlRound` and `StreamingIngest.mergeBatch` call. Like the reference's
+  * one `WITH … DELETE … RETURNING → INSERT` statement per table
+  * (`DirectoryCrawl.py:797-1045`), it evaluates each staged relation once
+  * and writes each state table once:
+  *   - pin once: every relation read more than once is pinned
+  *     (`localCheckpoint`) — and only O(batch) ones: the staged batch (the
+  *     stream's; the crawl's is `.stage_scrape`), the frontier and the
+  *     per-dir M3/M7 inputs (crawl only), the staged dirs with their ids,
+  *     the removed roots and their closure, the staged files, the removed
+  *     files. Nothing O(table) (`file`, `hash`, `hash_control`, `directory`,
+  *     the upserts over them) is ever pinned; those are read where they are
+  *     written. A round's or micro-batch's pins are released when it returns.
   *   - write once, in this order: the archives, `hash`, `file`,
-  *     `hash_control`, `directory`, and `directory_control` last — the
-  *     schedule is the round's commit, so a round cut short before it is
-  *     re-run from the same frontier.
+  *     `hash_control`, `directory` (the core), then `directory_control`
+  *     (the caller) last — the schedule is the round's commit, so a round
+  *     cut short before it is re-run from the same frontier.
   */
 object CrawlPipeline {
 
@@ -49,7 +52,6 @@ object CrawlPipeline {
       minFrequencySeconds: Int = 900,
       maxFrequencySeconds: Int = 604800,
       missingRetrySeconds: Int = 86400, // DirectoryCrawl.py:1020-1024
-      deleteMissing: Boolean = true,
       // >0 = keep `file` state hash-bucketed by dir_id and rewrite only
       // the buckets a round touches (O(batch), not O(table) — the 100 TB
       // merge shape; see BucketedState). 0 = whole-table swap writes.
@@ -73,15 +75,8 @@ object CrawlPipeline {
 
     val unscheduled = ScheduleOps.unscheduledDrives(
       state.read("drive"), state.read("directory_control"))
-    val seeded = unscheduled.select(
-      col("dir_path"), lit(null).cast("long").as("dir_id"),
-      lit(0).as("file_count"), lit(0).as("subdir_count"),
-      ts.as("next_crawl"), lit(86400L).as("crawl_frequency"),
-      lit(null).cast("int").as("assigned_process_id"),
-      lit(null).cast("timestamp").as("process_assigned_on"),
-      lit(null).cast("timestamp").as("last_crawled"),
-      lit(null).cast("timestamp").as("last_active"),
-      lit(false).as("dir_missing"), ts.as("inserted_on"))
+    val seeded = firstSchedule(
+      unscheduled.select(col("dir_path"), lit(null).cast("long").as("dir_id")), ts)
     state.write("directory_control",
       state.read("directory_control").unionByName(seeded))
   }
@@ -97,14 +92,12 @@ object CrawlPipeline {
                         pin: RoundPins): RoundStats = {
     val spark = state.spark
     val ts = lit(now)
-    // the versions every plan below reads; each is swap-written once, in
-    // the order at the end, so a plan over one runs before its swap
     val ctl = state.read("directory_control")
-    val directory = state.read("directory")
 
-    // T1 frontier selection (claim-free batch ownership); `inserted_on`
-    // rides along for M7
-    val due = pin(ctl.filter(col("next_crawl") <= ts && !col("dir_missing"))
+    // T1 frontier selection (claim-free batch ownership). `next_crawl`
+    // alone decides: a dir flagged missing comes due again at the retry
+    // time markDirsCrawled gave it. `inserted_on` rides along for M7
+    val due = pin(ctl.filter(col("next_crawl") <= ts)
       .withColumn("priority", ScheduleOps.crawlPriority(ts))
       .orderBy(col("priority").desc, col("dir_path"))
       .limit(cfg.batchSize)
@@ -116,12 +109,6 @@ object CrawlPipeline {
     val scraped = FsScrape.scrapeBatch(spark, due)
     scraped.write.mode("overwrite").parquet(s"${state.root}/.stage_scrape")
     val stagedAll = spark.read.parquet(s"${state.root}/.stage_scrape")
-    val files0 = stagedAll.filter(col("kind") === "file").select(
-      col("name"), col("dirPath").as("dir_path"),
-      col("sizeMb").cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("size"),
-      col("ctime"), col("mtime"), col("atime"))
-    val missing0 = stagedAll.filter(col("kind") === "missing_dir")
-      .select(col("dirPath").as("dir_path"))
     // M3 + M7 inputs per due dir, from one aggregate over the scrape: file
     // and subdir counts, and the adaptive frequency from the newest ctime
     val crawledInfo = pin(ScheduleOps.crawlFrequency(
@@ -133,80 +120,167 @@ object CrawlPipeline {
         ts, cfg.divideSeconds, cfg.minFrequencySeconds, cfg.maxFrequencySeconds)
       .select(col("dir_path"), col("fc"), col("sc"), col("crawl_frequency").as("new_freq")))
 
-    // M2: upsert scraped subdirs and the crawled dirs themselves (a
-    // crawled dir's own metadata arrives as its `self` record — S3)
-    val dirRecords = stagedAll.filter(col("kind").isin("dir", "self"))
-    val upsertedDirs = MergeOps.upsertDirs(directory,
-      dirRecords.select(col("fullPath").as("dir_path"), col("ctime"), col("mtime")), now)
+    val merged = mergeScrape(state, stagedAll, now, cfg, pin)
 
-    // each staged dir path once: listed by a scraped parent and/or scraped
-    // itself (only dirs that scraped assert anything about their children
-    // and files), with the id the M2 upsert gives it; the semi-join keeps
-    // the `directory` side of the id lookup O(batch)
-    val dirFlags = dirRecords.groupBy(col("fullPath").as("dir_path"))
-      .agg(max(col("kind") === "dir").as("listed"), max(col("kind") === "self").as("scraped"))
+    // M3 + M7: reschedule crawled dirs. M3 core is the shared operator
+    // (oracle-gated as m3_mark_crawled); the pipeline's claim-free batch
+    // model clears every claim and un-flags missing dirs each round (the
+    // retry path — see the markDirsCrawled doc), then re-resolves dir ids
+    // for dirs first seen this round.
+    val ctlKept = merged.withoutDoomed(ctl)
+    val crawledUpdate = ScheduleOps.markDirsCrawled(
+        ctlKept, crawledInfo,
+        stagedAll.filter(col("kind") === "missing_dir").select(col("dirPath").as("dir_path")),
+        ts, cfg.missingRetrySeconds, clearAllClaims = true, preserveMissing = false)
+      .join(state.read("directory").select(col("dir_path"), col("id").as("resolved_id")),
+        Seq("dir_path"), "left")
+      .withColumn("dir_id", coalesce(col("resolved_id"), col("dir_id")))
+      .drop("resolved_id")
+
+    // schedule newly discovered subdirs (M2 insert branch — never reschedule
+    // existing entries: DirectoryCrawl.py:933-945)
+    val newCtl = firstSchedule(merged.liveDirs.filter(col("listed"))
+      .join(ctlKept.select("dir_path"), Seq("dir_path"), "left_anti"), ts)
+
+    state.write("directory_control", crawledUpdate.unionByName(newCtl))
+
+    // each due dir's scrape yields exactly one `self` or `missing_dir` row
+    RoundStats(merged.scraped + merged.missingDirs, merged.stagedFiles,
+      merged.listedDirs, merged.missingDirs, merged.removedFiles)
+  }
+
+  /** `directory_control` rows scheduling `dirs` (`dir_path`, `dir_id`) for
+    * a first crawl at `ts`. */
+  private def firstSchedule(dirs: DataFrame, ts: Column): DataFrame =
+    dirs.select(col("dir_path"), col("dir_id"),
+      lit(0).as("file_count"), lit(0).as("subdir_count"),
+      ts.as("next_crawl"), lit(86400L).as("crawl_frequency"),
+      lit(null).cast("int").as("assigned_process_id"),
+      lit(null).cast("timestamp").as("process_assigned_on"),
+      lit(null).cast("timestamp").as("last_crawled"),
+      lit(null).cast("timestamp").as("last_active"),
+      lit(false).as("dir_missing"), ts.as("inserted_on"))
+
+  /** What [[mergeScrape]] leaves to its caller, which writes
+    * `directory_control` last: the archive rows of the removed dirs (the
+    * J11 closure, pinned), the staged dirs that survive (`dir_path`,
+    * `dir_id`, `listed`, `scraped`, `has_files`), and the row counts. */
+  private[graft] final case class Merged(
+      doomedDirs: Option[DataFrame], liveDirs: DataFrame,
+      scraped: Long, listedDirs: Long, missingDirs: Long,
+      stagedFiles: Long, removedFiles: Long) {
+    def withoutDoomed(df: DataFrame): DataFrame = CrawlPipeline.withoutDoomed(doomedDirs, df)
+  }
+
+  private def withoutDoomed(doomedDirs: Option[DataFrame], df: DataFrame): DataFrame =
+    doomedDirs.fold(df)(d => df.join(d.select("dir_path"), Seq("dir_path"), "left_anti"))
+
+  /** Merge one staged scrape into the state: M2 dir upsert, J11
+    * vanished-subdir closure, J10 vanished files, the archives, M1 file
+    * upsert and the J12 hash queue, under the object doc's rules. `staged`
+    * has the `FsScrape.ScrapeRecord` columns, one row per `(kind,
+    * fullPath)`, and is materialized. Only a dir with a `self` row asserts
+    * anything about its children and files; files under a dir neither
+    * staged nor recorded are dropped. */
+  private[graft] def mergeScrape(state: StateStore, staged: DataFrame, now: Timestamp,
+                                 cfg: Config, pin: RoundPins): Merged = {
+    val ts = lit(now)
+    // the versions every plan below reads; each is swap-written once, in
+    // the order at the end, so a plan over one runs before its swap
+    val directory = state.read("directory")
+    val kind = col("kind")
+
+    // M2: upsert listed subdirs and the scraped dirs themselves (a scraped
+    // dir's own metadata arrives as its `self` record — S3)
+    val upsertedDirs = MergeOps.upsertDirs(directory, staged.filter(kind.isin("dir", "self"))
+      .select(col("fullPath").as("dir_path"), col("ctime"), col("mtime")), now)
+
+    // each staged dir path once: listed by a scraped parent, scraped
+    // itself, and/or the home of staged files, with the id the M2 upsert
+    // gives it; the semi-join keeps the `directory` side of the id lookup
+    // O(batch)
+    val dirFlags = staged.filter(kind.isin("file", "dir", "self"))
+      .groupBy(when(kind === "file", col("dirPath")).otherwise(col("fullPath")).as("dir_path"))
+      .agg(max(kind === "dir").as("listed"), max(kind === "self").as("scraped"),
+        max(kind === "file").as("has_files"))
     val stagedDirs = pin(dirFlags
       .join(directory.join(dirFlags.select("dir_path"), Seq("dir_path"), "left_semi")
         .select("dir_path", "id"), Seq("dir_path"), "left")
-      .select(col("dir_path"), coalesce(col("id"), MergeOps.newDirId(col("dir_path"))).as("dir_id"),
-        col("listed"), col("scraped")))
+      .select(col("dir_path"),
+        coalesce(col("id"), when(col("listed") || col("scraped"), MergeOps.newDirId(col("dir_path"))))
+          .as("dir_id"),
+        col("listed"), col("scraped"), col("has_files"))
+      .filter(col("dir_id").isNotNull))
 
-    // J11: subdirs recorded under a crawled parent but absent from its
+    // J11: subdirs recorded under a scraped parent but absent from its
     // scrape vanished on disk — delete their whole closure (the path-prefix
     // join of MergeOps.directoryClosure) with archiving. The roots stay a
     // DataFrame end-to-end (no driver collect). Every path the upsert adds
     // is a staged one, which the anti-join drops, so `directory` yields the
     // same roots as the upserted table.
-    val doomedDirs: Option[DataFrame] = if (!cfg.deleteMissing) None else {
-      val roots = pin(directory
-        .withColumn("parent_path",
-          graft.functions.PathExpressions.basepathFast(col("dir_path")))
-        // key on dirs that actually SCRAPED (self record), not merely due:
-        // a parent whose scrape failed (missing/unmounted) asserts nothing
-        // about its children — deleting them would turn a transient mount
-        // failure into data loss
-        .join(stagedDirs.filter(col("scraped")).select(col("dir_path").as("parent_path")),
-          Seq("parent_path"), "left_semi")
-        // a drive root self-parents (basepath of a top-level path is
-        // itself) — roots are never deleted here, only flagged missing
-        .filter(col("parent_path") =!= col("dir_path"))
-        // alive: its parent's scrape lists it, or it scraped itself
-        .join(stagedDirs.select("dir_path"), Seq("dir_path"), "left_anti")
-        .select(col("dir_path").as("root_path")))
+    val roots = pin(directory
+      .withColumn("parent_path",
+        graft.functions.PathExpressions.basepathFast(col("dir_path")))
+      // key on dirs that actually SCRAPED (self record), not merely due:
+      // a parent whose scrape failed (missing/unmounted) asserts nothing
+      // about its children — deleting them would turn a transient mount
+      // failure into data loss
+      .join(stagedDirs.filter(col("scraped")).select(col("dir_path").as("parent_path")),
+        Seq("parent_path"), "left_semi")
+      // a drive root self-parents (basepath of a top-level path is
+      // itself) — roots are never deleted here, only flagged missing
+      .filter(col("parent_path") =!= col("dir_path"))
+      // alive: its parent's scrape lists it, or it scraped itself
+      .join(stagedDirs.filter(col("listed") || col("scraped")).select("dir_path"),
+        Seq("dir_path"), "left_anti")
+      .select(col("dir_path").as("root_path")))
+    val doomedDirs =
       if (roots.isEmpty) None
       else Some(pin(MergeOps.dirArchiveRows(
         MergeOps.directoryClosure(upsertedDirs, roots, deleteSubdirs = true), now)))
-    }
-    def withoutDoomed(df: DataFrame): DataFrame = doomedDirs.fold(df)(d =>
-      df.join(d.select("dir_path"), Seq("dir_path"), "left_anti"))
-
-    val liveDirs = withoutDoomed(stagedDirs)
-    val stagedFiles = pin(files0.join(liveDirs.select("dir_path", "dir_id"), Seq("dir_path"))
-      .drop("dir_path"))
+    val liveDirs = withoutDoomed(doomedDirs, stagedDirs)
     // completeness is asserted only by dirs that actually scraped — a due
     // dir whose scrape failed must not have its files declared vanished
     val crawledDirIds = liveDirs.filter(col("scraped")).select("dir_id")
 
     // In bucketed mode the merge only ever reads/writes the buckets of the
-    // crawled and deleted dirs (staged, vanished and doomed rows live there)
-    val bucketed = if (cfg.fileBuckets > 0)
-      Some(new BucketedState(spark, state.root, "file", cfg.fileBuckets)) else None
+    // scraped, file-holding and deleted dirs (staged, vanished and doomed
+    // rows live there)
+    val bucketed = bucketedFiles(state, cfg)
     val affectedBuckets: Seq[Int] = bucketed.map { bs =>
-      doomedDirs.fold(crawledDirIds)(d => crawledDirIds.unionByName(d.select(col("id").as("dir_id"))))
+      val touched = liveDirs.filter(col("scraped") || col("has_files")).select("dir_id")
+      doomedDirs.fold(touched)(d => touched.unionByName(d.select(col("id").as("dir_id"))))
         .select(bs.bucketOf(col("dir_id")).as("b")).distinct()
         .collect().map(_.getInt(0)).toSeq
     }.getOrElse(Nil)
-    def readFiles(): DataFrame = bucketed
+    val fileTable = bucketed
       .map(_.readBuckets(Schemas.file, affectedBuckets))
       .getOrElse(state.read("file"))
-    val fileTable = readFiles()
 
-    // M1 removal branch (J10): files under crawled dirs absent from the
+    // each staged file with its id (the current one, or the one the M1
+    // upsert inserts it with) and whether J12 queues it for hashing: it is
+    // new, changed (the M1 rule against the pre-merge row) or not hashed
+    // yet. Not `updated_on = now`: a replay at a pinned asOf must not
+    // re-queue a file an earlier batch changed. The pin keeps the size
+    // estimate of the joins it came from; the hint keeps its joins broadcast
+    val stagedFiles = broadcast(pin(staged.filter(kind === "file")
+      .select(col("name"), col("dirPath").as("dir_path"),
+        col("sizeMb").cast(DecimalType(18, 6)).as("s_size"),
+        col("ctime").as("s_ctime"), col("mtime").as("s_mtime"), col("atime").as("s_atime"))
+      .join(liveDirs.select("dir_path", "dir_id"), Seq("dir_path"))
+      .join(fileTable.select("id", "dir_id", "name", "size", "ctime", "mtime", "atime"),
+        Seq("dir_id", "name"), "left")
+      .join(state.read("hash").select(col("file_id").as("id"), lit(true).as("hashed")),
+        Seq("id"), "left")
+      .select(coalesce(col("id"), MergeOps.newFileId(col("name"), col("dir_id"))).as("id"),
+        col("name"), col("dir_id"), col("s_size").as("size"), col("s_ctime").as("ctime"),
+        col("s_mtime").as("mtime"), col("s_atime").as("atime"),
+        (col("id").isNull || MergeOps.fileChanged || col("hashed").isNull).as("to_hash"))))
+
+    // M1 removal branch (J10): files under scraped dirs absent from the
     // snapshot, plus the files of the deleted dirs — archived, and dropped
     // from file, hash and hash_control (M6 shape)
-    val vanished = if (cfg.deleteMissing)
-      MergeOps.missingFilesIn(fileTable, stagedFiles, crawledDirIds)
-    else fileTable.limit(0)
+    val vanished = MergeOps.missingFilesIn(fileTable, stagedFiles, crawledDirIds)
     val gone = pin(doomedDirs.foldLeft(
         MergeOps.fileArchiveRows(vanished, now).withColumn("kind", lit("vanished"))) { (v, d) =>
       v.unionByName(MergeOps.fileArchiveRows(
@@ -215,16 +289,15 @@ object CrawlPipeline {
     })
     val goneIds = gone.select(col("id").as("file_id"))
 
-    // every count the round needs, in one pass over the scrape and the pins
-    val perKind = Seq("due", "dir", "missing_dir", "staged_file", "vanished", "doomed_file")
-      .map(k => count(when(col("kind") === k, true)))
-    val counts = stagedAll.select("kind")
-      .unionByName(due.select(lit("due").as("kind")))
+    // every count the merge needs, in one pass over the scrape and the pins
+    val perKind = Seq("self", "dir", "missing_dir", "staged_file", "vanished", "doomed_file")
+      .map(k => count(when(kind === k, true)))
+    val counts = staged.select("kind")
       .unionByName(stagedFiles.select(lit("staged_file").as("kind")))
       .unionByName(gone.select("kind"))
       .agg(perKind.head, perKind.tail: _*)
       .head()
-    val Seq(nDue, nDirs, nMissing, nStaged, nVanished, nDoomedFiles) =
+    val Seq(nSelf, nDirs, nMissing, nStaged, nVanished, nDoomedFiles) =
       perKind.indices.map(counts.getLong)
     val anyGone = nVanished + nDoomedFiles > 0
 
@@ -245,16 +318,11 @@ object CrawlPipeline {
       case None => state.write("file", newFile)
     }
 
-    // M1 hash-scheduling branch: staged files that changed this round
-    // (DirectoryCrawl.py:856-873 re-queues on mtime change — our
-    // change-only upsert stamped those updated_on=now) OR are not hashed
-    // yet (J12), unless already queued; the queue minus removed files
-    val hash = state.read("hash")
+    // M1 hash-scheduling branch (J12, DirectoryCrawl.py:856-873): the
+    // flagged staged files, unless already queued; the queue minus removed
+    // files
     val hashCtl = state.read("hash_control")
-    val needHash = readFiles()
-      .join(stagedFiles.select("dir_id", "name"), Seq("dir_id", "name"), "left_semi")
-      .filter(col("updated_on") === ts ||
-        !hash.filter(col("file_id") === col("id").outer()).exists())
+    val needHash = stagedFiles.filter(col("to_hash"))
       .select(col("id").as("file_id"), col("mtime"),
         col("size").as("file_size"),
         lit(null).cast("timestamp").as("process_assigned_on"),
@@ -263,39 +331,8 @@ object CrawlPipeline {
     val keptQueue = if (anyGone) hashCtl.join(goneIds, Seq("file_id"), "left_anti") else hashCtl
     state.write("hash_control", keptQueue.unionByName(needHash))
 
-    state.write("directory", withoutDoomed(upsertedDirs))
-    val dirIds = state.read("directory").select(col("id").as("dir_id"), col("dir_path"))
-
-    // M3 + M7: reschedule crawled dirs. M3 core is the shared operator
-    // (oracle-gated as m3_mark_crawled); the pipeline's claim-free batch
-    // model clears every claim and un-flags missing dirs each round (the
-    // retry path — see the markDirsCrawled doc), then re-resolves dir ids
-    // for dirs first seen this round.
-    val ctlKept = withoutDoomed(ctl)
-    val crawledUpdate = ScheduleOps.markDirsCrawled(
-        ctlKept, crawledInfo, missing0, ts,
-        cfg.missingRetrySeconds, clearAllClaims = true, preserveMissing = false)
-      .join(dirIds.select(col("dir_path"), col("dir_id").as("resolved_id")),
-        Seq("dir_path"), "left")
-      .withColumn("dir_id", coalesce(col("resolved_id"), col("dir_id")))
-      .drop("resolved_id")
-
-    // schedule newly discovered subdirs (M2 insert branch — never reschedule
-    // existing entries: DirectoryCrawl.py:933-945)
-    val newCtl = liveDirs.filter(col("listed"))
-      .join(ctlKept.select("dir_path"), Seq("dir_path"), "left_anti")
-      .select(col("dir_path"), col("dir_id"),
-        lit(0).as("file_count"), lit(0).as("subdir_count"),
-        ts.as("next_crawl"), lit(86400L).as("crawl_frequency"),
-        lit(null).cast("int").as("assigned_process_id"),
-        lit(null).cast("timestamp").as("process_assigned_on"),
-        lit(null).cast("timestamp").as("last_crawled"),
-        lit(null).cast("timestamp").as("last_active"),
-        lit(false).as("dir_missing"), ts.as("inserted_on"))
-
-    state.write("directory_control", crawledUpdate.unionByName(newCtl))
-
-    RoundStats(nDue, nStaged, nDirs, nMissing, nVanished)
+    state.write("directory", withoutDoomed(doomedDirs, upsertedDirs))
+    Merged(doomedDirs, liveDirs, nSelf, nDirs, nMissing, nStaged, nVanished)
   }
 
   /** Run crawl rounds until the frontier drains (or maxRounds). Returns
@@ -357,21 +394,22 @@ object CrawlPipeline {
     * hash selector joins against. */
   private def fullPaths(state: StateStore, cfg: Config = Config()): DataFrame = {
     val d = state.read("directory").select(col("id").as("d_id"), col("dir_path"))
-    val file = if (cfg.fileBuckets > 0)
-      new BucketedState(state.spark, state.root, "file", cfg.fileBuckets)
-        .read(Schemas.file)
-    else state.read("file")
-    file
+    bucketedFiles(state, cfg).fold(state.read("file"))(_.read(Schemas.file))
       .join(d, col("dir_id") === col("d_id"))
       .select(col("id"),
         graft.functions.PathFunctions.pathJoin(col("dir_path"), col("name")).as("full_path"))
   }
 
+  /** The `file` table's bucketed layout, when `cfg.fileBuckets > 0`. */
+  private def bucketedFiles(state: StateStore, cfg: Config): Option[BucketedState] =
+    if (cfg.fileBuckets > 0)
+      Some(new BucketedState(state.spark, state.root, "file", cfg.fileBuckets)) else None
+
   /** The pins one crawl or hash round creates (`localCheckpoint`, O(batch)
     * relations only), released together once the round's last write is
     * done — a long-lived server loop must not wait for GC and the
     * ContextCleaner to free them. */
-  private final class RoundPins {
+  private[graft] final class RoundPins {
     private val rdds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
 
     def apply(df: DataFrame): DataFrame = {

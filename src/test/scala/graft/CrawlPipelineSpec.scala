@@ -253,6 +253,40 @@ class CrawlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(st.read("directory").count() === 2)
   }
 
+  test("a root flagged missing is retried once due, and a remount restores it untouched") {
+    val root = Files.createTempDirectory("graft_rstate")
+    val fx = Files.createTempDirectory("graft_rfixture")
+    val sub = Files.createDirectories(fx.resolve("sub"))
+    Files.write(fx.resolve("a.bin"), "aa".getBytes)
+    Files.write(sub.resolve("b.bin"), "bb".getBytes)
+    val st = new StateStore(spark, root.toString)
+    CrawlPipeline.seedDrives(st, Seq(fx.toString), t1)
+    CrawlPipeline.runToFixpoint(st, t1)
+    val files = st.read("file").collect().toSet
+    val dirs = st.read("directory").select("id", "dir_path").collect().toSet
+    assert(files.size === 2 && dirs.size === 2)
+
+    // unmount: every due dir's scrape fails and is flagged missing, with a
+    // retry scheduled missingRetrySeconds (24 h) later
+    val parked = fx.resolveSibling("parked_" + fx.getFileName)
+    Files.move(fx, parked)
+    assert(CrawlPipeline.runToFixpoint(st, t2).map(_.missingDirs).sum === 2)
+    assert(st.read("directory_control").filter(!col("dir_missing")).count() === 0)
+
+    // remount; the schedule alone brings the root back, with no edit of
+    // directory_control
+    Files.move(parked, fx)
+    val t3 = Timestamp.valueOf("2024-01-03 01:00:00")
+    val rounds = CrawlPipeline.runToFixpoint(st, t3)
+    assert(rounds.nonEmpty, "no round ran after the retry came due")
+    val ctl = st.read("directory_control")
+    val rootCtl = ctl.filter(col("dir_path") === fx.toString).head()
+    assert(rootCtl.getAs[Timestamp]("last_crawled") === t3)
+    assert(ctl.filter(col("dir_missing")).count() === 0)
+    assert(st.read("file").collect().toSet === files)
+    assert(st.read("directory").select("id", "dir_path").collect().toSet === dirs)
+  }
+
   /** A fresh state over a fresh copy of the spec's fixture tree, crawled
     * to fixpoint and hashed at `t1`. */
   private def crawledCopy(): (StateStore, Path) = {
@@ -310,26 +344,46 @@ class CrawlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(fx.resolve("sub").resolve("c.bin"), "changed-content!".getBytes)
     Files.write(fx.resolve("e.bin"), "fresh".getBytes)
     Files.delete(fx.resolve("b.bin"))
-    // the round's jobs carry a thread-local tag (Spark SQL hands local
-    // properties on to the threads that run broadcasts and AQE stages), so
-    // no job of another thread is counted
-    val sc = spark.sparkContext
-    val tag = "graft.spec.round"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) == "1")) jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "1")
-    val stats = try CrawlPipeline.crawlRound(st, t2)
-      finally {
-        sc.setLocalProperty(tag, null)
-        org.apache.spark.graftbridge.ListenerBus.drain(sc)
-        sc.removeSparkListener(listener)
-      }
+    val (stats, jobs) = SparkJobCount(spark.sparkContext)(CrawlPipeline.crawlRound(st, t2))
     assert(stats.dueDirs === 3 && stats.removedFiles === 1)
-    assert(jobs.get() <= 44, s"${jobs.get()} Spark jobs in one crawl round")
+    assert(jobs <= 44, s"$jobs Spark jobs in one crawl round")
+  }
+
+  test("a staged file with no digest is queued for hashing though unchanged") {
+    // crawled, not hashed: the re-crawl below sees every file unchanged
+    val st = new StateStore(spark, Files.createTempDirectory("graft_jstate").toString)
+    val fx = Files.createTempDirectory("graft_jfixture")
+    Files.write(fx.resolve("a.bin"), "aa".getBytes)
+    Files.write(fx.resolve("b.bin"), "bb".getBytes)
+    CrawlPipeline.seedDrives(st, Seq(fx.toString), t1)
+    CrawlPipeline.runToFixpoint(st, t1)
+    // a.bin has a digest (hash rows carry id = file_id, as hashRound writes
+    // them); the queue was lost
+    val ids = st.read("file").select("name", "id").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val s = spark
+    import s.implicits._
+    st.write("hash", Seq((ids("a.bin"), ids("a.bin"), "m", t1, "s", t1))
+      .toDF("id", "file_id", "md5_hash", "md5_hash_time", "sha1_hash", "sha1_hash_time"))
+    st.write("hash_control", st.read("hash_control").limit(0))
+
+    CrawlPipeline.runToFixpoint(st, t2)
+    assert(st.read("hash_control").select("file_id").collect().map(_.getLong(0)).toSet ===
+      Set(ids("b.bin")))
+  }
+
+  test("a crawl round writes each state table at most once, directory_control last") {
+    val (st, fx) = crawledCopy()
+    Files.write(fx.resolve("sub").resolve("c.bin"), "changed-content!".getBytes)
+    Files.write(fx.resolve("e.bin"), "fresh".getBytes)
+    Files.delete(fx.resolve("b.bin"))
+    val logged = new WriteLogStateStore(spark, st.root)
+    val stats = CrawlPipeline.crawlRound(logged, t2)
+    assert(stats.dueDirs === 3 && stats.removedFiles === 1)
+    assert(logged.repeated.isEmpty, s"tables written more than once: ${logged.repeated}")
+    assert(logged.writes.toSet === Set("file_archive", "hash", "file", "hash_control",
+      "directory", "directory_control"))
+    assert(logged.writes.last === "directory_control")
   }
 
   test("server rounds print as one JSON line") {
