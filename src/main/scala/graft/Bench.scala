@@ -171,21 +171,21 @@ object Bench {
         }
         spark.sparkContext.setJobDescription(name)
         val runs = (1 to rounds).map { _ =>
-          val t0 = System.nanoTime()
-          val outRows = try checksum(fn(spark, sfDir))
-            catch { case _: Throwable => -1L } // -1 = errored, not empty
-          val dt = (System.nanoTime() - t0) / 1e9
-          // release the round's transient iteration checkpoints NOW —
-          // outside the timed window, deterministically. Without this the
-          // sweep accumulates every query's dead round-state blocks until
-          // GC notices, storage squeezes execution, and LATER queries pay
-          // (measured: x45 4.12 s mid-sweep vs 0.35 s isolated; the
-          // mid-sweep calib detached 2.3x from warm). The drain releases
-          // only per-invocation pins (TransientPins contract) — the
-          // session-scoped Memo values (pins, catalog), whose reuse IS the
-          // measured semantics, are untouched.
-          graft.core.TransientPins.drain(spark)
-          (dt, outRows)
+          // one PinScope per timed run: closing it releases the run's
+          // iteration checkpoints NOW — outside the timed window,
+          // deterministically. Without this the sweep accumulates every
+          // query's dead round-state blocks until GC notices, storage
+          // squeezes execution, and LATER queries pay (measured: x45
+          // 4.12 s mid-sweep vs 0.35 s isolated; the mid-sweep calib
+          // detached 2.3x from warm). The scope owns only per-invocation
+          // pins — the session-scoped Memo values (pins, catalog), whose
+          // reuse IS the measured semantics, are untouched.
+          graft.core.PinScope { _ =>
+            val t0 = System.nanoTime()
+            val outRows = try checksum(fn(spark, sfDir))
+              catch { case _: Throwable => -1L } // -1 = errored, not empty
+            ((System.nanoTime() - t0) / 1e9, outRows)
+          }
         }
         spark.sparkContext.setJobDescription(null)
         // prefer successful runs: a fast-failing round must not shadow a

@@ -68,9 +68,11 @@ object Verify {
     beat("oracle", "static", "written")
     // fixtures (index builds, model trainings) BEFORE the sweep, each
     // heartbeaten — a timeout here is attributable to its named step
-    SparkEntry.prepareFixtures(spark, sfDir,
-      (name, status) => beat("setup", name, status))
-    graft.core.TransientPins.drain(spark) // fixture-build round state
+    // the fixture builds' round state is freed when their scope closes
+    graft.core.PinScope { _ =>
+      SparkEntry.prepareFixtures(spark, sfDir,
+        (name, status) => beat("setup", name, status))
+    }
     beat("setup", "fixtures", "done")
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump for fast iteration; the
     // full oracle_sql.json is still written (check.py runs everything
@@ -86,13 +88,15 @@ object Verify {
           def run(): Unit = {
             beat("query", name, "start")
             try {
-              fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-                .parquet(s"$outDir/$name")
-              // release this dump's transient iteration checkpoints —
-              // without it the 268-dump sweep accumulates dead round
-              // state until GC, squeezing execution memory for every
-              // later dump (same measured effect as the bench sweep)
-              graft.core.TransientPins.drain(spark)
+              // one scope per dump, on this pool thread: closing it
+              // releases the dump's iteration checkpoints — without it
+              // the 268-dump sweep accumulates dead round state until
+              // GC, squeezing execution memory for every later dump
+              // (same measured effect as the bench sweep)
+              graft.core.PinScope { _ =>
+                fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+                  .parquet(s"$outDir/$name")
+              }
               beat("query", name, "ok")
             } catch { case e: Throwable =>
               beat("query", name, s"failed: ${e.getMessage}")

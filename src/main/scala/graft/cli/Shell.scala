@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.StateStore
+import graft.core.{PinScope, StateStore}
 import graft.functions.PathFunctions
 import graft.operators.{MergeOps, ScheduleOps, SearchOps, Views}
 import graft.sources.HashSource
@@ -16,7 +16,9 @@ import graft.sources.HashSource
   * The shell is a thin dispatch layer — every command resolves to the same
   * library operators the programmatic API exposes; wildcards go through
   * the reference's translation (F5) and relative paths through the cd
-  * context exactly like `CLI/__init__.py:170-192`.
+  * context exactly like `CLI/__init__.py:170-192`. Each command runs in
+  * its own [[PinScope]], so the pins it makes (the doomed sets of the
+  * deletes, the duplicate searches' needles) are freed when it finishes.
   */
 class Shell(state: StateStore, out: String => Unit = println) {
 
@@ -40,11 +42,17 @@ class Shell(state: StateStore, out: String => Unit = println) {
   def execute(line: String): Boolean = {
     val parts = tokenize(line.trim)
     if (parts.isEmpty) return true
-    (parts.head.toLowerCase, parts.tail) match {
-      case ("exit" | "quit", _) => return false
+    val cmd = parts.head.toLowerCase
+    if (cmd == "exit" || cmd == "quit") return false
+    PinScope(_ => dispatch(cmd, parts.tail))
+    true
+  }
+
+  private def dispatch(cmd: String, args: Seq[String]): Unit =
+    (cmd, args) match {
       case ("pwd", _) => out(cwd)
       case ("cd", Seq(p, _*)) => cwd = resolve(p)
-      case ("search", args) => search(args)
+      case ("search", _) => search(args)
       case ("scrape", Seq(p, _*)) => rescrape(resolve(p))
       case ("hash_file", Seq(p, rest @ _*)) =>
         hashFile(resolve(p), insertDb = rest.headOption.exists(_.equalsIgnoreCase("insert")))
@@ -56,10 +64,8 @@ class Shell(state: StateStore, out: String => Unit = println) {
       case ("delete_dir", Seq(p, rest @ _*)) =>
         deleteDir(resolve(p), rest.headOption.exists(_.equalsIgnoreCase("subdirs")))
       case ("help", _) => out(helpText)
-      case (cmd, _) => out(s"unknown command: $cmd (try 'help')")
+      case _ => out(s"unknown command: $cmd (try 'help')")
     }
-    true
-  }
 
   private def search(args: Seq[String]): Unit = args match {
     case Seq("name", pattern, _*) =>
@@ -160,7 +166,7 @@ class Shell(state: StateStore, out: String => Unit = println) {
       state.read("hash_control"), Seq(path),
       new java.sql.Timestamp(System.currentTimeMillis()))
     // pin the doomed set before any table swap invalidates its inputs
-    val pinnedArchive = archive.localCheckpoint(true)
+    val pinnedArchive = PinScope.pin(archive)
     if (pinnedArchive.isEmpty) out("N (no matching file)")
     else {
       val ids = pinnedArchive.select(col("id").as("file_id"))
@@ -180,8 +186,8 @@ class Shell(state: StateStore, out: String => Unit = println) {
     val (_, _, dirArchive, fileArchive) = MergeOps.deleteDirectories(
       state.read("directory"), state.read("file"), Seq(path), subdirs,
       new java.sql.Timestamp(System.currentTimeMillis()))
-    val pinnedDirs = dirArchive.localCheckpoint(true)
-    val pinnedFiles = fileArchive.localCheckpoint(true)
+    val pinnedDirs = PinScope.pin(dirArchive)
+    val pinnedFiles = PinScope.pin(fileArchive)
     if (pinnedDirs.isEmpty) out("N (no matching dir)")
     else {
       val dirIds = pinnedDirs.select(col("id").as("dd_id"))

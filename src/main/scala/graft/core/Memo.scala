@@ -31,6 +31,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * the first insert wins and both get its value — a lost race costs one
   * redundant, GC-reclaimed build, never a wrong answer.
   *
+  * What does NOT go through here: per-invocation pins — a crawl round's
+  * or micro-batch's staged relations, an iterative operator's round
+  * state, a duplicate search's needle. Nothing reuses them after their
+  * invocation, so they belong to the caller's [[PinScope]], which frees
+  * them when the invocation ends; a memo entry would hold them for the
+  * life of the session.
+  *
   * At 100 TB a pin would be a reliable checkpoint / temp table instead
   * of executor-memory localCheckpoint (same caveat as
   * DedupOps.IterState); the memo contract is unchanged. */

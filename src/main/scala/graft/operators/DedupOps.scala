@@ -40,13 +40,11 @@ object DedupOps {
     */
   sealed trait IterState { def pin(df: DataFrame): DataFrame }
   case object Local extends IterState {
-    // registered as a TRANSIENT pin: round state is only consumed by the
-    // invocation that created it, so a sweep driver (Bench/Verify) can
-    // release its blocks deterministically between timed actions instead
-    // of waiting for GC + ContextCleaner (see TransientPins scaladoc for
-    // the measured in-sweep degradation this fixes)
-    def pin(df: DataFrame): DataFrame =
-      graft.core.TransientPins.track(df.localCheckpoint(true))
+    // round state is only consumed by the invocation that created it, so
+    // it belongs to the caller's PinScope, which frees it when the
+    // invocation ends instead of waiting for GC + ContextCleaner (see the
+    // PinScope scaladoc for the measured in-sweep degradation this fixes)
+    def pin(df: DataFrame): DataFrame = graft.core.PinScope.pin(df)
   }
   case object Reliable extends IterState {
     def pin(df: DataFrame): DataFrame = df.checkpoint(true)

@@ -1053,10 +1053,10 @@ object IvfOps {
     // put a FRESH LogicalRDD leaf under the pairs plan, so every
     // componentLabels memoPin below missed the session memo and each
     // invocation permanently accumulated a new set of Borůvka-round
-    // pins that TransientPins.drain never releases (they are Memo.pinned
-    // entries) — the same in-sweep storage squeeze round 18 fixed,
-    // reintroduced one query at a time. Memo-keyed on the canonicalized
-    // semDedup plan (emb scan + model literals — stable per session),
+    // pins that no PinScope releases (they are Memo.pinned entries, which
+    // live as long as the session) — the same in-sweep storage squeeze
+    // round 18 fixed, reintroduced one query at a time. Memo-keyed on the
+    // canonicalized semDedup plan (emb scan + model literals — stable per session),
     // the kernel is pinned once and every later invocation reuses it.
     val drops = DedupOps.memoPin(state)(semDedup(emb, model, tau))
     val pairs = drops.select(col("anchor_id").as("doc_a"),

@@ -710,15 +710,15 @@ object NearDupIndex {
       val committed = committedEpochs(root)
       if (hasEpoch(root, epochName)) false
       else {
-        // sign ONCE and checkpoint (plain localCheckpoint, not the
-        // session pin cache — a stream signs a different batch every
-        // micro-batch, and these must be GC-reclaimable): the three
-        // epoch-table writes and the verdict derivation all reuse it
-        // instead of re-running md5+minhash per consumer
+        // sign ONCE and pin into the caller's scope (not the session pin
+        // cache — a stream signs a different batch every micro-batch, and
+        // its micro-batch scope frees these): the three epoch-table writes
+        // and the verdict derivation all reuse them instead of re-running
+        // md5+minhash per consumer
         val (inCl0, inSigs0, inBands0) = signCorpus(incoming, text)
-        val inCl = graft.core.TransientPins.track(inCl0.localCheckpoint(true))
-        val inSigs = graft.core.TransientPins.track(inSigs0.localCheckpoint(true))
-        val inBands = graft.core.TransientPins.track(inBands0.localCheckpoint(true))
+        val inCl = graft.core.PinScope.pin(inCl0)
+        val inSigs = graft.core.PinScope.pin(inSigs0)
+        val inBands = graft.core.PinScope.pin(inBands0)
         val idx = load(incoming.sparkSession, root)
         val best = bestEstimates(inSigs, inBands, idx)
         val exact = idx.cliques.select(col("fp")).distinct()

@@ -158,12 +158,11 @@ object SearchOps {
     // the needle is tiny by contract (one path / one directory's rows);
     // the hint keeps every branch a broadcast even when the pin's size
     // estimate is the pinned view's (an uncached haystack)
-    val n = broadcast(graft.core.TransientPins.track( // per-invocation needle pin
+    val n = broadcast(graft.core.PinScope.pin( // per-invocation needle pin
       needle.select(
         col("type").as("n_type"), col("full_path").as("n_path"),
         col("file_id").as("n_file_id"), col("name").as("n_name"),
-        col("size").as("n_size"), col("md5_hash").as("n_md5"), col("sha1_hash").as("n_sha1"))
-        .localCheckpoint(true)))
+        col("size").as("n_size"), col("md5_hash").as("n_md5"), col("sha1_hash").as("n_sha1"))))
 
     def sameContent(digest: String, nDigest: String): Column =
       col(nDigest) === col(digest).outer() && col("n_size") === col("size").outer()

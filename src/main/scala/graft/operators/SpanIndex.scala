@@ -116,15 +116,16 @@ object SpanIndex {
     * hash is already INDEXED (index precedence) or first held by an
     * EARLIER batch document. Σ tokens_retained is what this batch adds
     * to the post-dedup corpus. */
-  /** `pin = false` skips the session window cache — required for
-    * per-micro-batch callers, same contract as
-    * [[NearDupIndex.admit]]'s flag. */
+  /** `pin = false` skips the session window cache and pins the windows
+    * into the caller's [[graft.core.PinScope]] — required for
+    * per-micro-batch callers, same contract as [[NearDupIndex.admit]]'s
+    * flag. */
   def admitBill(incoming: DataFrame, root: String, w: Int = defaultW,
                 text: Column = col("text"), pin: Boolean = true): DataFrame = {
     val wins0 = SubstringOps.windows(incoming, w, text)
     val wins =
       if (pin) graft.core.Memo.pinned(wins0)
-      else graft.core.TransientPins.track(wins0.localCheckpoint(true))
+      else graft.core.PinScope.pin(wins0)
     val batchFirst = wins.groupBy("whash")
       .agg(min(col("doc_id")).as("bfirst"))
     val matched = matchedHashes(incoming.sparkSession, root, wins)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.{BucketedState, Schemas, StateStore}
+import graft.core.{BucketedState, PinScope, Schemas, StateStore}
 import graft.operators.{MergeOps, ScheduleOps}
 import graft.sources.{FsScrape, HashSource}
 
@@ -32,13 +32,16 @@ import graft.sources.{FsScrape, HashSource}
   * (`DirectoryCrawl.py:797-1045`), it evaluates each staged relation once
   * and writes each state table once:
   *   - pin once: every relation read more than once is pinned
-  *     (`localCheckpoint`) — and only O(batch) ones: the staged batch (the
+  *     (`localCheckpoint`) into the round's or micro-batch's [[PinScope]],
+  *     opened by `crawlRound`, `hashRound` or `mergeBatch` and passed to
+  *     the core — and only O(batch) ones: the staged batch (the
   *     stream's; the crawl's is `.stage_scrape`), the frontier and the
   *     per-dir M3/M7 inputs (crawl only), the staged dirs with their ids,
   *     the removed roots and their closure, the staged files, the removed
   *     files. Nothing O(table) (`file`, `hash`, `hash_control`, `directory`,
   *     the upserts over them) is ever pinned; those are read where they are
-  *     written. A round's or micro-batch's pins are released when it returns.
+  *     written. The pins are released when the scope closes, as the round
+  *     or micro-batch returns.
   *   - write once, in this order: the archives, `hash`, `file`,
   *     `hash_control`, `directory` (the core), then `directory_control`
   *     (the caller) last — the schedule is the round's commit, so a round
@@ -83,13 +86,11 @@ object CrawlPipeline {
 
   /** One crawl round. Returns stats; `dueDirs == 0` means fixpoint. */
   def crawlRound(state: StateStore, now: Timestamp,
-                 cfg: Config = Config()): RoundStats = {
-    val pins = new RoundPins
-    try crawlWith(state, now, cfg, pins) finally pins.release()
-  }
+                 cfg: Config = Config()): RoundStats =
+    PinScope(crawlWith(state, now, cfg, _))
 
   private def crawlWith(state: StateStore, now: Timestamp, cfg: Config,
-                        pin: RoundPins): RoundStats = {
+                        pin: PinScope): RoundStats = {
     val spark = state.spark
     val ts = lit(now)
     val ctl = state.read("directory_control")
@@ -183,7 +184,7 @@ object CrawlPipeline {
     * anything about its children and files; files under a dir neither
     * staged nor recorded are dropped. */
   private[graft] def mergeScrape(state: StateStore, staged: DataFrame, now: Timestamp,
-                                 cfg: Config, pin: RoundPins): Merged = {
+                                 cfg: Config, pin: PinScope): Merged = {
     val ts = lit(now)
     // the versions every plan below reads; each is swap-written once, in
     // the order at the end, so a plan over one runs before its swap
@@ -355,13 +356,11 @@ object CrawlPipeline {
   /** One hash round (§3.3): T2 smallest-first selection → S4 streamed
     * dual-hash → M4 merge into `hash` + drain `hash_control`. */
   def hashRound(state: StateStore, now: Timestamp, limit: Int = 10000,
-                cfg: Config = Config()): Long = {
-    val pins = new RoundPins
-    try hashWith(state, now, limit, cfg, pins) finally pins.release()
-  }
+                cfg: Config = Config()): Long =
+    PinScope(hashWith(state, now, limit, cfg, _))
 
   private def hashWith(state: StateStore, now: Timestamp, limit: Int,
-                       cfg: Config, pin: RoundPins): Long = {
+                       cfg: Config, pin: PinScope): Long = {
     val spark = state.spark
     val work = pin(ScheduleOps.filesToHash(
       state.read("hash_control"),
@@ -404,22 +403,4 @@ object CrawlPipeline {
   private def bucketedFiles(state: StateStore, cfg: Config): Option[BucketedState] =
     if (cfg.fileBuckets > 0)
       Some(new BucketedState(state.spark, state.root, "file", cfg.fileBuckets)) else None
-
-  /** The pins one crawl or hash round creates (`localCheckpoint`, O(batch)
-    * relations only), released together once the round's last write is
-    * done — a long-lived server loop must not wait for GC and the
-    * ContextCleaner to free them. */
-  private[graft] final class RoundPins {
-    private val rdds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-
-    def apply(df: DataFrame): DataFrame = {
-      val pinned = df.localCheckpoint(true)
-      rdds ++= pinned.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-      pinned
-    }
-
-    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
-  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.PinScope
 import graft.operators.{AnnAdmitIndex, NearDupIndex, ShardAdmission,
   SpanIndex}
 
@@ -50,26 +51,28 @@ object AdmissionStream {
              maintainEvery: Int = 0): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // hasEpoch, not raw manifest membership: a tail compaction may
-        // have folded b<id> into a merged epoch (covered.json) — the
-        // replay must still skip the manifest recompute
-        if (!NearDupIndex.hasEpoch(nearDupRoot, s"b$id"))
-          ShardAdmission.report(batch, nearDupRoot, spanRoot, minMatches,
-              w, pin = false) // per-batch pins would outlive the batch
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        NearDupIndex.extendEpoch(batch, nearDupRoot, s"b$id", minMatches)
-        SpanIndex.extendEpoch(batch, spanRoot, s"b$id", w)
-        if (maintainEvery > 0) {
-          // coveredFloor = the in-flight batch id: every batch below it
-          // has committed offsets and can never replay, so its folded
-          // replay-idempotency name may be forgotten — covered.json
-          // stays O(1) instead of growing with the batch history
-          if (NearDupIndex.tailSize(nearDupRoot) >= maintainEvery)
-            NearDupIndex.compactTail(batch.sparkSession, nearDupRoot,
-              coveredFloor = Some(id))
-          if (SpanIndex.tailSize(spanRoot) >= maintainEvery)
-            SpanIndex.compactTail(batch.sparkSession, spanRoot,
-              coveredFloor = Some(id))
+        PinScope { _ => // the batch's pins: freed when the batch ends
+          // hasEpoch, not raw manifest membership: a tail compaction may
+          // have folded b<id> into a merged epoch (covered.json) — the
+          // replay must still skip the manifest recompute
+          if (!NearDupIndex.hasEpoch(nearDupRoot, s"b$id"))
+            ShardAdmission.report(batch, nearDupRoot, spanRoot, minMatches,
+                w, pin = false) // session pins would outlive the batch
+              .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+          NearDupIndex.extendEpoch(batch, nearDupRoot, s"b$id", minMatches)
+          SpanIndex.extendEpoch(batch, spanRoot, s"b$id", w)
+          if (maintainEvery > 0) {
+            // coveredFloor = the in-flight batch id: every batch below it
+            // has committed offsets and can never replay, so its folded
+            // replay-idempotency name may be forgotten — covered.json
+            // stays O(1) instead of growing with the batch history
+            if (NearDupIndex.tailSize(nearDupRoot) >= maintainEvery)
+              NearDupIndex.compactTail(batch.sparkSession, nearDupRoot,
+                coveredFloor = Some(id))
+            if (SpanIndex.tailSize(spanRoot) >= maintainEvery)
+              SpanIndex.compactTail(batch.sparkSession, spanRoot,
+                coveredFloor = Some(id))
+          }
         }
         ()
       }
@@ -110,19 +113,19 @@ object AdmissionStream {
                  maintainEvery: Int = 0): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val emb = batch.filter(col("embedding").isNotNull)
-          .select(col("doc_id").as("vec_id"), col("embedding"))
-        // ONE ADC probe per micro-batch: the embed-tier verdicts are
-        // computed against the PRE-batch index, persisted, and shared
-        // by the manifest overlay AND the ANN extension — the probe is
-        // the one per-batch cost that grows with the corpus, and the
-        // unmemoized form paid it twice (the text tiers' batch signing
-        // is memoized through Memo.pinned; this is the embed analog).
-        // Evaluation is lazy: on a full replay neither consumer runs,
-        // so the probe never reads an index that already holds b<id>.
-        val verdicts = AnnAdmitIndex
-          .admit(emb, annRoot, tauMicro, nProbe, pin = false).persist()
-        try {
+        PinScope { scope => // the batch's pins: freed when the batch ends
+          val emb = batch.filter(col("embedding").isNotNull)
+            .select(col("doc_id").as("vec_id"), col("embedding"))
+          // ONE ADC probe per micro-batch: the embed-tier verdicts are
+          // computed against the PRE-batch index, persisted, and shared
+          // by the manifest overlay AND the ANN extension — the probe is
+          // the one per-batch cost that grows with the corpus, and the
+          // unmemoized form paid it twice (the text tiers' batch signing
+          // is memoized through Memo.pinned; this is the embed analog).
+          // Evaluation is lazy: on a full replay neither consumer runs,
+          // so the probe never reads an index that already holds b<id>.
+          val verdicts = scope.persist(AnnAdmitIndex
+            .admit(emb, annRoot, tauMicro, nProbe, pin = false))
           if (!NearDupIndex.hasEpoch(nearDupRoot, s"b$id"))
             ShardAdmission.reportFullWith(batch, verdicts, nearDupRoot,
                 spanRoot, minMatches, w, pin = false)
@@ -132,19 +135,19 @@ object AdmissionStream {
           AnnAdmitIndex.extendEpochAdmitted(emb, annRoot, s"b$id",
             verdicts.filter(col("verdict") === "admitted")
               .select(col("vec_id")))
-        } finally verdicts.unpersist()
-        if (maintainEvery > 0) {
-          // coveredFloor = the in-flight batch id (see [[ingest]]):
-          // O(1) replay metadata on every tier
-          if (NearDupIndex.tailSize(nearDupRoot) >= maintainEvery)
-            NearDupIndex.compactTail(batch.sparkSession, nearDupRoot,
-              coveredFloor = Some(id))
-          if (SpanIndex.tailSize(spanRoot) >= maintainEvery)
-            SpanIndex.compactTail(batch.sparkSession, spanRoot,
-              coveredFloor = Some(id))
-          if (AnnAdmitIndex.tailSize(annRoot) >= maintainEvery)
-            AnnAdmitIndex.compactTail(batch.sparkSession, annRoot,
-              coveredFloor = Some(id))
+          if (maintainEvery > 0) {
+            // coveredFloor = the in-flight batch id (see [[ingest]]):
+            // O(1) replay metadata on every tier
+            if (NearDupIndex.tailSize(nearDupRoot) >= maintainEvery)
+              NearDupIndex.compactTail(batch.sparkSession, nearDupRoot,
+                coveredFloor = Some(id))
+            if (SpanIndex.tailSize(spanRoot) >= maintainEvery)
+              SpanIndex.compactTail(batch.sparkSession, spanRoot,
+                coveredFloor = Some(id))
+            if (AnnAdmitIndex.tailSize(annRoot) >= maintainEvery)
+              AnnAdmitIndex.compactTail(batch.sparkSession, annRoot,
+                coveredFloor = Some(id))
+          }
         }
         ()
       }

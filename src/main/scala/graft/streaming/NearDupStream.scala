@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.PinScope
 import graft.operators.NearDupIndex
 
 /** Streaming admission into the persisted near-dup signature index —
@@ -45,10 +46,12 @@ object NearDupStream {
       : StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        NearDupIndex.extendEpoch(batch, root, s"b$id", minMatches)
-        if (maintainEvery > 0 &&
-            NearDupIndex.tailSize(root) >= maintainEvery)
-          NearDupIndex.compactTail(batch.sparkSession, root)
+        PinScope { _ => // frees the batch's signing pins
+          NearDupIndex.extendEpoch(batch, root, s"b$id", minMatches)
+          if (maintainEvery > 0 &&
+              NearDupIndex.tailSize(root) >= maintainEvery)
+            NearDupIndex.compactTail(batch.sparkSession, root)
+        }
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.PinScope
 import graft.operators.SpanIndex
 
 /** Streaming admission into the persisted exact-substring index — the
@@ -30,9 +31,11 @@ object SpanStream {
       : StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        SpanIndex.extendEpoch(batch, root, s"b$id", w)
-        if (maintainEvery > 0 && SpanIndex.tailSize(root) >= maintainEvery)
-          SpanIndex.compactTail(batch.sparkSession, root)
+        PinScope { _ =>
+          SpanIndex.extendEpoch(batch, root, s"b$id", w)
+          if (maintainEvery > 0 && SpanIndex.tailSize(root) >= maintainEvery)
+            SpanIndex.compactTail(batch.sparkSession, root)
+        }
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.StateStore
+import graft.core.{PinScope, StateStore}
 import graft.server.CrawlPipeline
 
 /** Structured-Streaming front end for the ingest dataflow (SURVEY §2.9).
@@ -71,18 +71,20 @@ object StreamingIngest {
   def mergeBatch(state: StateStore, batch: DataFrame, asOf: Timestamp,
                  hashInline: Boolean = false, fileBuckets: Int = 0): Unit = {
     val cfg = CrawlPipeline.Config(fileBuckets = fileBuckets)
-    val pins = new CrawlPipeline.RoundPins
-    try {
-      val staged = pins(batch.dropDuplicates("kind", "fullPath"))
-      if (staged.isEmpty) return
-      val merged = CrawlPipeline.mergeScrape(state, staged, asOf, cfg, pins)
-      if (merged.doomedDirs.nonEmpty)
-        state.write("directory_control", merged.withoutDoomed(state.read("directory_control")))
-    } finally pins.release()
+    val anyStaged = PinScope { pin =>
+      val staged = pin(batch.dropDuplicates("kind", "fullPath"))
+      val nonEmpty = !staged.isEmpty
+      if (nonEmpty) {
+        val merged = CrawlPipeline.mergeScrape(state, staged, asOf, cfg, pin)
+        if (merged.doomedDirs.nonEmpty)
+          state.write("directory_control", merged.withoutDoomed(state.read("directory_control")))
+      }
+      nonEmpty
+    }
 
     // M4: drain the queue inline when requested (the batch pipeline runs
     // this as its own round; a streaming deployment can also keep it as a
     // separate consumer — both read the same hash_control queue)
-    if (hashInline) while (CrawlPipeline.hashRound(state, asOf, cfg = cfg) > 0) ()
+    if (anyStaged && hashInline) while (CrawlPipeline.hashRound(state, asOf, cfg = cfg) > 0) ()
   }
 }

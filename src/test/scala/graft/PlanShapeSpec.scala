@@ -984,6 +984,5 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.size == 1, s"expected only the needle pin, got ${added.size}")
     assert(scansOf(plan, c.vwLl), s"the haystack must be the cached view:\n$plan")
-    graft.core.TransientPins.drain(spark)
   }
 }

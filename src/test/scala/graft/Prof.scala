@@ -35,7 +35,9 @@ object Prof {
           if (s != null) jobLog.add((j.jobId, s._2, System.nanoTime() - s._1))
         }
       })
-    def t[A](label: String)(f: => A): A = {
+    // each labeled block runs in its own PinScope: its iteration
+    // checkpoints are freed, after the timing, before the next block
+    def t[A](label: String)(f: => A): A = graft.core.PinScope { _ =>
       jobLog.clear()
       val t0 = System.nanoTime()
       val r = f
@@ -63,19 +65,14 @@ object Prof {
     section("x159") {
     t("x23 simhashClusters")(checksum(
       graft.operators.DedupOps.simhashClusters(docs, 3)))
-    graft.core.TransientPins.drain(spark)
     t("x97 dsirWeights")(checksum(
       graft.operators.CurationOps.dsirWeights(docs)))
-    graft.core.TransientPins.drain(spark)
     t("x97 dsirWeights warm")(checksum(
       graft.operators.CurationOps.dsirWeights(docs)))
-    graft.core.TransientPins.drain(spark)
     t("x159 full")(checksum(
       graft.operators.CurationOps.clusterCorrectedDsir(docs)))
-    graft.core.TransientPins.drain(spark)
     t("x159 full warm")(checksum(
       graft.operators.CurationOps.clusterCorrectedDsir(docs)))
-    graft.core.TransientPins.drain(spark)
     // dsir sub-stages
     locally {
       val toks = graft.operators.TextOps.wordsRe(col("text"))
@@ -119,16 +116,12 @@ object Prof {
       graft.operators.GraphOps.overlapPairs(ev).count())
     t("x119 pageRank full")(checksum(
       graft.operators.GraphOps.sessionPageRank(ev)))
-    graft.core.TransientPins.drain(spark)
     t("x119 pageRank again")(checksum(
       graft.operators.GraphOps.sessionPageRank(ev)))
-    graft.core.TransientPins.drain(spark)
     t("x123 triangles")(checksum(
       graft.operators.GraphOps.sessionTriangles(ev)))
-    graft.core.TransientPins.drain(spark)
     t("x132 kcore")(checksum(
       graft.operators.GraphOps.sessionKCore(ev)))
-    graft.core.TransientPins.drain(spark)
     }
 
     section("admission") {
@@ -161,7 +154,6 @@ object Prof {
     t("x193 reportFull again")(checksum(
       graft.operators.ShardAdmission.reportFull(batch, bemb, ndx, spx, ann,
         400000L, np)))
-    graft.core.TransientPins.drain(spark)
     }
     spark.stop()
   }

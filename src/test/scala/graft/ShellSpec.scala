@@ -141,4 +141,24 @@ class ShellSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(state.read("directory_control")
       .filter(col("dir_path").startsWith("/data")).count() === 0)
   }
+
+  test("delete and duplicate commands free their pins when they finish") {
+    val s = spark
+    import s.implicits._
+    state.write("directory", MergeOps.upsertDirs(state.read("directory"),
+      Seq(("/pins", t1, t1)).toDF("dir_path", "ctime", "mtime"), t1))
+    val dirId = state.read("directory").filter($"dir_path" === "/pins").head().getLong(0)
+    state.write("file", MergeOps.upsertFiles(state.read("file"),
+      Seq(("a.txt", dirId, BigDecimal(1.0), t1, t1, t1), ("b.txt", dirId, BigDecimal(2.0), t1, t1, t1))
+        .toDF("name", "dir_id", "size", "ctime", "mtime", "atime"), t1))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val sh = shell
+    lines.clear()
+    Seq("search duplicate_file /pins/a.txt", "search duplicate_dir /pins",
+      "delete_file /pins/a.txt", "delete_file /nope/missing.bin", "delete_dir /pins")
+      .foreach(sh.execute)
+    assert(lines.count(_.startsWith("Y")) === 2, lines.mkString("\n"))
+    assert(sc.getPersistentRDDs.keySet -- before === Set.empty)
+  }
 }
