@@ -18,7 +18,8 @@ import graft.sources.HashSource
   * the reference's translation (F5) and relative paths through the cd
   * context exactly like `CLI/__init__.py:170-192`. Each command runs in
   * its own [[PinScope]], so the pins it makes (the doomed sets of the
-  * deletes, the duplicate searches' needles) are freed when it finishes.
+  * deletes, the duplicate searches' needles and the view they scan) are
+  * freed when it finishes.
   */
 class Shell(state: StateStore, out: String => Unit = println) {
 
@@ -44,15 +45,15 @@ class Shell(state: StateStore, out: String => Unit = println) {
     if (parts.isEmpty) return true
     val cmd = parts.head.toLowerCase
     if (cmd == "exit" || cmd == "quit") return false
-    PinScope(_ => dispatch(cmd, parts.tail))
+    PinScope(scope => dispatch(cmd, parts.tail, scope))
     true
   }
 
-  private def dispatch(cmd: String, args: Seq[String]): Unit =
+  private def dispatch(cmd: String, args: Seq[String], scope: PinScope): Unit =
     (cmd, args) match {
       case ("pwd", _) => out(cwd)
       case ("cd", Seq(p, _*)) => cwd = resolve(p)
-      case ("search", _) => search(args)
+      case ("search", _) => search(args, scope)
       case ("scrape", Seq(p, _*)) => rescrape(resolve(p))
       case ("hash_file", Seq(p, rest @ _*)) =>
         hashFile(resolve(p), insertDb = rest.headOption.exists(_.equalsIgnoreCase("insert")))
@@ -67,7 +68,7 @@ class Shell(state: StateStore, out: String => Unit = println) {
       case _ => out(s"unknown command: $cmd (try 'help')")
     }
 
-  private def search(args: Seq[String]): Unit = args match {
+  private def search(args: Seq[String], scope: PinScope): Unit = args match {
     case Seq("name", pattern, _*) =>
       show(SearchOps.searchName(vwLl, PathFunctions.parseWildcardSearch(pattern)))
     case Seq("name_file", pattern, _*) =>
@@ -81,10 +82,14 @@ class Shell(state: StateStore, out: String => Unit = println) {
       show(SearchOps.searchFullPath(vwLl, paths.map(resolve)))
     case Seq("dir", paths @ _*) if paths.nonEmpty =>
       show(SearchOps.searchDir(state.read("directory"), paths.map(resolve)))
+    // a duplicate search scans the view twice (needle and haystack): an
+    // uncached view would be pinned for the session, held past this
+    // command until the GC collects it; persisted here, the command's
+    // scope frees it
     case Seq("duplicate_file", path, _*) =>
-      show(SearchOps.searchDuplicateFile(vwLl, resolve(path)))
+      show(SearchOps.searchDuplicateFile(scope.persist(vwLl), resolve(path)))
     case Seq("duplicate_dir", path, _*) =>
-      show(SearchOps.searchDuplicateDir(vwLl, resolve(path)))
+      show(SearchOps.searchDuplicateDir(scope.persist(vwLl), resolve(path)))
     case _ =>
       out("usage: search name|name_file|name_dir|hash|file|dir|duplicate_file|duplicate_dir <args>")
   }

@@ -41,8 +41,8 @@ object AnomalyOps {
       minBaseline, topK)
 
   /** The live half: (event_type, hour_epoch, cnt). A plain sum-shaped
-    * streaming aggregation — [[graft.streaming.AnomalyStream]] maintains
-    * exactly this relation online; the verdict below is computed ON READ
+    * aggregation, so the same call on a stream maintains it online
+    * (state |types|×|hours|); the verdict below is computed ON READ
     * (trailing-window functions are not stream-legal, and should not
     * be — the baseline re-reads 24 rows of bounded state, not the
     * event stream). */
@@ -147,11 +147,11 @@ object AnomalyOps {
 
   /** The verdict half of x166 over a (live or batch) hourly-count table —
     * the same split as x124: the sufficient statistic is the streamed
-    * (type, hour) count panel ([[graft.streaming.AnomalyStream
-    * .hourlyOnIngest]]), CUSUM is computed ON READ (a prefix-sum argmax
+    * (type, hour) count panel ([[hourlyCounts]] on the stream), CUSUM
+    * is computed ON READ (a prefix-sum argmax
     * is not stream-legal, and should not be — it re-reads the bounded
     * hour grid, not the event stream), so live-then-finish == batch on
-    * every arrival prefix (AnomalyStreamSpec pins it). */
+    * every arrival prefix (the streaming spec pins it). */
   def changepointFromHourly(hourly: DataFrame): DataFrame = {
     val grid = hourly.groupBy("event_type")
       .agg(min(col("hour_epoch")).as("h_min"), max(col("hour_epoch")).as("h_max"))
@@ -267,8 +267,8 @@ object AnomalyOps {
     * (user_id, event_type) panel of mergeable measures — count, min and
     * max event epoch. ONE aggregation, |users|·|types| rows, every
     * measure a sum or an idempotent extremum — which is exactly what
-    * lets the panel maintain itself as streaming state
-    * ([[graft.streaming.SketchStream.profilePanelOnIngest]]): the
+    * lets the same call maintain the panel as streaming state (replays
+    * count: the sums govern — exactly-once or dedup upstream): the
     * profile itself is a multi-aggregation vote that Structured
     * Streaming cannot run as one query, the panel is not. */
   def profilePanel(events: DataFrame): DataFrame =
@@ -282,7 +282,7 @@ object AnomalyOps {
   /** Finish a [[profilePanel]] into the x157 profile — batch and the
     * streaming live table share this read verbatim, so
     * stream-then-finish equals the batch profile on every arrival
-    * prefix (SketchStreamSpec pins it). */
+    * prefix (the streaming spec pins it). */
   def profilesFromPanel(panel: DataFrame, burstFactor: Long = 5L): DataFrame = {
     val base = panel.groupBy("user_id").agg(
       sum(col("c")).as("n_events"),

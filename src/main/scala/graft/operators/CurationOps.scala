@@ -630,30 +630,22 @@ object CurationOps {
     * are floor(budget · weight + 0.5) on a literal weight; the epoch
     * factor is one fixed-order IEEE division.
     *
-    * Scale: one scan, lang-sized aggregate, no joins. */
+    * Scale: one scan, lang-sized aggregate, no joins. The same call on
+    * a stream is the live monitor: state is one row per language, no
+    * watermark, `complete` output mode — the `oversubscribed` flag flips
+    * as a slice fills (the streaming spec pins stream == batch). */
   def mixturePlan(df: DataFrame,
                   weights: Seq[(String, Double)] = defaultMixture,
-                  budget: Long = 1000000L): DataFrame =
-    mixtureFinish(
-      df.filter(col("lang").isNotNull)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextExpressions.wsTokenCountFast(col("text")).cast("long"))
-            .as("avail_tokens")),
-      weights, budget)
-
-  /** Budget arithmetic over a `(lang, n_docs, avail_tokens)` aggregate —
-    * shared by the batch planner and [[graft.streaming.MixtureStream]]'s
-    * live monitor so online and offline epoch numbers are identical by
-    * construction. */
-  private[graft] def mixtureFinish(agg: DataFrame,
-                                   weights: Seq[(String, Double)],
-                                   budget: Long): DataFrame = {
+                  budget: Long = 1000000L): DataFrame = {
     val w = weights.tail.foldLeft(
       when(col("lang") === weights.head._1, lit(weights.head._2))) {
         case (acc, (l, x)) => acc.when(col("lang") === l, lit(x))
       }.otherwise(lit(0d))
-    agg
+    df.filter(col("lang").isNotNull)
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(TextExpressions.wsTokenCountFast(col("text")).cast("long"))
+          .as("avail_tokens"))
       .select(col("lang"), col("n_docs"), col("avail_tokens"),
         floor(lit(budget.toDouble) * w + lit(0.5)).cast("long")
           .as("target_tokens"))
@@ -1109,7 +1101,7 @@ object CurationOps {
        |GROUP BY 1""".stripMargin
   }
 
-  /** Offline-trained DSIR model for the streaming twin: the (bucket →
+  /** Offline-trained DSIR model for [[dsirApply]]: the (bucket →
     * w_micro) weight table plus the default weight an UNTRAINED bucket
     * takes — with zero counts on both sides the smoothed log ratio
     * collapses to ln((tr+B)/(tt+B)), a corpus constant. The 1-row totals
@@ -1152,26 +1144,37 @@ object CurationOps {
     (w, default)
   }
 
-  /** Batch application of a trained DSIR model — the offline twin of
-    * [[graft.streaming.DsirStream.weightOnIngest]], sharing its exact
-    * dataflow (broadcast weight table, untrained buckets priced at the
-    * model default) minus the watermark. */
+  /** Application of a trained DSIR model: per document `keyNames` +
+    * (n_feats, dsir_micro, dsir_avg). The weight table is
+    * `buckets`-sized and broadcasts; features hashing into buckets the
+    * training corpus never touched take the model's zero-count default
+    * rather than dropping.
+    *
+    * The same call scores a stream on arrival — the importance-
+    * resampling deployment shape (Xie et al. 2023): watermark the
+    * stream on its event time and carry it in `keyNames`
+    * (`Seq("doc_id", "ts")`), so the per-doc re-collapse is an
+    * event-time aggregation whose state is O(arrival rate × horizon)
+    * and the weight table joins stream-static (the streaming spec pins
+    * stream == batch). */
   def dsirApply(df: DataFrame, weights: DataFrame, defaultMicro: Long,
-                buckets: Int = 4096): DataFrame = {
+                buckets: Int = 4096,
+                keyNames: Seq[String] = Seq("doc_id")): DataFrame = {
+    val keys = keyNames.map(col)
     val toks = TextOps.wordsRe(col("text"))
     val feats = concat(toks, TextExpressions.wsBigramsFast(col("text")))
     df.filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .select(col("doc_id"), explode(feats).as("feat"))
-      .select(col("doc_id"),
+      .select(keys :+ explode(feats).as("feat"): _*)
+      .select(keys :+
         coalesce(HashFunctions.polyHash52Fast(col("feat")) % lit(buckets.toLong),
-          lit(0L)).as("bucket"))
+          lit(0L)).as("bucket"): _*)
       .join(broadcast(weights), Seq("bucket"), "left_outer")
-      .groupBy("doc_id")
+      .groupBy(keys: _*)
       .agg(count(lit(1)).as("n_feats"),
         sum(coalesce(col("w_micro"), lit(defaultMicro))).as("dsir_micro"))
-      .select(col("doc_id"), col("n_feats"), col("dsir_micro"),
+      .select(keys ++ Seq(col("n_feats"), col("dsir_micro"),
         (col("dsir_micro").cast("double") /
-          (col("n_feats").cast("double") * lit(1e6))).as("dsir_avg"))
+          (col("n_feats").cast("double") * lit(1e6))).as("dsir_avg")): _*)
   }
 
   /** x141: corpus release diff — what changed between two releases, per

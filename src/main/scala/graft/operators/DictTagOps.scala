@@ -37,9 +37,18 @@ object DictTagOps {
     "zebra")
 
   /** x143: per-term corpus tally `(term_id, term, n_docs, n_occ)` —
-    * one row per dictionary term, zeros preserved. */
+    * one row per dictionary term, zeros preserved.
+    *
+    * The same call on a stream keeps the tallies live: one stateful
+    * sum-aggregation, |D| rows of two longs of state, no watermark, and
+    * absent terms hold their zero rows from the first document on. Both
+    * tallies are SUMS, so the live table equals the batch one on every
+    * arrival prefix (the streaming spec pins it) — and sums COUNT
+    * replays: deliver exactly-once or dedup upstream on doc_id. */
   def dictionaryTags(df: DataFrame, terms: Seq[String] = gateTerms,
                      text: Column = col("text")): DataFrame = {
+    require(terms.nonEmpty && terms.distinct.size == terms.size,
+      "dictionary must be non-empty and duplicate-free")
     val dict = AcDict(terms.toIndexedSeq)
     val termArr = array(terms.map(lit): _*)
     df.select(posexplode(AcExpressions.acTermCounts(text, dict))

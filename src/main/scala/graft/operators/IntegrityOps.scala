@@ -38,23 +38,19 @@ object IntegrityOps {
     ("embeddings->documents", "embeddings", "vec_id", "documents", "doc_id"),
     ("documents->embeddings", "documents", "doc_id", "embeddings", "vec_id"))
 
-  /** x147: one row per FK edge —
-    * `(relationship, n_child, n_keys, n_orphan_rows, n_orphan_keys)`.
-    * NULL foreign keys count as orphan rows (they vanish from inner
-    * joins exactly like dangling ones) but not as keys. */
   /** The SUFFICIENT STATISTIC behind one edge's audit: the
     * key-compressed child panel `(k, c)` — ONE aggregation whose only
     * measure is a sum, |distinct keys| rows, which is exactly what lets
-    * the panel maintain itself as streaming state
-    * ([[graft.streaming.IntegrityStream.auditPanelOnIngest]]): the
-    * audit row needs the parent join, the panel does not. */
+    * the same call maintain the panel as streaming state (replays
+    * count: deliver exactly-once or dedup upstream): the audit row
+    * needs the parent join, the panel does not. */
   def childPanel(child: DataFrame, fk: String): DataFrame =
     child.groupBy(col(fk).as("k")).agg(count(lit(1)).as("c"))
 
   /** Finish a [[childPanel]] into the edge's audit row — batch and the
     * streaming live panel share this read verbatim, so
     * stream-then-finish equals batch x147 on every arrival prefix
-    * (IntegrityStreamSpec pins it). The parent relation is joined RAW
+    * (the streaming spec pins it). The parent relation is joined RAW
     * (no distinct), matching the oracle's `LEFT JOIN parent` row
     * semantics exactly. */
   def auditFromPanel(name: String, panel: DataFrame,
@@ -77,6 +73,30 @@ object IntegrityOps {
                 parent: DataFrame, pk: String): DataFrame =
     auditFromPanel(name, childPanel(child, fk), parent, pk)
 
+  /** The parent's distinct key projection `(k, __hit = 1)` for
+    * [[flagOnIngest]]. Distinct is correct here (the flag only asks
+    * existence) and bounds the broadcast by |distinct pk|. */
+  def parentKeys(parent: DataFrame, pk: String): DataFrame =
+    parent.select(col(pk).as("k")).distinct()
+      .select(col("k"), lit(1).as("__hit"))
+
+  /** Per-row dangling-child flag: `child.*` + `orphan` (1 = no parent
+    * row exists — including NULL fk, which the audit counts
+    * identically). The row passes through, because a pipeline wants to
+    * quarantine orphans, not drop them the way an inner join would. A
+    * broadcast left join against [[parentKeys]]: on a stream it is
+    * stateless and stream-static, so a child row is flagged the moment
+    * it arrives (append mode). */
+  def flagOnIngest(child: DataFrame, fk: String,
+                   parentK: DataFrame): DataFrame =
+    child.join(broadcast(parentK), child(fk) === parentK("k"), "left_outer")
+      .select(child.columns.toSeq.map(col) :+
+        when(col("__hit").isNull, 1).otherwise(0).as("orphan"): _*)
+
+  /** x147: one row per FK edge —
+    * `(relationship, n_child, n_keys, n_orphan_rows, n_orphan_keys)`.
+    * NULL foreign keys count as orphan rows (they vanish from inner
+    * joins exactly like dangling ones) but not as keys. */
   def fkAudit(spark: SparkSession, dir: String): DataFrame = {
     val t: Map[String, DataFrame] = Map(
       "lineitem" -> Tables.lineitem(spark, dir),

@@ -208,7 +208,10 @@ object QuantileOps {
     * non-negative, so its div needs no guard). Projected as DOUBLE via
     * the exact decimal (both engines round-to-nearest from the same
     * integer; values this size are ≤2^53 on this data). One scan, one
-    * |types|-keyed aggregate with map-side partials — nothing else. */
+    * |types|-keyed aggregate with map-side partials — nothing else.
+    * Every statistic is mergeable (sums, min/max), so the same call on
+    * a stream is one stateful aggregation with |types| rows of state
+    * (the streaming spec pins stream == batch); the sums count replays. */
   def valueMoments(events: DataFrame): DataFrame = {
     val v = floor(col("value").cast("double") * lit(1e6) + lit(0.5))
       .cast("long")

@@ -693,10 +693,10 @@ object SimilarityOps {
   /** The SUFFICIENT STATISTIC behind [[sourceAnisotropy]]: the
     * (source, dim) panel of mergeable measures — element sum, squared-
     * element sum, row count. ONE aggregation, |sources|×d rows, every
-    * measure a sum — which is exactly what lets the panel maintain
-    * itself as streaming state
-    * ([[graft.streaming.SketchStream.anisotropyPanelOnIngest]]): the
-    * report needs ‖Σx‖², a square of a sum no streaming query can
+    * measure a sum — which is exactly what lets the same call maintain
+    * the panel as streaming state over an embedding stream joined
+    * stream-static to `docs` (replays count — exactly-once or dedup
+    * upstream): the report needs ‖Σx‖², a square of a sum no streaming query can
     * maintain directly, but the panel is linear and the squaring
     * happens in the finishing read. */
   def anisotropyPanel(docs: DataFrame, emb: DataFrame): DataFrame = {
@@ -721,7 +721,7 @@ object SimilarityOps {
   /** Finish an [[anisotropyPanel]] into the x163 report — batch and the
     * streaming live table share this read verbatim, so
     * stream-then-finish equals batch on every arrival prefix
-    * (SketchStreamSpec pins it). */
+    * (the streaming spec pins it). */
   def anisotropyFromPanel(dims: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val src = dims.groupBy("source")
@@ -759,8 +759,8 @@ object SimilarityOps {
     *
     * Scale shape: two |sources|×d panels (each ONE exploded scan with
     * map-side partials — or ZERO scans when both panels are already
-    * live streaming state, [[graft.streaming.SketchStream
-    * .anisotropyPanelOnIngest]]; this finisher works on live panels
+    * live streaming state, [[anisotropyPanel]] on the stream; this
+    * finisher works on live panels
     * verbatim, so the streaming twin is this same code), one
     * (source, pos)-keyed equi-join of the two panels, |sources|-row
     * rollups. Exactness: the shared 1e-4 element grid, cross products

@@ -32,9 +32,17 @@ object SketchOps {
 
   /** Registers per group: (group, bucket ∈ [0, m), reg = max rho).
     * rho = leading zeros of the 52-bit suffix + 1 = 53 − bitlen(w).
-    * Package-visible so the spec can pin the merge law directly. */
+    * Package-visible so the spec can pin the merge law directly.
+    *
+    * The same call on a stream maintains the registers live: one
+    * stateful max-aggregation, |groups|·m single-byte registers of
+    * state, no watermark — and `max` is idempotent, so a replayed
+    * micro-batch cannot move a register (exactly-once for free under
+    * at-least-once delivery). The estimate is then computed on read by
+    * [[estimateFromRegisters]] (the streaming spec pins both). */
   private[graft] def registers(df: DataFrame, group: Column, item: Column,
                                m: Int): DataFrame = {
+    requireRegisterCount(m)
     val h = HashFunctions.hash60(item)
     df.select(group.as("g"), h.as("h"))
       .select(col("g"), pmod(col("h"), lit(m.toLong)).cast("int").as("bucket"),
@@ -45,14 +53,11 @@ object SketchOps {
       .groupBy("g", "bucket").agg(max(col("rho")).as("reg"))
   }
 
-  /** Per-group HLL estimate beside the exact distinct count and the
-    * relative error — the calibration read before trusting the sketch
-    * as the production `count(distinct)` replacement.
-    *
-    * Output: (group, n_exact, n_est, rel_err); deterministic across
-    * engines — both estimator branches are exact-integer or
-    * fixed-op-order IEEE arithmetic.
-    */
+  /** m = 2^p registers per group, p ∈ [4, 16]. */
+  private def requireRegisterCount(m: Int): Unit =
+    require(m >= 16 && m <= 65536 && Integer.bitCount(m) == 1,
+      s"m=$m is not 2^p for p in [4,16]")
+
   /** The |groups|×m-sized finishing step: registers → (g, n_est).
     * Shared verbatim by the batch gate and the streaming deployment
     * (live registers, estimate computed on read), so online and offline
@@ -84,6 +89,14 @@ object SketchOps {
       .select(col("g"), floor(col("est") + lit(0.5)).cast("long").as("n_est"))
   }
 
+  /** Per-group HLL estimate beside the exact distinct count and the
+    * relative error — the calibration read before trusting the sketch
+    * as the production `count(distinct)` replacement.
+    *
+    * Output: (group, n_exact, n_est, rel_err); deterministic across
+    * engines — both estimator branches are exact-integer or
+    * fixed-op-order IEEE arithmetic.
+    */
   def hllCalibration(events: DataFrame, group: Column, item: Column,
                      p: Int = 8): DataFrame = {
     require(p >= 4 && p <= 16, s"p=$p outside [4,16]")
@@ -104,9 +117,17 @@ object SketchOps {
     * h_i(key) ≡ b. Like the HLL registers, THIS is the production
     * contract — counters are sums, so sketches merge across partitions/
     * days/tables by adding, and the table is d·w integers regardless of
-    * corpus size. Package-visible for the spec's merge-law pin. */
+    * corpus size. Package-visible for the spec's merge-law pin.
+    *
+    * The same call on a stream of `(k, cnt = 1)` rows maintains the
+    * counters live: one sum-shaped stateful aggregation, d·w longs of
+    * state at any stream volume, probed by the batch finishing
+    * expressions unchanged (the streaming spec pins stream == batch).
+    * Unlike HLL's idempotent max, sums COUNT replays — deliver
+    * exactly-once (checkpointed source offsets) or dedup upstream. */
   private[graft] def cmsCounters(keyCounts: DataFrame, d: Int,
-                                 w: Int): DataFrame =
+                                 w: Int): DataFrame = {
+    requireCmsShape(d, w)
     keyCounts
       .select(col("k"), col("cnt"),
         explode(expr(s"sequence(0, ${d - 1})")).as("row_i"))
@@ -115,6 +136,10 @@ object SketchOps {
           lit(w.toLong)).cast("int").as("bucket"),
         col("cnt"))
       .groupBy("row_i", "bucket").agg(sum(col("cnt")).as("counter"))
+  }
+
+  private def requireCmsShape(d: Int, w: Int): Unit =
+    require(d >= 1 && d <= 8 && w >= 16 && w <= 65536, s"d=$d w=$w")
 
   /** Count-Min heavy-hitter calibration: the true top-`k` keys by exact
     * count beside their CMS point estimates (min over the d rows) and
@@ -130,7 +155,7 @@ object SketchOps {
     * Output: (key, n_exact, n_est, over_cnt). */
   def cmsCalibration(df: DataFrame, key: Column, d: Int = 4, w: Int = 512,
                      topK: Int = 20): DataFrame = {
-    require(d >= 1 && d <= 8 && w >= 16 && w <= 65536, s"d=$d w=$w")
+    requireCmsShape(d, w)
     val keyCounts = df.select(key.cast("string").as("k"))
       .groupBy("k").agg(count(lit(1)).as("cnt"))
     val counters = cmsCounters(keyCounts, d, w)
@@ -202,7 +227,7 @@ object SketchOps {
   def joinSizeCalibration(a: DataFrame, aKey: Column, b: DataFrame,
                           bKey: Column, d: Int = 4,
                           w: Int = 1024): DataFrame = {
-    require(d >= 1 && d <= 8 && w >= 16 && w <= 65536, s"d=$d w=$w")
+    requireCmsShape(d, w)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // per-key count tables each feed THREE consumers (CMS counters, the
     // 1-row totals, the exact inner product) — pinned (round 18, guide

@@ -56,7 +56,7 @@ object SubstringOps {
     * fingerprints already accept; the DuckDB twins keep md5, so every
     * driver SF proves the equality end-to-end). Consumers whose hash IS
     * the contract — x95's report column, the SpanIndex persisted
-    * postings, the streaming decontamination state — stay on md5. */
+    * postings — stay on md5. */
   private[graft] def windows(df: DataFrame, w: Int, text: Column,
                              keyNames: Seq[String] = Seq("doc_id"),
                              fastHash: Boolean = false): DataFrame = {
@@ -423,17 +423,40 @@ object SubstringOps {
     * once. Train docs shorter than w tokens carry no windows and drop
     * out (both engines agree). */
   def ngramDecontamination(df: DataFrame, evalPred: Column, w: Int = 8,
-                           text: Column = col("text")): DataFrame = {
-    val evalWins = windows(df.filter(evalPred), w, text, fastHash = true)
+                           text: Column = col("text")): DataFrame =
+    decontaminationGate(df.filter(!evalPred),
+      evalWindows(df.filter(evalPred), w, text), w, text)
+
+  /** The eval side of [[ngramDecontamination]]: the distinct eval-split
+    * window hashes, each flagged `__hit = 1`. Computed once from the
+    * quarantined eval corpus; the gate broadcasts it. */
+  def evalWindows(evalDocs: DataFrame, w: Int = 8,
+                  text: Column = col("text")): DataFrame =
+    windows(evalDocs, w, text, fastHash = true)
       .select(col("whash")).distinct()
       .select(col("whash"), lit(1).as("__hit"))
-    windows(df.filter(!evalPred), w, text, fastHash = true)
+
+  /** The training side of [[ngramDecontamination]]: per document
+    * `keyNames` + (n_windows, hit_windows, contaminated) against an
+    * [[evalWindows]] table. Docs shorter than w tokens yield no row.
+    *
+    * The same call gates a stream on arrival: watermark the stream on
+    * its event time and carry it in `keyNames` (`Seq("doc_id", "ts")`);
+    * the eval table joins stream-static (no join state) and the per-doc
+    * re-collapse is an event-time aggregation whose state is
+    * O(arrival rate × horizon), emitted in append mode once the
+    * watermark passes (the streaming spec pins stream == batch). */
+  def decontaminationGate(docs: DataFrame, evalWins: DataFrame, w: Int = 8,
+                          text: Column = col("text"),
+                          keyNames: Seq[String] = Seq("doc_id")): DataFrame = {
+    val keys = keyNames.map(col)
+    windows(docs, w, text, keyNames, fastHash = true)
       .join(broadcast(evalWins), Seq("whash"), "left_outer")
-      .groupBy("doc_id")
+      .groupBy(keys: _*)
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("__hit").isNotNull, 1L).otherwise(0L)).as("hit_windows"))
-      .select(col("doc_id"), col("n_windows"), col("hit_windows"),
-        when(col("hit_windows") > 0, 1).otherwise(0).as("contaminated"))
+      .select(keys ++ Seq(col("n_windows"), col("hit_windows"),
+        when(col("hit_windows") > 0, 1).otherwise(0).as("contaminated")): _*)
   }
 
   /** DuckDB twin of [[ngramDecontamination]]; `evalPredSql` must mirror

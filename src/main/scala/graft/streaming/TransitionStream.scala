@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window, then replaces the state. The x135 matrix/lift finishing
   * arithmetic runs ON READ over the emitted pair stream (a
   * |types|²-sized aggregation at any volume) — the same split as the
-  * burst monitor (AnomalyStream): pure-append pair extraction in the
+  * burst monitor (AnomalyOps.hourlyCounts on a stream): pure-append pair extraction in the
   * stream, window margins on the bounded read side.
   *
   * State is one record per active user and expires via event-time

@@ -9,7 +9,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AnomalyOps
-import graft.streaming.AnomalyStream
 
 final case class TypedEvent(event_type: String, ts: Timestamp)
 
@@ -52,7 +51,7 @@ class AnomalyStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch2 = ev((10 until 24).map(("click", _, 4)) :+ (("click", 24, 20)))
 
     val in = MemoryStream[TypedEvent]
-    val q = AnomalyStream.hourlyOnIngest(in.toDF())
+    val q = AnomalyOps.hourlyCounts(in.toDF())
       .writeStream.format("memory").queryName("live_hourly")
       .outputMode("complete").start()
     try {
@@ -61,14 +60,14 @@ class AnomalyStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         val live = spark.table("live_hourly")
         assert(snap(live) === snap(AnomalyOps.hourlyCounts(prefix.toDF())),
           s"hourly counts diverged at prefix of ${prefix.size}")
-        val onRead = AnomalyStream.bursts(live).collect()
+        val onRead = AnomalyOps.burstsFromHourly(live).collect()
         val batch = AnomalyOps.burstReport(prefix.toDF()).collect()
         assert(onRead.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq,
           "verdict-on-read must equal the batch report")
         // x166 twin: the SAME live panel finishes into the changepoint
         // report — pin a consistent snapshot first (multi-job read over
         // a complete-mode sink, the SketchStreamSpec discipline)
-        val cpLive = AnomalyStream.changepoints(live.localCheckpoint(true))
+        val cpLive = AnomalyOps.changepointFromHourly(live.localCheckpoint(true))
           .collect().map(_.toSeq).sortBy(_.head.toString)
         val cpBatch = AnomalyOps.changepointReport(prefix.toDF())
           .collect().map(_.toSeq).sortBy(_.head.toString)
@@ -76,7 +75,7 @@ class AnomalyStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"changepoint-on-read diverged at prefix of ${prefix.size}")
       }
       // the spike is only a verdict once the baseline filled in batch2
-      val verdict = AnomalyStream.bursts(spark.table("live_hourly")).collect()
+      val verdict = AnomalyOps.burstsFromHourly(spark.table("live_hourly")).collect()
       assert(verdict.length === 1)
       assert(verdict.head.getAs[Long]("hour_epoch") === h0 + 24)
       assert(verdict.head.getAs[Long]("base_sum") === 96L) // 24 h × 4

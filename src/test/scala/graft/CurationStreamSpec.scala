@@ -12,8 +12,9 @@ final case class GateDoc(doc_id: Long, text: String)
 /** The Gopher battery is a pure per-row projection, so it composes onto
   * a stream UNCHANGED — no twin object needed: this spec pins that
   * gating a firehose is the same call as gating a table (the
-  * stateless end of the streaming-curation spectrum; MixtureStream and
-  * DecontaminationStream cover the stateful end). */
+  * stateless end of the streaming-curation spectrum; MixtureStreamSpec
+  * and DecontaminationStreamSpec run the stateful end the same way —
+  * `mixturePlan` and `decontaminationGate` on a watermarked stream). */
 class CurationStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _

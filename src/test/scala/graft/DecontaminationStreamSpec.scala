@@ -3,16 +3,17 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream,
+  StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SubstringOps
-import graft.streaming.DecontaminationStream
 
 /** Gate-on-ingest: streamed contamination flags equal the batch x79
-  * gate on the same rows; short docs yield no row on either side. */
+  * gate on the same rows; short docs yield no row on either side; the
+  * stream windows with the batch gate's native hash, not md5. */
 class DecontaminationStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -36,7 +37,7 @@ class DecontaminationStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = 3
     val evalText = "alpha beta gamma delta epsilon"
     val eval = Seq((1000L, evalText)).toDF("doc_id", "text")
-    val evalWins = DecontaminationStream.evalWindows(eval, w)
+    val evalWins = SubstringOps.evalWindows(eval, w)
 
     val arrivals = Seq(
       // carries "beta gamma delta" — a full eval window → contaminated
@@ -47,8 +48,9 @@ class DecontaminationStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       InDoc(3L, "alpha beta", ts("2024-01-01 10:02:00")))
 
     val in = MemoryStream[InDoc]
-    val q = DecontaminationStream.gateOnIngest(in.toDF(), evalWins, w,
-        "10 minutes")
+    val q = SubstringOps.decontaminationGate(
+        in.toDF().withWatermark("ts", "10 minutes"), evalWins, w,
+        keyNames = Seq("doc_id", "ts"))
       .writeStream.format("memory").queryName("decon_out")
       .outputMode("append").start()
     try {
@@ -77,6 +79,10 @@ class DecontaminationStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(streamed === batch)
       assert(streamed.map(t => t._1 -> t._4).toMap === Map(1L -> 1, 2L -> 0))
       assert(!streamed.exists(_._1 == 3L), "short doc yields no gate row")
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan.toString.toLowerCase
+      assert(!plan.contains("md5"),
+        "the streaming gate must window with the batch gate's native hash")
     } finally q.stop()
   }
 }

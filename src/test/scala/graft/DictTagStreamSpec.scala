@@ -7,7 +7,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DictTagOps
-import graft.streaming.DictTagStream
 
 final case class TagDoc(doc_id: Long, text: String)
 
@@ -44,7 +43,7 @@ class DictTagStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch2 = Seq(TagDoc(3L, "table table scan scan"), TagDoc(4L, "no hits here"))
 
     val in = MemoryStream[TagDoc]
-    val q = DictTagStream.tagsOnIngest(in.toDF(), terms)
+    val q = DictTagOps.dictionaryTags(in.toDF(), terms)
       .writeStream.format("memory").queryName("dict_tags")
       .outputMode("complete").start()
     try {
@@ -58,5 +57,14 @@ class DictTagStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
           "never-matched terms keep their zero row live")
       }
     } finally q.stop()
+  }
+
+  test("batch dictionaryTags rejects a duplicate term at call time") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq(TagDoc(1L, "scan the table")).toDF()
+    intercept[IllegalArgumentException] {
+      DictTagOps.dictionaryTags(docs, Seq("scan", "table", "scan"))
+    }
   }
 }

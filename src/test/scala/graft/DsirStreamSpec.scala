@@ -9,7 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
 import graft.operators.CurationOps
-import graft.streaming.DsirStream
 
 /** DSIR-on-ingest: streamed importance weights equal the batch applier's
   * on the same rows, and untrained buckets actually take the model
@@ -44,8 +43,8 @@ class DsirStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       InDoc(3L, "data pipeline quality", ts("2024-01-01 10:02:00")))
 
     val in = MemoryStream[InDoc]
-    val q = DsirStream.weightOnIngest(in.toDF(), weights, default,
-        watermark = "10 minutes")
+    val q = CurationOps.dsirApply(in.toDF().withWatermark("ts", "10 minutes"),
+        weights, default, keyNames = Seq("doc_id", "ts"))
       .writeStream.format("memory").queryName("dsir_out")
       .outputMode("append").start()
     try {

@@ -7,7 +7,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.IntegrityOps
-import graft.streaming.IntegrityStream
 
 final case class ChildRow(row_id: Long, fk: java.lang.Long)
 
@@ -48,7 +47,7 @@ class IntegrityStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val parent = (1L to 5L).toDF("pk")
 
     val in = MemoryStream[ChildRow]
-    val q = IntegrityStream.auditPanelOnIngest(in.toDF(), "fk")
+    val q = IntegrityOps.childPanel(in.toDF(), "fk")
       .writeStream.format("memory").queryName("fk_panel")
       .outputMode("complete").start()
     try {
@@ -78,10 +77,10 @@ class IntegrityStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val parentK = IntegrityStream.parentKeys((1L to 5L).toDF("pk"), "pk")
+    val parentK = IntegrityOps.parentKeys((1L to 5L).toDF("pk"), "pk")
 
     val in = MemoryStream[ChildRow]
-    val q = IntegrityStream.flagOnIngest(in.toDF(), "fk", parentK)
+    val q = IntegrityOps.flagOnIngest(in.toDF(), "fk", parentK)
       .writeStream.format("memory").queryName("fk_flags")
       .outputMode("append").start()
     try {

@@ -6,7 +6,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CurationOps
-import graft.streaming.MixtureStream
 
 final case class LangDoc(doc_id: Long, text: String, lang: String)
 
@@ -45,7 +44,7 @@ class MixtureStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       LangDoc(4L, "ein zwei", "de"))
 
     val in = MemoryStream[LangDoc]
-    val q = MixtureStream.planOnIngest(in.toDF(), weights, budget)
+    val q = CurationOps.mixturePlan(in.toDF(), weights, budget)
       .writeStream.format("memory").queryName("mix_out")
       .outputMode("complete").start()
     try {

@@ -7,7 +7,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SketchOps
-import graft.streaming.SketchStream
 
 final case class SketchEvent(grp: String, item: String)
 
@@ -44,7 +43,7 @@ class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 40).map(i => SketchEvent("b", s"v$i")) // pure replay for b
 
     val in = MemoryStream[SketchEvent]
-    val q = SketchStream.registersOnIngest(in.toDF(), col("grp"), col("item"))
+    val q = SketchOps.registers(in.toDF(), col("grp"), col("item"), 256)
       .writeStream.format("memory").queryName("hll_regs")
       .outputMode("complete").start()
     try {
@@ -54,7 +53,7 @@ class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(regSnapshot(live) === regSnapshot(
           SketchOps.registers(prefix.toDF(), col("grp"), col("item"), 256)),
           s"registers diverged at prefix of ${prefix.size}")
-        val onRead = SketchStream.estimate(live)
+        val onRead = SketchOps.estimateFromRegisters(live, 256)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val gate = SketchOps.hllCalibration(prefix.toDF(), col("grp"), col("item"))
           .collect().map(r => r.getString(0) -> r.getAs[Long]("n_est")).toMap
@@ -88,7 +87,9 @@ class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
           .select(col("k"), col("cnt")), d = 4, w = 64)
 
     val in = MemoryStream[SketchEvent]
-    val q = SketchStream.cmsOnIngest(in.toDF(), col("item"), d = 4, w = 64)
+    val q = SketchOps.cmsCounters(
+        in.toDF().select(col("item").cast("string").as("k"), lit(1L).as("cnt")),
+        d = 4, w = 64)
       .writeStream.format("memory").queryName("cms_live")
       .outputMode("complete").start()
     try {
@@ -117,7 +118,7 @@ class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         .sortBy(_._1).toSeq
 
     val in = MemoryStream[(String, Double)]
-    val q = graft.streaming.SketchStream.momentsOnIngest(
+    val q = graft.operators.QuantileOps.valueMoments(
         in.toDF().toDF("event_type", "value"))
       .writeStream.format("memory").queryName("moments_live")
       .outputMode("complete").start()
@@ -146,7 +147,7 @@ class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getString(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getInt(7))).sortBy(_._1).toSeq
     val in = MemoryStream[(Long, String, Long)]
-    val q = graft.streaming.SketchStream.profilePanelOnIngest(
+    val q = graft.operators.AnomalyOps.profilePanel(
         in.toDF().toDF("user_id", "event_type", "sec")
           .withColumn("ts", col("sec").cast("timestamp")).drop("sec"))
       .writeStream.format("memory").queryName("profile_panel")
@@ -188,8 +189,8 @@ class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         Option(r.get(3)).map(_.asInstanceOf[Long]),
         Option(r.get(4)).map(_.asInstanceOf[Long]))).sortBy(_._1).toSeq
     val in = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.SketchStream.anisotropyPanelOnIngest(
-        in.toDF().toDF("vec_id", "embedding"), docs)
+    val q = graft.operators.SimilarityOps.anisotropyPanel(
+        docs, in.toDF().toDF("vec_id", "embedding"))
       .writeStream.format("memory").queryName("aniso_panel")
       .outputMode("complete").start()
     try {
@@ -223,12 +224,12 @@ class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         Option(r.get(5)).map(_.asInstanceOf[Long]))).sortBy(_._1).toSeq
     val inA = MemoryStream[(Long, Array[Float])]
     val inB = MemoryStream[(Long, Array[Float])]
-    val qA = graft.streaming.SketchStream.anisotropyPanelOnIngest(
-        inA.toDF().toDF("vec_id", "embedding"), docs)
+    val qA = graft.operators.SimilarityOps.anisotropyPanel(
+        docs, inA.toDF().toDF("vec_id", "embedding"))
       .writeStream.format("memory").queryName("drift_panel_a")
       .outputMode("complete").start()
-    val qB = graft.streaming.SketchStream.anisotropyPanelOnIngest(
-        inB.toDF().toDF("vec_id", "embedding"), docs)
+    val qB = graft.operators.SimilarityOps.anisotropyPanel(
+        docs, inB.toDF().toDF("vec_id", "embedding"))
       .writeStream.format("memory").queryName("drift_panel_b")
       .outputMode("complete").start()
     try {
