@@ -1,21 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // drop any stale result file up front: a crash mid-run must leave no
     // previous run's numbers where a reader could mistake them for ours
     val outPath = sys.env.getOrElse("BENCH_OUT", "/tmp/bench.json")
     try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outPath))
     catch { case _: Throwable => () }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     // warm-up: JIT/codegen + parquet footer caches, so per-query times
     // measure the query, not session start
     spark.range(1000000L).selectExpr("sum(id)").collect()

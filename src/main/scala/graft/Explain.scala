@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dumps formatted physical plans of EVERY gate query to PLANS.md —
   * the plan-shape evidence behind BASELINE.md's gates (broadcasts, top-K
@@ -21,12 +21,7 @@ object Explain {
     // writes <outDir>/<name><suffix>.txt per query, e.g. suffix "_before"
     val subset = args.lift(2).map(_.split(",").toSeq)
     val suffix = args.lift(3).getOrElse("")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     subset.foreach { names =>
       Files.createDirectories(Paths.get(out))

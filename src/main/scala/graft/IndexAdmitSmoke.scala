@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 /** Scale-smoke probe for [[graft.operators.NearDupIndex]]'s admission
   * cost claim: admission is O(|incoming| + band collisions) — the
@@ -53,14 +54,7 @@ object IndexAdmitSmoke {
       "usage: IndexAdmitSmoke <corpusDir> <batchDir> <root> [near|span|ann]")
     val Array(corpusDir, batchDir, root) = args.take(3)
     val mode = if (args.length == 4) args(3) else "near"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "28")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val ndx = graft.operators.NearDupIndex

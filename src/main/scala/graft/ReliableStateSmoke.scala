@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.GraftSession
 import graft.operators.DedupOps.{IterState, Local, Reliable}
 
 /** Prices [[graft.operators.DedupOps.IterState]]'s Local-vs-Reliable
@@ -30,14 +29,7 @@ object ReliableStateSmoke {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: ReliableStateSmoke <sfDir>")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "28")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_reliable_ckpt")
     spark.sparkContext.setCheckpointDir(ckpt.toString)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.{Executors, TimeUnit}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -28,14 +28,7 @@ import java.util.concurrent.{Executors, TimeUnit}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     // JSON string escape (shared helper): a tab or CR in builder-authored
     // SQL would otherwise make the driver's json.load fail and silently

@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{PinScope, StateStore}
+import graft.core.{GraftSession, PinScope, StateStore}
 import graft.functions.PathFunctions
 import graft.operators.{MergeOps, ScheduleOps, SearchOps, Views}
 import graft.sources.HashSource
@@ -261,13 +261,7 @@ class Shell(state: StateStore, out: String => Unit = println) {
 object ShellMain {
   def main(args: Array[String]): Unit = {
     val stateDir = args.headOption.getOrElse(sys.error("usage: ShellMain <stateDir>"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val shell = new Shell(new StateStore(spark, stateDir))
     val in = new java.util.Scanner(System.in)
     print("graft> ")

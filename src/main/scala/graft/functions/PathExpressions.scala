@@ -94,10 +94,12 @@ object PathExpressions {
   def basepathFast(c: Column): Column = column(BasepathExpr(expression(c)))
 }
 
-/** `SparkSessionExtensions` hook: `--conf spark.sql.extensions=
-  * graft.functions.GraftExtensions` (or `.withExtensions`) makes the
-  * native functions available to plain SQL as `basepath_fast`/
-  * `basename_fast`. */
+/** `SparkSessionExtensions` hook that makes the native functions
+  * available to plain SQL (`basepath_fast`, `basename_fast`,
+  * `jaro_winkler`, `ws_token_count`, `winnow_select`). Every
+  * `graft.core.GraftSession` installs it; `--conf spark.sql.extensions=
+  * graft.functions.GraftExtensions` is only for sessions built outside
+  * this engine (spark-shell, spark-submit). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

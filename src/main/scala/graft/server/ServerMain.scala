@@ -2,9 +2,7 @@ package graft.server
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.StateStore
+import graft.core.{GraftSession, StateStore}
 
 /** Continuous server loop (§3.2/§3.3 parity with the reference's
   * `Server/__init__.py` process fabric): seed drives, then run
@@ -21,14 +19,7 @@ object ServerMain {
     require(args.length >= 2, "usage: ServerMain <stateDir> <root> [<root>...]")
     val stateDir = args.head
     val roots = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     val state = new StateStore(spark, stateDir)
     val now = () => new Timestamp(System.currentTimeMillis())

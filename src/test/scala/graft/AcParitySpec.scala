@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{AcDict, AcExpressions, AcUtils}
@@ -12,18 +10,9 @@ import graft.operators.DictTagOps
   * position, overlapping included) on adversarial fixtures and the real
   * corpus — the Spark-side half of the proof whose DuckDB half is the
   * x143 oracle hash. */
-class AcParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class AcParitySpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   /** Naive reference: overlapping occurrence count by stepping one
     * character past each match start. */

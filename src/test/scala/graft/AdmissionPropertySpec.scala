@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DedupOps, NearDupIndex}
@@ -16,17 +15,7 @@ import graft.operators.{DedupOps, NearDupIndex}
   * an ALL-PAIRS signature-estimate maximum over band-colliding pairs
   * (re-derived from the public minhash/banding kernels). Also pins the
   * EdgeLadder primitives' boundary behavior. */
-class AdmissionPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AdmissionPropertySpec extends AnyFunSuite with SparkSuite {
 
   private def corpus(seed: Long, n: Int): DataFrame = {
     val s = spark

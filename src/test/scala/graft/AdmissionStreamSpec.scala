@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AnnAdmitIndex, IvfOps, NearDupIndex,
@@ -15,17 +13,7 @@ import graft.operators.{AnnAdmitIndex, IvfOps, NearDupIndex,
   * manifest against the PRE-batch index state, then both indexes
   * extended — with the replay guard that keeps a recomputed manifest
   * from reading its own batch back out of the index. */
-class AdmissionStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AdmissionStreamSpec extends AnyFunSuite with SparkSuite {
 
   private val seed =
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"

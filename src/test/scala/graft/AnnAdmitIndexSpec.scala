@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AnnAdmitIndex, IvfOps}
@@ -13,17 +11,7 @@ import graft.operators.{AnnAdmitIndex, IvfOps}
   * post), replay idempotency by name — surviving tail compaction via
   * covered.json — and the NearDupIndex tail-compaction invariants
   * (base never rewritten, probes identical across the merge). */
-class AnnAdmitIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AnnAdmitIndexSpec extends AnyFunSuite with SparkSuite {
 
   private val model = IvfOps.IvfModel(
     Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0)))

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -13,19 +11,9 @@ import graft.streaming.AnnIndexStream
 /** Incremental index maintenance: postings streamed in micro-batches
   * under a frozen quantizer must equal the offline-rebuilt index — row
   * for row AND probe for probe. */
-class AnnIndexStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnIndexStreamSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("stream-ingested postings == offline index; probe results identical") {
     val s = spark

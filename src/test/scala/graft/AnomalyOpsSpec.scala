@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AnomalyOps
@@ -12,20 +10,12 @@ import graft.operators.AnomalyOps
   * exact integer accounting, quiet hours must count as ZERO baseline
   * observations (the densification contract), and the cold-start guard
   * must suppress early-history false positives. */
-class AnomalyOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnomalyOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   // an exact hour boundary so hour_epoch arithmetic is transparent
   private val h0 = 472224L // hours since epoch
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** (type, hour offset, count) triples → an events frame. */
   private def eventsOf(rows: Seq[(String, Int, Int)]) = {

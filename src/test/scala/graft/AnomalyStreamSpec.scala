@@ -3,9 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AnomalyOps
@@ -17,19 +15,9 @@ final case class TypedEvent(event_type: String, ts: Timestamp)
   * the same rows, and burst-verdict-on-read over the live table equals
   * the batch burstReport — including a burst that only MATERIALIZES
   * once later arrivals extend the baseline. */
-class AnomalyStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnomalyStreamSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val h0 = 472224L
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def ev(rows: Seq[(String, Int, Int)]): Seq[TypedEvent] =
     rows.flatMap { case (t, h, n) =>

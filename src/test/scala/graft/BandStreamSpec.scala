@@ -2,10 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.BandStream
@@ -17,18 +15,7 @@ final case class BandR(k: String, r_id: Long, r_v: Double, r_ts: Timestamp)
   * stream-stream join and (b) produce exactly the batch answer of the
   * same function — including band boundaries, bucket crossings, and the
   * time-lag cut. */
-class BandStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BandStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.BpeOps
@@ -10,18 +8,9 @@ import graft.operators.BpeOps
 /** BPE trainer/applier vs a direct driver-side reference implementation
   * (greedy left-to-right merge over (word, freq) maps), plus the
   * deterministic tie-break and early-exhaustion contracts. */
-class BpeOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BpeOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   /** Driver-side reference: classic Sennrich BPE over a word-frequency
     * map — pair counts, (count desc, l, r) selection, greedy

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{BpeRanks, BpeUtils}
@@ -14,20 +12,12 @@ import graft.operators.BpeOps
   * re-pins this cross-engine), on adversarial rank-order fixtures, and
   * on a PRODUCTION-SIZED (≥512-merge) trained table where a chained
   * expression tree stops being a practical plan. */
-class BpeParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class BpeParitySpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private val sfDir = "/root/testdata/sf0.001"
   private val SEP = BpeOps.SEP
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** The chained-replace semantics in plain Scala — java
     * `String.replace` substitutes non-overlapping occurrences

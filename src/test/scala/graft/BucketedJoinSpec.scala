@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -13,18 +11,9 @@ import graft.sources.DatasetIO
   * key must equi-join with NO Exchange on either side, and produce the
   * same rows as the plain join. This is the co-located-join layout the
   * 100 TB posture leans on for repeated joins against a hot key. */
-class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedJoinSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("same-bucket-count equi-join plans with zero Exchange and matches the plain join") {
     val base = java.nio.file.Files.createTempDirectory("graft-buckets").toString

@@ -3,9 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{BucketedState, Schemas}
@@ -15,20 +13,10 @@ import graft.operators.MergeOps
   * merge would, and (b) physically leave unaffected bucket directories
   * untouched — that's the O(batch) rewrite property that survives the
   * 100 TB scale-up. */
-class BucketedStateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedStateSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val t2 = Timestamp.valueOf("2024-01-02 00:00:00")
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("bucketed merge equals full merge and rewrites only affected buckets") {
     val s = spark

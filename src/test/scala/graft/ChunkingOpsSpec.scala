@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DedupOps, TextOps}
@@ -11,17 +9,7 @@ import graft.operators.{DedupOps, TextOps}
   * passage-level duplication (x42), bigram statistics (x43), the
   * quantile length gate (x44), and the Bloom-prefiltered
   * decontamination's equality with the exact form (x40). */
-class ChunkingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ChunkingOpsSpec extends AnyFunSuite with SparkSuite {
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -2,9 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ClassifyOps
@@ -13,18 +11,7 @@ import graft.streaming.ClassifyStream
 /** Classify-on-ingest: streamed NB predictions equal the batch scorer's
   * under the same offline-trained model; OOV tokens price at each
   * class's own cnt=0 smoothing cost; ties break alphabetically. */
-class ClassifyStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ClassifyStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

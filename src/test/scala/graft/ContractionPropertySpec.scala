@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupOps
@@ -16,17 +15,7 @@ import graft.operators.DedupOps
   * can't provide: the closed-form clique terms of x158/x160 (including
   * the keep-lowest orientation-split window) are checked against a
   * plain groupBy over the fully expanded pair relation. */
-class ContractionPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ContractionPropertySpec extends AnyFunSuite with SparkSuite {
 
   /** Small-vocab corpus with dup cliques: ~n base docs of 1..9 words
     * (sub-shingle lengths included — the eligibility edge; never empty,

@@ -3,30 +3,23 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CopyOps
 
 /** S8/T3: copy sink with validation + overwrite flags; T4 queue drain. */
-class CopyOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CopyOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var dir: Path = _
   private val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     dir = Files.createTempDirectory("graft_copy")
     Files.write(dir.resolve("src.txt"), "copy me".getBytes)
     Files.write(dir.resolve("existing.txt"), "already here".getBytes)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("T3 selection computes destination with coalesce(new_name, basename)") {
     val s = spark

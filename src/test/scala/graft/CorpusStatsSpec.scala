@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps
@@ -10,17 +8,7 @@ import graft.operators.TextOps
 /** Corpus-statistics operators: PMI collocations (x74) and friends —
   * closed-form fixtures pin the exact micro-nat scores; the real-corpus
   * tests pin ordering, count floors, and determinism. */
-class CorpusStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CorpusStatsSpec extends AnyFunSuite with SparkSuite {
 
   test("PMI: closed-form single-doc fixture matches hand arithmetic") {
     val s = spark

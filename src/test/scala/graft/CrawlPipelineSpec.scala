@@ -3,9 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.StateStore
@@ -15,24 +13,17 @@ import graft.server.CrawlPipeline.Config
 
 /** End-to-end slice (SURVEY §7.2): crawl a real fixture tree → merge →
   * hash → flagship duplicate query → change tracking on re-crawl. */
-class CrawlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CrawlPipelineSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private var fixture: Path = _
   private var stateDir: Path = _
   private val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val t2 = Timestamp.valueOf("2024-01-02 00:00:00")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("crawl-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    super.beforeAll()
     fixture = Files.createTempDirectory("graft_fixture")
     stateDir = Files.createTempDirectory("graft_state")
     // tree:  root/{a.bin, b.bin(dup of a), sub/{c.bin, d.bin(dup of a)}, empty/}
@@ -43,8 +34,6 @@ class CrawlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(sub.resolve("c.bin"), "unique-content".getBytes)
     Files.write(sub.resolve("d.bin"), "duplicate-content".getBytes)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def state = new StateStore(spark, stateDir.toString)
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -12,18 +10,9 @@ import graft.operators.CurationOps
   * language, Gopher gates match hand-computed rules, the KS statistic
   * is a true max-CDF-gap, fertility ratios are consistent sums, and
   * mixture planning flags oversubscription exactly. */
-class CurationOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurationOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("dsirWeights: en documents average a higher importance weight than non-en") {
     val docs = Tables.documents(spark, sfDir)

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CurationOps
@@ -15,18 +13,7 @@ final case class GateDoc(doc_id: Long, text: String)
   * stateless end of the streaming-curation spectrum; MixtureStreamSpec
   * and DecontaminationStreamSpec run the stateful end the same way —
   * `mixturePlan` and `decontaminationGate` on a watermarked stream). */
-class CurationStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CurationStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("gopherGates on a stream == gopherGates on the same batch") {
     val s = spark

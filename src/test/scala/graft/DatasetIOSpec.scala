@@ -2,25 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DatasetIO
 
 /** JSONL/CSV ingestion with quarantine, and bounded-shard partitioned
   * output: nothing lost, nothing silently dropped. */
-class DatasetIOSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DatasetIOSpec extends AnyFunSuite with SparkSuite {
 
   test("jsonl: valid rows parse, malformed and null-key lines quarantine with the raw line") {
     val dir = Files.createTempDirectory("graft_jsonl")

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupOps
@@ -10,17 +8,7 @@ import graft.operators.DedupOps
 /** Connected-component duplicate clustering: min-label propagation must
   * cover chain components (the worst case for per-round propagation) and
   * leave singletons self-labeled. */
-class DedupClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DedupClusterSpec extends AnyFunSuite with SparkSuite {
 
   test("chain + pair + singleton resolve to min-id clusters") {
     val s = spark

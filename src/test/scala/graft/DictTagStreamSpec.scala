@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DictTagOps
@@ -14,18 +12,7 @@ final case class TagDoc(doc_id: Long, text: String)
   * arrival prefix the streamed per-term table equals the batch
   * [[DictTagOps.dictionaryTags]] on the same rows — the sums merge law
   * — including the zero rows of never-matched terms. */
-class DictTagStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DictTagStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def snap(df: org.apache.spark.sql.DataFrame) =
     df.collect()

@@ -2,9 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{SearchOps, Views}
@@ -14,18 +13,13 @@ import graft.operators.{SearchOps, Views}
   * md5-fallback (sha1 missing on either side) and the flag-gated
   * name-match, which the derived TPC-H catalog can't reach (its hash rows
   * always carry both digests). */
-class DuplicateSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DuplicateSearchSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var vwLl: DataFrame = _
   private val t = Timestamp.valueOf("2024-01-01 00:00:00")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     vwLl = catalog(
       Seq((1L, "/fixture"), (2L, "/fixture/a"), (3L, "/fixture/b"),
         (4L, "C:\\fx"), (5L, "C:\\fx\\sub")),
@@ -64,7 +58,6 @@ class DuplicateSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
         "timestamp'2024-01-01' AS sha1_hash_time")
     Views.vwLl(directory, file, hash)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def names(df: DataFrame): Seq[String] =
     df.collect().map(_.getAs[String]("name")).sorted.toSeq

@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ExperimentOps
@@ -11,18 +9,9 @@ import graft.operators.ExperimentOps
 /** A/B readout (x134): the engine's 2×2 accounting and G² must equal a
   * driver-side reference sharing the hash split, and the statistic must
   * separate a planted arm effect from an arm-independent one. */
-class ExperimentOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExperimentOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   /** Driver-side twin of HashFunctions.hash60 % 2. */
   private def arm(userId: Long): Long = {

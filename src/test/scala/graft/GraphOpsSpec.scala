@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphOps
@@ -10,19 +8,11 @@ import graft.operators.GraphOps
   * reference running the same floor arithmetic, hubs must rank first on
   * a known topology, and total mass must be conserved up to the floor
   * losses (≤ deg·its per node). */
-class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private val unit = 1000000000000L
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Driver-side reference: identical integer iteration. */
   private def referenceRanks(pairs: Seq[(Long, Long)],

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.IntegrityOps
@@ -10,17 +8,7 @@ import graft.operators.IntegrityOps
   * warehouse audits consistent (what the gate's hash then pins per
   * round — if the generator ever ships dangling keys, the audit is the
   * operator that says so). */
-class IntegrityOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class IntegrityOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("planted orphans and null FKs count by row and by key") {
     val s = spark

@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.IntegrityOps
@@ -15,18 +13,7 @@ final case class ChildRow(row_id: Long, fk: java.lang.Long)
   * key-compressed panel finished through the SAME
   * IntegrityOps.auditFromPanel equals the batch edge audit on every
   * arrival prefix. */
-class IntegrityStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class IntegrityStreamSpec extends AnyFunSuite with SparkSuite {
 
   // parent keys 1..5; children reference 1..7 (6,7 dangle) plus NULLs
   private val batch1: Seq[ChildRow] =

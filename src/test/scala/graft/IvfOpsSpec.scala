@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -10,18 +8,11 @@ import graft.operators.{IvfOps, SimilarityOps}
 
 /** IVF ANN: deterministic across runs, and recall against the exact
   * brute-force top-K is meaningfully above chance. */
-class IvfOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IvfOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("ivf topK is deterministic and recalls most exact neighbors") {
     val emb = Tables.embeddings(spark, sfDir)

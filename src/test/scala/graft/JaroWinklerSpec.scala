@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.SimilarityFunctions
@@ -13,17 +11,7 @@ import graft.functions.SimilarityFunctions
   * 0.7). The oracle gate (x51) separately pins bit-parity against DuckDB
   * itself; this spec pins the expression's own contract, including
   * codegen evaluation and null handling. */
-class JaroWinklerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class JaroWinklerSpec extends AnyFunSuite with SparkSuite {
 
   // independent reference implementation over chars (== bytes for ASCII)
   private def refJw(s1: String, s2: String): Double = {

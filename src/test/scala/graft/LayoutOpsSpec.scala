@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.LayoutOps
@@ -10,18 +8,9 @@ import graft.operators.LayoutOps
 /** Zone-map layout audit (x126): on a uniform 2-D grid the Morton layout
   * must prune BOTH dimensions at ~√(1/files) while the linear layout
   * prunes only its own sort key; accounting must be exact. */
-class LayoutOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LayoutOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   /** 64×64 uniform grid, one row per cell — the textbook Morton case. */
   private def grid() = {

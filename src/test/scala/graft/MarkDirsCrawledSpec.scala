@@ -2,9 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ScheduleOps
@@ -13,18 +12,7 @@ import graft.operators.ScheduleOps
   * counts/schedule/claim-clear; untouched rows are preserved under the
   * reference defaults, and the pipeline's claim-free flags relax exactly
   * the two documented dimensions (claims, missing flags) — nothing else. */
-class MarkDirsCrawledSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MarkDirsCrawledSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
   private val asOf = ts("2024-02-01 00:00:00")

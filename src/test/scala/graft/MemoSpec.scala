@@ -6,12 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Memo, StateStore}
+import graft.core.{GraftSession, Memo, StateStore}
 import graft.operators.{AnnAdmitIndex, DedupOps, IvfOps}
 
 /** The session memo's lifetime contract. Pins: one checkpoint per
@@ -21,20 +19,7 @@ import graft.operators.{AnnAdmitIndex, DedupOps, IvfOps}
   * paths must invalidate plan-keyed values or a pinned search scans
   * pre-swap rows. Session values (catalog, models, index fixtures)
   * survive invalidation, nest, and are released with their session. */
-class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  private def newSession(): SparkSession = {
-    val s = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  override def beforeAll(): Unit = spark = newSession()
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MemoSpec extends AnyFunSuite with SparkSuite {
 
   test("same semantic plan pins once; different data pins separately") {
     val s = spark
@@ -127,7 +112,7 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally pool.shutdown()
   }
 
-  // stops the suite's session: keep it last
+  // the last two tests stop the suite's session: keep them last
   test("a stopped session's session and byPlan values are released " +
       "(AnnAdmitIndex.loadModel)") {
     val s = spark
@@ -143,11 +128,24 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (sessionVals, planVals) = Memo.entries(s)
     assert(sessionVals >= 1 && planVals >= 1)
     s.stop()
-    spark = newSession()
+    spark = startSession()
     assert(!(spark eq s))
     val m2 = AnnAdmitIndex.loadModel(spark, root)
     assert(Memo.entries(s) === ((0, 0)), "the stopped session's values are swept")
     assert(!(m2 eq m1) && m2.centroids.map(_.toSeq).toSeq === m1.centroids.map(_.toSeq).toSeq)
     assert(Memo.entries(spark)._1 === 1)
+  }
+
+  // no other session may be live here: getOrCreate would return it
+  test("GraftSession(cores) sizes master and shuffle partitions from one " +
+      "cores value, in UTC, with the graft SQL functions") {
+    spark.stop()
+    spark = GraftSession(3)
+    assert(spark.sparkContext.master === sys.env.getOrElse("SPARK_MASTER", "local[3]"))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "3")
+    val conf = spark.sparkContext.getConf
+    assert(conf.getOption("spark.sql.session.timeZone") === Some("UTC"))
+    assert(conf.getOption("spark.ui.enabled") === Some("false"))
+    assert(spark.sql("SELECT basename_fast('/a/b.txt')").head().getString(0) === "b.txt")
   }
 }

@@ -2,29 +2,18 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MergeOps
 
 /** M1/M4 merge edge cases: null-safe change detection, in-batch dedup,
   * deterministic id assignment, change-aware hash upsert. */
-class MergeOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MergeOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val t2 = Timestamp.valueOf("2024-01-02 00:00:00")
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def currentFiles: DataFrame = {
     val s = spark

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CurationOps
@@ -12,18 +10,7 @@ final case class LangDoc(doc_id: Long, text: String, lang: String)
 /** Mixture monitoring on ingest: after every prefix of arrivals, the
   * streamed plan equals the batch planner on the same rows — including
   * the oversubscribed flag flipping as availability accumulates. */
-class MixtureStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MixtureStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def snapshot(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MultimodalOps
@@ -10,18 +8,12 @@ import graft.operators.MultimodalOps
 /** Multimodal plumbing: schemas, batch shapes, and the REAL header codec
   * (magic-byte detection + PNG/JPEG/GIF dimension parsing) — verified
   * against genuine encoder output from the JDK's own ImageIO writers. */
-class MultimodalOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class MultimodalOpsSpec extends AnyFunSuite with SparkSuite {
 
   override def beforeAll(): Unit = {
     System.setProperty("java.awt.headless", "true")
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def payloads = {
     val s = spark

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.NearDupIndex
@@ -13,17 +11,7 @@ import graft.operators.NearDupIndex
   * fixture, epoch extension, and the crash-anywhere promotion states
   * (an epoch written but never promoted must be invisible; old versions
   * must survive promotion for rollback). */
-class NearDupIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
 
   private val a12 =
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"

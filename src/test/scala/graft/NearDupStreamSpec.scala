@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.NearDupIndex
@@ -12,17 +10,7 @@ import graft.operators.NearDupIndex
 /** Streaming admission into the persisted near-dup index: one epoch
   * per micro-batch, replayed batches are no-ops by epoch NAME, and a
   * crashed half-committed attempt rebuilds deterministically. */
-class NearDupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class NearDupStreamSpec extends AnyFunSuite with SparkSuite {
 
   private val seed =
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"

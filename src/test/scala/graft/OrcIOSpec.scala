@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DatasetIO
@@ -10,18 +8,7 @@ import graft.sources.DatasetIO
 /** ORC source/sink: byte-faithful round-trip through the bounded-shard
   * partitioned layout, and pushdown parity with the parquet path
   * (filters reach the ORC scan; partition pruning works). */
-class OrcIOSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class OrcIOSpec extends AnyFunSuite with SparkSuite {
 
   test("orc round-trip preserves the corpus; filters push to the scan") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")

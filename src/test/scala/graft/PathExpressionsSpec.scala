@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftExtensions, PathExpressions, PathFunctions}
+import graft.functions.{PathExpressions, PathFunctions}
 
 /** The native codegen expressions must be BYTE-IDENTICAL to the regex
   * twins on every input class (the twins define the oracle semantics). */
-class PathExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PathExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private val inputs = Seq(
     "C:\\Windows\\calc.exe", "C:\\pagefile.sys", "C:\\", "C:",

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
@@ -12,21 +10,11 @@ import graft.functions.PathFunctions._
   * trailing slashes, dotless names, unicode — Column impls and their
   * pure-Scala twins must agree (the reference keeps the same dual
   * SQL/Python surface in sync: SQLUtil.py:163,182 ↔ API/Util.py:37,52). */
-class PathFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PathFunctionsSpec extends AnyFunSuite with SparkSuite {
 
   private def samples[T](g: Gen[T], n: Int = 200): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default,
       org.scalacheck.rng.Seed(i.toLong)))
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def evalCol(fn: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                       input: String): String = {

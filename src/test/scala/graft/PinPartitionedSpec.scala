@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupOps
@@ -17,18 +15,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * rows actually sit — plus the two things the declaration buys
   * (exchange-free aggregation and joins on the pinned key) and the two
   * things it must never change (row content, non-Local states). */
-class PinPartitionedSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PinPartitionedSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   private def base = spark.range(0, 1000)
     .select((col("id") % 97).as("k"), col("id").as("v"))

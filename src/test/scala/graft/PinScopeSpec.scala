@@ -4,9 +4,8 @@ import java.lang.ref.WeakReference
 import java.util.concurrent.CountDownLatch
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.PinScope
@@ -14,17 +13,7 @@ import graft.core.PinScope
 /** Per-invocation pins belong to the scope that was open when they were
   * made and live exactly until it closes — never tied to the thread that
   * made them. */
-class PinScopeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PinScopeSpec extends AnyFunSuite with SparkSuite {
 
   private def rows(n: Int): DataFrame = spark.range(n).toDF("id")
 

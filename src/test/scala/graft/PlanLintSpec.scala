@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Global plan lint: EVERY gate query's physical plan, one sweep, the
@@ -14,19 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Deliberately NOT asserted here: exchange/scan counts (plan-shape
   * details that belong to the per-query pins, where intent is known). */
-class PlanLintSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanLintSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Audited non-cross BNLJs — each one a BROADCAST SMALL SIDE by
     * design, not an accident (the Cross-tagged 1-row stats joins are

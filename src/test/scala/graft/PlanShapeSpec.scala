@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.ExistenceJoin
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.exchange.{Exchange, REBALANCE_PARTITIONS_B
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{SearchOps, Views}
@@ -24,19 +23,11 @@ import graft.operators.{SearchOps, Views}
   *   - scans: filter pushdown + column pruning reach the parquet reader;
   *   - catalog views: lookups scan the catalog's cached copy, no rebuild.
   */
-class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanShapeSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def physicalPlan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString

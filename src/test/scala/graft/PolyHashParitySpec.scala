@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.HashFunctions
@@ -13,17 +11,7 @@ import graft.functions.HashFunctions
   * (2- and 3-byte) code points, surrogate pairs, and null. The DSIR
   * family's feature hashing rides the native form; the DuckDB twin stays
   * the character fold, so this spec IS the cross-form contract. */
-class PolyHashParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PolyHashParitySpec extends AnyFunSuite with SparkSuite {
 
   private val inputs: Seq[String] = Seq(
     "", " ", "a", "ab", "ba", "the", "the quick brown fox",

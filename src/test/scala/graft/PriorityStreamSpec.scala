@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.HashFunctions
@@ -12,17 +10,7 @@ import graft.streaming.PriorityStream
 /** Streaming priority sampling: the live per-stratum weighted sample
   * after any prefix of batches equals the batch-side computation over
   * the rows seen so far, regardless of batch boundaries. */
-class PriorityStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PriorityStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("stream priority sample == batch reference after each batch; length bias holds") {
     val s = spark

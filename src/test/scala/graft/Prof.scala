@@ -1,22 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession
+
 /** Scratch profiler for optimization rounds: times labeled sub-stages of
-  * a query under the bench's exact session shape. Not part of the driver
-  * contract; keep out of artifacts. */
+  * a query under the bench's exact session shape, by construction: both
+  * start theirs with `GraftSession.fromEnv()` (run it with the bench's
+  * `SPARK_GRAFT_CPUS`). Not part of the driver contract; keep out of
+  * artifacts. */
 object Prof {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     def checksum(df: org.apache.spark.sql.DataFrame): Long = {
       val r = df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
         .agg(expr("bit_xor(h)"), count(lit(1))).collect()

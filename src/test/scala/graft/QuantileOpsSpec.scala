@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.QuantileOps
@@ -12,18 +10,9 @@ import graft.operators.QuantileOps
   * rank-ordered definition — driver-side sort reference on adversarial
   * domains (full-int64 extents, heavy duplicates, singletons) and the
   * window form on the real events fixture. */
-class QuantileOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QuantileOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   private val ps = Seq("p10" -> 0.10, "p50" -> 0.50, "p99" -> 0.99)
 

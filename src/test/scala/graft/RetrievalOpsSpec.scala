@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -10,17 +8,7 @@ import graft.operators.{DedupOps, RetrievalOps}
 
 /** BM25 scoring cross-checked against a plain-Scala reference, plus the
   * edit-distance LSH verifier's contract on planted near-dups. */
-class RetrievalOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RetrievalOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("bm25TopK matches a plain-Scala BM25 implementation exactly (micros)") {
     val s = spark

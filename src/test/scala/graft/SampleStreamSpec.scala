@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SamplingOps
@@ -12,17 +10,7 @@ import graft.streaming.SampleStream
 /** Streaming bottom-k sampling: the live sample after any prefix of
   * batches equals the batch aggregate over the rows seen so far,
   * regardless of arrival order or batch boundaries. */
-class SampleStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SampleStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("stream sample == batch bottomKSampleAgg after each batch; unchanged strata stay silent") {
     val s = spark

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -10,18 +8,9 @@ import graft.operators.SamplingOps
 
 /** Deterministic hash splitting: content-stable membership, correct
   * proportions, and insensitivity to the rest of the dataset. */
-class SamplingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SamplingOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("train/val/test covers every row once with roughly 90/5/5 shares") {
     val docs = Tables.documents(spark, sfDir)

@@ -2,9 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps
@@ -12,18 +10,7 @@ import graft.streaming.ScoreStream
 
 /** Score-on-ingest: streamed per-doc LM scores equal the batch scorer's
   * on the same rows; OOV tokens take the smoothing cost, not a drop. */
-class ScoreStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ScoreStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

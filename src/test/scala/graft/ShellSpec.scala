@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.Shell
@@ -13,9 +11,8 @@ import graft.operators.MergeOps
 import graft.server.CrawlPipeline
 
 /** CLI dispatch over a tiny in-state catalog. */
-class ShellSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ShellSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var state: StateStore = _
   private var blobPath: String = _
   private val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
@@ -23,11 +20,7 @@ class ShellSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def shell = new Shell(state, lines.append(_))
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     state = new StateStore(spark, Files.createTempDirectory("graft_shell").toString)
     val s = spark
     import s.implicits._
@@ -53,7 +46,6 @@ class ShellSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     CrawlPipeline.seedDrives(state, Seq("/data", "/data/sub"), t1)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("search name with wildcard finds the file; output capped table") {
     lines.clear()

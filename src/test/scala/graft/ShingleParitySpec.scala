@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupOps
@@ -11,17 +9,7 @@ import graft.operators.DedupOps
   * higher-order-function chain (the documented/oracle semantics) on every
   * input class — including the corner cases where Java and Spark string
   * semantics diverge (trim scope, empty tokens, newlines). */
-class ShingleParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ShingleParitySpec extends AnyFunSuite with SparkSuite {
 
   private val inputs: Seq[String] = Seq(
     "the quick brown fox jumps", "a b c", "a b", "a", "",

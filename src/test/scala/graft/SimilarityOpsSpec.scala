@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SimilarityOps
@@ -10,16 +9,14 @@ import graft.operators.SimilarityOps
   * declarative fold ([[SimilarityOps.cosineDupPairs]]), the small-corpus
   * broadcast kernel, and the tiled (no-driver-collect) block form that is
   * the scale/default path. */
-class SimilarityOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SimilarityOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private var emb: DataFrame = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     val s = spark
     import s.implicits._
     // deterministic pseudo-random 16-dim vectors, ids NOT aligned to the
@@ -33,7 +30,6 @@ class SimilarityOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, v)
     }.toDF("vec_id", "embedding").cache()
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def pairs(df: DataFrame): Seq[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq

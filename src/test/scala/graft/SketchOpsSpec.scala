@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SketchOps
@@ -12,18 +10,9 @@ import graft.operators.SketchOps
   * registers must obey the sketch merge law (max-merge of split halves
   * == registers of the whole), and the error must sit inside the
   * published 1.04/√m envelope on a known-cardinality fixture. */
-class SketchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   /** Driver-side reference: identical md5 hash, registers, estimator. */
   private def referenceHll(items: Seq[String], m: Int): Long = {

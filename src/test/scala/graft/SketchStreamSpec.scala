@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SketchOps
@@ -15,18 +13,7 @@ final case class SketchEvent(grp: String, item: String)
   * same rows, estimate-on-read over the live table equals the batch
   * gate's estimate, and a replayed micro-batch moves nothing (max is
   * idempotent). */
-class SketchStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SketchStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def regSnapshot(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2)))

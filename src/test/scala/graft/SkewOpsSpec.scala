@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SkewOps
 
 /** Salting must preserve exact results while spreading hot keys. */
-class SkewOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SkewOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   test("salted count equals plain groupBy count on a skewed key") {
     val s = spark

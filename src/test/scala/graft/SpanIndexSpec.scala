@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{SpanIndex, SubstringOps}
@@ -13,17 +11,7 @@ import graft.operators.{SpanIndex, SubstringOps}
   * keep-first bill must equal the one-shot x181 bill when the indexed
   * corpus precedes the batch, epochs hold disjoint hashes, replay is a
   * no-op by name, and the crash-anywhere promotion states hold. */
-class SpanIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SpanIndexSpec extends AnyFunSuite with SparkSuite {
 
   // 12-word sentences over distinct vocabularies; w = 8 windows
   private val a =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupOps.Unpinned
@@ -10,18 +8,9 @@ import graft.operators.SpectralOps
 /** Power-iteration top component (x127): the engine must equal a
   * driver-side reference running the same integer arithmetic, recover a
   * planted dominant direction, and report its Rayleigh eigenvalue. */
-class SpectralOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SpectralOpsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores: Int = 4
 
   /** Driver-side reference: identical snap/shrink/normalize integers. */
   private def reference(vecs: Seq[Array[Float]],

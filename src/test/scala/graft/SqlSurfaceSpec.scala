@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables.FsCatalog
-import graft.functions.{GraftExtensions, PathFunctions}
+import graft.functions.PathFunctions
 import graft.operators.{SearchOps, Views}
 
 /** Name-parity SQL surface: a reference user's raw SQL — Postgres view
@@ -13,24 +11,19 @@ import graft.operators.{SearchOps, Views}
   * (`basename`, `basepath`, `extension`), and the native `*_fast`
   * extensions — must run through `spark.sql` unchanged and agree with
   * the operator API. */
-class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     PathFunctions.registerSql(spark)
     Views.registerAll(
       FsCatalog.directory(spark, sfDir), FsCatalog.file(spark, sfDir),
       FsCatalog.hash(spark, sfDir), FsCatalog.fileCategory(spark))
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("search_name as raw SQL over vw_ll equals the operator result") {
     val sql = spark.sql(

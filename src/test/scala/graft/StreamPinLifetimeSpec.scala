@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.PinScope
@@ -14,17 +12,7 @@ import graft.operators.NearDupIndex
   * body runs in its own [[PinScope]], so the signing pins of
   * `NearDupIndex.extendEpoch` are freed when their batch ends instead of
   * accumulating for the life of the query. */
-class StreamPinLifetimeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamPinLifetimeSpec extends AnyFunSuite with SparkSuite {
 
   test("micro-batches after the second leave no persistent RDD behind") {
     val s = spark

@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.StateStore
@@ -14,20 +12,10 @@ import graft.streaming.StreamingIngest
 
 /** Structured-Streaming ingest (§2.9): staged drops → micro-batch →
   * idempotent merge; replay converges (exactly-once posture). */
-class StreamingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingIngestSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val t2 = Timestamp.valueOf("2024-01-02 00:00:00")
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def rec(kind: String, parent: String, name: String,
                   size: String = null): ScrapeRecord =

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SubstringOps
@@ -12,17 +10,7 @@ import graft.operators.SubstringOps
   * adjacency boundary, splitting past it, and the fully-duplicated
   * degenerate case; the real-corpus test pins x72/x73 consistency
   * (removed tokens == total span width, spans disjoint and in range). */
-class SubstringOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SubstringOpsSpec extends AnyFunSuite with SparkSuite {
 
   private def toks(ts: Seq[String]) = ts.mkString(" ")
   private val sRun = (1 to 10).map(i => s"s$i") // shared 10-token run (A, B)

@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps
 
 /** Edge semantics of the round-4 text operators: redaction boundaries,
   * repetition-ratio extremes, and top-term scoring/tie-breaks. */
-class TextOpsEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TextOpsEdgeSpec extends AnyFunSuite with SparkSuite {
 
   test("dedup family is whitespace-robust: runs of mixed whitespace tokenize like single spaces") {
     val s = spark

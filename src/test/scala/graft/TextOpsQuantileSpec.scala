@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -12,18 +10,9 @@ import graft.operators.TextOps
   * sketch the 100 TB path swaps in (`approx_percentile`, t-digest) must
   * agree on the fixture corpus — the evidence that the swap preserves
   * the profile a curation run acts on. */
-class TextOpsQuantileSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TextOpsQuantileSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("rank quantiles are ordered and bounded by the per-lang extremes") {
     val docs = Tables.documents(spark, sfDir)

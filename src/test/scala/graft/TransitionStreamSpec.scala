@@ -2,9 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{EventStreams, TransitionStream}
@@ -14,18 +12,7 @@ import graft.streaming.TransitionStream.{EvIn, Transition}
   * pairs must equal the batch window's pairs — gap cuts, (ts, event_id)
   * tiebreak, and cross-batch state included — and idle-user state must
   * expire via the watermark. */
-class TransitionStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TransitionStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.operators.TwoPhase]] — the scale-safe two-phase replacement
@@ -13,19 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * forms they replace (running sum / row_number / partition total /
   * exclusive running max), so the x126/x129/x137 rewrites could not
   * change a single output row. */
-class TwoPhaseSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TwoPhaseSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores: Int = 4
+
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SimilarityOps
@@ -10,17 +8,7 @@ import graft.operators.SimilarityOps
 /** The native codegen dot product must be BIT-identical to the HOF fold
   * (same multiplies, same left-to-right summation order) on float arrays
   * — including values where summation order matters in IEEE arithmetic. */
-class VectorParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class VectorParitySpec extends AnyFunSuite with SparkSuite {
 
   test("dot_fast bit-equals the HOF fold on adversarial float vectors") {
     val s = spark

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native one-pass window-hash kernel
@@ -12,17 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * row-for-row: same (doc_id, pos, whash) triples — chained-seed
   * xxhash64 VALUES, not just equality classes — on empty, short,
   * exact-w, multibyte, repeated-token, and real fixture inputs. */
-class WindowHashParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WindowHashParitySpec extends AnyFunSuite with SparkSuite {
 
   private val inputs: Seq[String] = Seq(
     "", " ", "one", "one two", "a b c d e f g h",          // exactly w=8

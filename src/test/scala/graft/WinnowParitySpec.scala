@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps
@@ -11,17 +9,7 @@ import graft.operators.TextOps
   * on every input class: empty, shorter-than-k, trim-scope corners,
   * repeated text (distinct collapse order), multibyte code points, and
   * the real fixture corpus. */
-class WinnowParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WinnowParitySpec extends AnyFunSuite with SparkSuite {
 
   private val inputs: Seq[String] = Seq(
     "", " ", "    ", "a", "ab", "abcd", "abcde", "abcdef",

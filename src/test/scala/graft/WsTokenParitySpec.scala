@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextExpressions
@@ -12,17 +10,7 @@ import graft.operators.TextOps
   * input class: mixed whitespace runs, edge whitespace, empties,
   * vertical tab (NOT a separator, by the regex-parity contract),
   * multi-byte unicode, and NULLs — plus the whole fixture corpus. */
-class WsTokenParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WsTokenParitySpec extends AnyFunSuite with SparkSuite {
 
   test("adversarial strings: native count == split count") {
     val s = spark

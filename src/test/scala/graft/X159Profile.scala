@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 /** One-off attribution harness for x159's residual cost (Test scope):
   * times each stage of clusterCorrectedDsir in isolation at a given SF
@@ -10,10 +12,7 @@ import org.apache.spark.sql.functions._
 object X159Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.core.Tables.documents(spark, sfDir)
     docs.count() // warm scan

@@ -362,7 +362,8 @@ def admit_probe(corpus_dir, root, mode="near", nin_scale=0):
     hazard, and (for the embed tier at 100x500 rows) the end-to-end
     exercise of the distributed probe path above ProbeAuto's 8192
     threshold."""
-    env = dict(os.environ, SPARK_GRAFT_COMPACT_TARGET="1000000")
+    env = dict(os.environ, SPARK_GRAFT_CPUS="28",
+               SPARK_GRAFT_COMPACT_TARGET="1000000")
     if nin_scale > 1:
         env["SPARK_GRAFT_NIN_SCALE"] = str(nin_scale)
     out = subprocess.run(
@@ -383,7 +384,8 @@ def reliable_probe():
     out = subprocess.run(
         ["sbt", "-batch", f"runMain graft.ReliableStateSmoke {SF1}"],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        capture_output=True, text=True, check=True).stdout
+        capture_output=True, text=True, check=True,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="28")).stdout
     line = [ln.removeprefix("[info] ").strip()
             for ln in out.splitlines()
             if ln.removeprefix("[info] ").strip()
