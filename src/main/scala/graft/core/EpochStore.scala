@@ -1,6 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Epoch-sharded manifest store — the commit protocol shared by the
   * persisted incremental indexes ([[graft.operators.NearDupIndex]],
@@ -208,6 +212,40 @@ object EpochStore {
           case _ => true
         })
     }
+
+  /** Reads epoch-table directories `paths` (all written with one schema)
+    * as one relation, WITHOUT a schema-inference Spark job: a plain
+    * `spark.read.parquet` starts one job per read to open a footer on
+    * an executor, while this reads the Spark schema Spark itself stored
+    * in the first part-file footer of `paths.head` (the
+    * `org.apache.spark.sql.parquet.row.metadata` key) on the driver and
+    * hands it to `spark.read.schema`. A directory with no part file, or
+    * a footer without the key, falls back to the inferring read. */
+  def readTable(spark: SparkSession, paths: Seq[String]): DataFrame =
+    footerSchema(spark, paths.head) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  private def footerSchema(spark: SparkSession,
+                           dir: String): Option[StructType] = {
+    import scala.jdk.CollectionConverters._
+    val d = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.isDirectory(d)) return None
+    val ls = java.nio.file.Files.list(d)
+    val part = try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      .toList.sorted.headOption
+    finally ls.close()
+    part.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HPath(d.resolve(p).toUri), spark.sessionState.newHadoopConf()))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+      finally reader.close()
+    }
+  }
 
   /** Epoch names embed in the hand-serialized manifest: an unvalidated
     * name containing a quote or comma would silently corrupt it (split

@@ -122,7 +122,7 @@ object AnnAdmitIndex {
   // never cached.
   def loadModel(spark: SparkSession, root: String): IvfOps.IvfModel = {
     def readAt(dir: String): IvfOps.IvfModel = {
-      val rows = spark.read.parquet(dir)
+      val rows = EpochStore.readTable(spark, Seq(dir))
         .orderBy("centroid_id").collect()
       IvfOps.IvfModel(rows.map(
         _.getAs[scala.collection.Seq[Double]]("cv").toArray))
@@ -139,7 +139,7 @@ object AnnAdmitIndex {
   private def load(spark: SparkSession, root: String): DataFrame = {
     val eps = postingsEpochs(committedEpochs(root))
     require(eps.nonEmpty, s"empty ANN admission index at $root")
-    spark.read.parquet(eps.map(e => s"$root/$e/postings"): _*)
+    EpochStore.readTable(spark, eps.map(e => s"$root/$e/postings"))
   }
 
   /** Build and promote the initial index over `emb` `(vec_id,
@@ -213,8 +213,9 @@ object AnnAdmitIndex {
     * admitted — the `verdict === "admitted"` rows of [[admit]], or
     * equivalently the manifest rows a four-tier streaming loop just
     * wrote (its persisted probe result), so the batch is ADC-probed
-    * once per micro-batch, mirroring the text tiers' Memo.pinned
-    * batch-signing memoization. The relation is evaluated ONLY on the
+    * once per micro-batch, as the text tiers are through their pinned
+    * [[NearDupIndex.Probe]] / [[SpanIndex.Probe]]. The relation is
+    * evaluated ONLY on the
     * commit path — a replayed (accounted) name returns false without
     * touching it, so a replay never probes an index that already
     * contains the batch.
@@ -370,8 +371,8 @@ object AnnAdmitIndex {
       val tail = posts.drop(1)
       if (tail.size < 2) graft.core.AtomicDir.current(root)
       else {
-        val merged = spark.read
-          .parquet(tail.map(e => s"$root/$e/postings"): _*)
+        val merged =
+          EpochStore.readTable(spark, tail.map(e => s"$root/$e/postings"))
         val covered = EpochStore.pruneCovered(tail.flatMap(e =>
           EpochStore.entryPath(e) +: EpochStore.coveredNames(root, e)),
           coveredFloor)
@@ -404,7 +405,7 @@ object AnnAdmitIndex {
   def stats(spark: SparkSession, root: String): DataFrame = {
     val rows = postingsEpochs(committedEpochs(root)).zipWithIndex
       .map { case (e, i) =>
-        (i, e, spark.read.parquet(s"$root/$e/postings").count())
+        (i, e, EpochStore.readTable(spark, Seq(s"$root/$e/postings")).count())
       }
     import spark.implicits._
     rows.toDF("position", "entry", "n_postings")

@@ -99,24 +99,33 @@ object NearDupIndex {
     * check must still see them — but have no sig/band postings. */
   private def signCorpus(df: DataFrame, text: Column)
       : (DataFrame, DataFrame, DataFrame) = {
-    val keyed = df.select(col("doc_id"), md5(text).as("fp"))
-      .filter(col("fp").isNotNull && col("doc_id").isNotNull)
-    val cliques = keyed.groupBy("fp")
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("weight"))
-    val repDocs = df.join(cliques.select(col("rep").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val sigs = minhashSignatures(repDocs, text)
+    val cliques = cliquesOf(df, text)
+    val sigs = repSigs(df, cliques, text)
     (cliques, sigs, lshBands(sigs))
   }
 
+  /** `(fp, rep, weight)`: per distinct content its md5, min-doc_id
+    * representative and copy count. */
+  private def cliquesOf(df: DataFrame, text: Column): DataFrame =
+    df.select(col("doc_id"), md5(text).as("fp"))
+      .filter(col("fp").isNotNull && col("doc_id").isNotNull)
+      .groupBy("fp")
+      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("weight"))
+
+  /** The MinHash signatures of the `cliques` representatives. */
+  private def repSigs(df: DataFrame, cliques: DataFrame,
+                      text: Column): DataFrame =
+    minhashSignatures(df.join(cliques.select(col("rep").as("doc_id")),
+      Seq("doc_id"), "left_semi"), text)
+
   /** [[signCorpus]] through [[graft.core.Memo.pinned]]: the analytic
-    * probe surfaces (admit / yield / audit /
-    * guarded / banding) all sign the SAME batch — memoizing by
-    * semantic plan signs it once per session, the memoPin discipline
-    * of the dedup kernels. NOT used on the write paths
-    * (build/extendEpoch): a streaming ingest signs a DIFFERENT batch
-    * every micro-batch, and per-batch pins would accumulate in the
-    * memo for the stream's lifetime. */
+    * probe surfaces (admit / yield / audit / guarded / banding) all sign
+    * the SAME batch — memoizing by semantic plan signs it once per
+    * session, the memoPin discipline of the dedup kernels. The write
+    * paths never use it: a streaming ingest signs a different batch
+    * every micro-batch (once, through [[probe]], pinned into the batch's
+    * scope), and session pins would accumulate for the stream's
+    * lifetime. */
   private def signCorpusPinned(df: DataFrame, text: Column)
       : (DataFrame, DataFrame, DataFrame) = {
     val (cliques, sigs, bands) = signCorpus(df, text)
@@ -157,6 +166,18 @@ object NearDupIndex {
   private case class Loaded(cliques: DataFrame, sigs: DataFrame,
                             bands: DataFrame)
 
+  private def readTable(spark: SparkSession, paths: Seq[String]): DataFrame =
+    graft.core.EpochStore.readTable(spark, paths)
+
+  /** The tombstoned fingerprints `(fp, __thresh)`: each tombstone's set
+    * with the count of data epochs committed before it. */
+  private def tombFpsOf(spark: SparkSession, root: String,
+                        tombs: Seq[(String, Int)]): DataFrame =
+    tombs.map { case (t, thresh) =>
+      readTable(spark, Seq(s"$root/$t/tombstones"))
+        .select(col("fp"), lit(thresh).as("__thresh"))
+    }.reduce(_ unionByName _)
+
   /** The LIVE view of the index: the union of the committed data
     * epochs with pending tombstones applied. A tombstone kills cliques
     * (and their rep's sig/band postings) from data epochs committed
@@ -179,17 +200,14 @@ object NearDupIndex {
           eps.take(i).count(!_.startsWith(TombPrefix)))
     }
     def tbl(which: String): DataFrame =
-      spark.read.parquet(dataE.map(e => s"$root/$e/$which"): _*)
+      readTable(spark, dataE.map(e => s"$root/$e/$which"))
     if (tombs.isEmpty)
       return Loaded(tbl("cliques"), tbl("sigs"), tbl("bands"))
     def posed(which: String): DataFrame = dataE.zipWithIndex.map {
-      case (e, i) => spark.read.parquet(s"$root/$e/$which")
+      case (e, i) => readTable(spark, Seq(s"$root/$e/$which"))
         .withColumn("__pos", lit(i))
     }.reduce(_ unionByName _)
-    val tombFps = tombs.map { case (t, thresh) =>
-      spark.read.parquet(s"$root/$t/tombstones")
-        .select(col("fp"), lit(thresh).as("__thresh"))
-    }.reduce(_ unionByName _)
+    val tombFps = tombFpsOf(spark, root, tombs)
     val posedCl = posed("cliques")
     val dead = posedCl.as("c").join(broadcast(tombFps).as("t"),
         col("c.fp") === col("t.fp") && col("c.__pos") < col("t.__thresh"))
@@ -225,16 +243,13 @@ object NearDupIndex {
     }
     if (present.isEmpty) return emptyRejections(spark)
     if (tombs.isEmpty)
-      return spark.read.parquet(
-        present.map { case (e, _) => s"$root/$e/rejections" }: _*)
+      return readTable(spark,
+        present.map { case (e, _) => s"$root/$e/rejections" })
         .select(col("fp"), col("n_rejected"))
     val posed = present.map { case (e, i) =>
-      spark.read.parquet(s"$root/$e/rejections").withColumn("__pos", lit(i))
+      readTable(spark, Seq(s"$root/$e/rejections")).withColumn("__pos", lit(i))
     }.reduce(_ unionByName _)
-    val tombFps = tombs.map { case (t, thresh) =>
-      spark.read.parquet(s"$root/$t/tombstones")
-        .select(col("fp"), lit(thresh).as("__thresh"))
-    }.reduce(_ unionByName _)
+    val tombFps = tombFpsOf(spark, root, tombs)
     val dead = posed.as("r").join(broadcast(tombFps).as("t"),
         col("r.fp") === col("t.fp") && col("r.__pos") < col("t.__thresh"))
       .select(col("r.fp").as("fp"), col("r.__pos").as("__pos")).distinct()
@@ -319,6 +334,26 @@ object NearDupIndex {
     pairEstimates(inSigs, inBands, idx)
       .groupBy("doc_id").agg(max(col("mc")).as("best_matches"))
 
+  /** The verdict rows of a signed batch against the loaded index —
+    * [[admit]]'s schema. */
+  private def verdictRows(inCl: DataFrame, inSigs: DataFrame,
+                          inBands: DataFrame, idx: Loaded,
+                          minMatches: Int): DataFrame = {
+    val best = bestEstimates(inSigs, inBands, idx)
+    inCl
+      .select(col("rep").as("doc_id"), col("fp").as("content_hash"),
+        col("weight").as("n_batch_copies"))
+      .join(idx.cliques.select(col("fp").as("content_hash"),
+        lit(1).as("__exact")).distinct(), Seq("content_hash"), "left")
+      .join(best, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("content_hash"), col("n_batch_copies"),
+        when(col("__exact").isNotNull, lit("dup_exact"))
+          .when(col("best_matches") >= minMatches, lit("dup_near"))
+          .otherwise(lit("admitted")).as("verdict"),
+        (coalesce(col("best_matches"), lit(0L)) * ppmPerMatch)
+          .as("best_est_ppm"))
+  }
+
   /** `pin = false` skips the session signing cache — REQUIRED for
     * per-micro-batch callers ([[graft.streaming.AdmissionStream]]):
     * each batch is a distinct plan, and its pin would sit in the
@@ -331,22 +366,10 @@ object NearDupIndex {
   private def admitImpl(incoming: DataFrame, root: String,
                         minMatches: Int, text: Column,
                         pin: Boolean): DataFrame = {
-    val idx = load(incoming.sparkSession, root)
     val (inCl, inSigs, inBands) =
       if (pin) signCorpusPinned(incoming, text) else signCorpus(incoming, text)
-    val best = bestEstimates(inSigs, inBands, idx)
-    val out = inCl
-      .select(col("rep").as("doc_id"), col("fp").as("content_hash"),
-        col("weight").as("n_batch_copies"))
-      .join(idx.cliques.select(col("fp").as("content_hash"),
-        lit(1).as("__exact")).distinct(), Seq("content_hash"), "left")
-      .join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("content_hash"), col("n_batch_copies"),
-        when(col("__exact").isNotNull, lit("dup_exact"))
-          .when(col("best_matches") >= minMatches, lit("dup_near"))
-          .otherwise(lit("admitted")).as("verdict"),
-        (coalesce(col("best_matches"), lit(0L)) * ppmPerMatch)
-          .as("best_est_ppm"))
+    val out = verdictRows(inCl, inSigs, inBands,
+      load(incoming.sparkSession, root), minMatches)
     // PROBE-ONCE (round 19, guide §2.1): the verdict relation is a
     // deterministic, batch-sized function of (batch plan, live index
     // paths, minMatches) — the manifest consumers (x174/x190/x191/
@@ -689,55 +712,91 @@ object NearDupIndex {
     graft.core.AtomicDir.current(root)
   }
 
-  /** [[extend]] under a CALLER-CHOSEN epoch name — the idempotent-replay
-    * form a streaming admitter needs ([[graft.streaming.NearDupStream]]
-    * names epochs by micro-batch id). A name already ACCOUNTED for by
-    * the committed manifest — present directly, or folded into a
-    * merged epoch by a compaction (its `covered.json`) — is a
-    * completed batch: returns false untouched, so a crash between a
-    * tail compaction and the streaming checkpoint cannot make the
-    * replay double-commit. A crashed earlier attempt (epoch staged or
-    * even moved into place, manifest never promoted) is rebuilt from
-    * scratch and atomically replaced — correct because the admitted
-    * set is a deterministic function of the COMMITTED manifest, which
-    * the crash did not advance. */
-  def extendEpoch(incoming: DataFrame, root: String, epochName: String,
-                  minMatches: Int = defaultMinMatches,
-                  text: Column = col("text")): Boolean =
+  /** One batch's probe of the live index, pinned into the caller's
+    * [[graft.core.PinScope]]: the batch's clique and signature relations
+    * and its [[admit]] verdict rows `(doc_id, content_hash,
+    * n_batch_copies, verdict, best_est_ppm)`, with the `CURRENT` token
+    * of the index state the verdicts were read from. The manifest
+    * ([[ShardAdmission.reportFullWith]]) and the epoch commit
+    * ([[commitEpoch]]) both read these pins, so the batch is signed and
+    * band-joined against the index once. */
+  final case class Probe(root: String, token: String, incoming: DataFrame,
+                         minMatches: Int, text: Column, cliques: DataFrame,
+                         sigs: DataFrame, verdicts: DataFrame) {
+    /** The band postings of the pinned signatures. */
+    def bands: DataFrame = lshBands(sigs)
+  }
+
+  /** Probes the live index at `root` with `incoming` (see [[Probe]]).
+    * The pins are eager: take a probe only when some consumer will read
+    * it (the streaming loop holds it in a `lazy val`). */
+  def probe(incoming: DataFrame, root: String,
+            minMatches: Int = defaultMinMatches,
+            text: Column = col("text")): Probe = {
+    val token = currentToken(root) // read before the manifest: never newer
+    val cliques = graft.core.PinScope.pin(cliquesOf(incoming, text))
+    val sigs = graft.core.PinScope.pin(repSigs(incoming, cliques, text))
+    val verdicts = graft.core.PinScope.pin(verdictRows(cliques, sigs,
+      lshBands(sigs), load(incoming.sparkSession, root), minMatches))
+    Probe(root, token, incoming, minMatches, text, cliques, sigs, verdicts)
+  }
+
+  /** Commits a probed batch's admitted contents as epoch `epochName` —
+    * the idempotent-replay form a streaming admitter needs
+    * ([[graft.streaming.NearDupStream]] names epochs by micro-batch id).
+    * A name already ACCOUNTED for by the committed manifest — present
+    * directly, or folded into a merged epoch by a compaction (its
+    * `covered.json`) — is a completed batch: returns false without
+    * evaluating `probe`, so a replay never probes an index that already
+    * holds the batch, and a crash between a tail compaction and the
+    * streaming checkpoint cannot make the replay double-commit. A
+    * crashed earlier attempt (epoch staged or even moved into place,
+    * manifest never promoted) is rebuilt from scratch and atomically
+    * replaced — correct because the admitted set is a deterministic
+    * function of the COMMITTED manifest, which the crash did not
+    * advance. A probe read from an older `CURRENT` than the one under
+    * the lock is taken again, so a stale probe is never committed.
+    *
+    * Every table derives from the pins: `cliques` = the `admitted`
+    * verdict rows, `rejections` (the ledger: exact-rejected batch
+    * copies, keyed by the indexed fingerprint they matched — their own
+    * fp, by exactness) = the `dup_exact` rows, `sigs`/`bands` = the
+    * pinned signatures semi-joined to the admitted reps. */
+  def commitEpoch(root: String, epochName: String, probe: => Probe): Boolean =
     lockFor(root).synchronized {
       graft.core.EpochStore.requireSafeEpochName(epochName)
       val token = currentToken(root)
       val committed = committedEpochs(root)
       if (hasEpoch(root, epochName)) false
       else {
-        // sign ONCE and pin into the caller's scope (not the session pin
-        // cache — a stream signs a different batch every micro-batch, and
-        // its micro-batch scope frees these): the three epoch-table writes
-        // and the verdict derivation all reuse them instead of re-running
-        // md5+minhash per consumer
-        val (inCl0, inSigs0, inBands0) = signCorpus(incoming, text)
-        val inCl = graft.core.PinScope.pin(inCl0)
-        val inSigs = graft.core.PinScope.pin(inSigs0)
-        val inBands = graft.core.PinScope.pin(inBands0)
-        val idx = load(incoming.sparkSession, root)
-        val best = bestEstimates(inSigs, inBands, idx)
-        val exact = idx.cliques.select(col("fp")).distinct()
-        // the ledger: exact-rejected batch copies, keyed by the indexed
-        // fingerprint they matched (== their own fp, by exactness)
-        val rejections = inCl.join(exact, Seq("fp"), "left_semi")
-          .select(col("fp"), col("weight").as("n_rejected"))
-        val cliques = inCl.join(exact, Seq("fp"), "left_anti")
-          .join(best.filter(col("best_matches") >= minMatches)
-            .select(col("doc_id").as("rep")), Seq("rep"), "left_anti")
-        val reps = cliques.select(col("rep").as("doc_id"))
-        val ep = writeEpochNamed(cliques,
-          inSigs.join(reps, Seq("doc_id"), "left_semi"),
-          inBands.join(reps, Seq("doc_id"), "left_semi"),
-          rejections, root, epochName)
+        val p0 = probe
+        require(p0.root == root, s"probe of ${p0.root} committed to $root")
+        val p =
+          if (p0.token == token) p0
+          else this.probe(p0.incoming, root, p0.minMatches, p0.text)
+        val admitted = p.verdicts.filter(col("verdict") === "admitted")
+        val reps = broadcast(admitted.select(col("doc_id")))
+        val ep = writeEpochNamed(
+          admitted.select(col("content_hash").as("fp"),
+            col("doc_id").as("rep"), col("n_batch_copies").as("weight")),
+          p.sigs.join(reps, Seq("doc_id"), "left_semi"),
+          p.bands.join(reps, Seq("doc_id"), "left_semi"),
+          p.verdicts.filter(col("verdict") === "dup_exact")
+            .select(col("content_hash").as("fp"),
+              col("n_batch_copies").as("n_rejected")),
+          root, epochName)
         promoteManifestCas(root, committed :+ ep, token)
         true
       }
     }
+
+  /** [[extend]] under a CALLER-CHOSEN epoch name: probe, then
+    * [[commitEpoch]] (which probes only when the name is not yet
+    * accounted). */
+  def extendEpoch(incoming: DataFrame, root: String, epochName: String,
+                  minMatches: Int = defaultMinMatches,
+                  text: Column = col("text")): Boolean =
+    commitEpoch(root, epochName, probe(incoming, root, minMatches, text))
 
   /** RETRACTION — the takedown/opt-out path a 100 TB index must have:
     * writes a TOMBSTONE epoch naming the retracted content fingerprints
@@ -850,13 +909,12 @@ object NearDupIndex {
       if (tail.size < 2) graft.core.AtomicDir.current(root)
       else {
         def tbl(which: String): DataFrame =
-          spark.read.parquet(tail.map(e => s"$root/$e/$which"): _*)
+          readTable(spark, tail.map(e => s"$root/$e/$which"))
         val rejPaths = tail.filter(e => java.nio.file.Files.exists(
           java.nio.file.Paths.get(root, e, "rejections")))
         val rej =
           if (rejPaths.isEmpty) emptyRejections(spark)
-          else spark.read
-            .parquet(rejPaths.map(e => s"$root/$e/rejections"): _*)
+          else readTable(spark, rejPaths.map(e => s"$root/$e/rejections"))
             .groupBy("fp").agg(sum(col("n_rejected")).as("n_rejected"))
         val nCl = tbl("cliques").count() // O(|tail|), sizes the rewrite
         val name = "m" + java.util.UUID.randomUUID().toString.take(12)
@@ -937,7 +995,7 @@ object NearDupIndex {
       def cnt(t: String): Option[Long] = {
         val p = java.nio.file.Paths.get(root, path, t)
         if (java.nio.file.Files.exists(p))
-          Some(spark.read.parquet(p.toString).count())
+          Some(readTable(spark, Seq(p.toString)).count())
         else None
       }
       (i, path, if (isTomb) "tombstone" else "data",

@@ -38,10 +38,17 @@ object ShardAdmission {
              minMatches: Int = NearDupIndex.defaultMinMatches,
              w: Int = SpanIndex.defaultW,
              heavyNum: Int = 1, heavyDen: Int = 2,
-             text: Column = col("text"), pin: Boolean = true): DataFrame = {
-    val near = NearDupIndex.admit(batch, nearDupRoot, minMatches, text, pin)
-    val span = SpanIndex.admitBill(batch, spanRoot, w, text, pin)
-      .select(col("doc_id"), col("tokens_cut"))
+             text: Column = col("text"), pin: Boolean = true): DataFrame =
+    compose(batch, NearDupIndex.admit(batch, nearDupRoot, minMatches, text, pin),
+      SpanIndex.admitBill(batch, spanRoot, w, text, pin),
+      heavyNum, heavyDen, text)
+
+  /** [[report]] from the two text tiers' verdict relations: the
+    * near-dup verdict rows and the span bill of `batch`. */
+  private def compose(batch: DataFrame, near: DataFrame, bill: DataFrame,
+                      heavyNum: Int, heavyDen: Int,
+                      text: Column): DataFrame = {
+    val span = bill.select(col("doc_id"), col("tokens_cut"))
     // n_tokens comes from the BATCH, not the span bill: the bill has no
     // row for docs shorter than w tokens, and coalescing those to 0
     // would make "Σ tokens_retained = what the batch adds" undercount
@@ -86,10 +93,10 @@ object ShardAdmission {
 
   /** [[reportFull]] with the embedding tier served by the
     * epoch-sharded [[AnnAdmitIndex]] instead of the flat
-    * [[IvfOps.saveIndex]] layout — the form the FOUR-TIER streaming
-    * loop ([[graft.streaming.AdmissionStream.ingestFull]]) composes,
-    * where every tier shares the manifest lifecycle and the `b<id>`
-    * replay rule. Identical decision semantics. */
+    * [[IvfOps.saveIndex]] layout — the batch replay of what the
+    * FOUR-TIER streaming loop ([[graft.streaming.AdmissionStream
+    * .ingestFull]]) writes per micro-batch through [[reportFullWith]].
+    * Identical decision semantics. */
   def reportFullEpoch(batch: DataFrame, batchEmb: DataFrame,
                       nearDupRoot: String, spanRoot: String,
                       annRoot: String, tauMicro: Long, nProbe: Int,
@@ -98,28 +105,25 @@ object ShardAdmission {
                       heavyNum: Int = 1, heavyDen: Int = 2,
                       text: Column = col("text"),
                       pin: Boolean = true): DataFrame =
-    reportFullWith(batch,
-      AnnAdmitIndex.admit(batchEmb, annRoot, tauMicro, nProbe, pin = pin),
-      nearDupRoot, spanRoot, minMatches, w, heavyNum, heavyDen, text, pin)
-
-  /** [[reportFullEpoch]] with the embedding tier's verdict relation
-    * `(vec_id, anchor_id, adc_cos_micro, verdict)` PRECOMPUTED by the
-    * caller — the single-probe form the four-tier streaming loop uses:
-    * it persists ONE [[AnnAdmitIndex.admit]] result per micro-batch
-    * and feeds it to both this manifest overlay and the ANN index
-    * extension, so the growing-with-the-corpus ADC probe runs once per
-    * batch, not twice (the text tiers' Memo.pinned memoization,
-    * embedding form). Identical decision semantics to
-    * [[reportFullEpoch]] when `embVerdicts` is that probe's result. */
-  def reportFullWith(batch: DataFrame, embVerdicts: DataFrame,
-                     nearDupRoot: String, spanRoot: String,
-                     minMatches: Int = NearDupIndex.defaultMinMatches,
-                     w: Int = SpanIndex.defaultW,
-                     heavyNum: Int = 1, heavyDen: Int = 2,
-                     text: Column = col("text"),
-                     pin: Boolean = true): DataFrame =
     overlayEmbed(report(batch, nearDupRoot, spanRoot, minMatches, w,
-      heavyNum, heavyDen, text, pin), embVerdicts)
+        heavyNum, heavyDen, text, pin),
+      AnnAdmitIndex.admit(batchEmb, annRoot, tauMicro, nProbe, pin = pin))
+
+  /** [[reportFullEpoch]] composed from the batch's per-tier probes —
+    * the form the four-tier streaming loop writes: `near` and `span`
+    * are the batch's [[NearDupIndex.Probe]] and [[SpanIndex.Probe]]
+    * (pinned into the micro-batch's scope, and read again by the two
+    * epoch commits), `embVerdicts` the embedding tier's persisted
+    * [[AnnAdmitIndex.admit]] relation `(vec_id, anchor_id,
+    * adc_cos_micro, verdict)` (read again by the ANN extension). Every
+    * index is therefore probed once per batch. Identical decision
+    * semantics to [[reportFullEpoch]] over the probed index states. */
+  def reportFullWith(batch: DataFrame, embVerdicts: DataFrame,
+                     near: NearDupIndex.Probe, span: SpanIndex.Probe,
+                     heavyNum: Int = 1, heavyDen: Int = 2,
+                     text: Column = col("text")): DataFrame =
+    overlayEmbed(compose(batch, near.verdicts, SpanIndex.bill(span),
+      heavyNum, heavyDen, text), embVerdicts)
 
   /** Overlay the embedding tier's verdict relation `(vec_id,
     * anchor_id, adc_cos_micro, verdict)` onto a two-tier [[report]]

@@ -75,7 +75,7 @@ object SpanIndex {
   private def load(spark: SparkSession, root: String): DataFrame = {
     val eps = committedEpochs(root)
     require(eps.nonEmpty, s"empty span index at $root")
-    spark.read.parquet(eps.map(e => s"$root/$e/postings"): _*)
+    EpochStore.readTable(spark, eps.map(e => s"$root/$e/postings"))
   }
 
   /** Distinct first-occurrence postings of a relation's windows. */
@@ -115,8 +115,9 @@ object SpanIndex {
     * tokens_retained)`, x181's schema, where a window is dup when its
     * hash is already INDEXED (index precedence) or first held by an
     * EARLIER batch document. Σ tokens_retained is what this batch adds
-    * to the post-dedup corpus. */
-  /** `pin = false` skips the session window cache and pins the windows
+    * to the post-dedup corpus.
+    *
+    * `pin = false` skips the session window cache and pins the windows
     * into the caller's [[graft.core.PinScope]] — required for
     * per-micro-batch callers, same contract as [[NearDupIndex.admit]]'s
     * flag. */
@@ -126,9 +127,25 @@ object SpanIndex {
     val wins =
       if (pin) graft.core.Memo.pinned(wins0)
       else graft.core.PinScope.pin(wins0)
+    val out = billOf(incoming, wins,
+      matchedHashes(incoming.sparkSession, root, wins), w, text)
+    // PROBE-ONCE (round 19, guide §2.1): the bill is a deterministic,
+    // batch-sized function of (batch plan, live postings paths, w) and
+    // the manifest consumers (x189/x190/x191/x193/x194/x195/x196/x197/
+    // x200) build the identical plan — one postings scan per (batch,
+    // index) per session, every later consumer reads the pinned rows.
+    // Plan-keyed, so extension/compaction (new epoch paths) and the
+    // rebuilt/compacted fixture roots key separately; pin=false
+    // (streaming) bypasses as before.
+    if (pin) graft.core.Memo.pinned(out) else out
+  }
+
+  /** The [[admitBill]] of a batch's windows `wins` `(doc_id, pos,
+    * whash)`, given the indexed hashes among them (`matched`). */
+  private def billOf(incoming: DataFrame, wins: DataFrame,
+                     matched: DataFrame, w: Int, text: Column): DataFrame = {
     val batchFirst = wins.groupBy("whash")
       .agg(min(col("doc_id")).as("bfirst"))
-    val matched = matchedHashes(incoming.sparkSession, root, wins)
     val inIdx = wins.join(broadcast(matched), Seq("whash"), "left_semi")
       .select(col("doc_id"), col("pos"))
     val inBatch = wins.join(batchFirst, Seq("whash"))
@@ -151,51 +168,78 @@ object SpanIndex {
     val nw = wins.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
     val toks = incoming.select(col("doc_id"),
       size(TextOps.words(text)).cast("long").as("n_tokens"))
-    val out = nw.join(toks, Seq("doc_id")).join(cut, Seq("doc_id"), "left")
+    nw.join(toks, Seq("doc_id")).join(cut, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"), col("n_windows"),
         coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
         coalesce(col("tokens_cut"), lit(0L)).as("tokens_cut"),
         (col("n_tokens") - coalesce(col("tokens_cut"), lit(0L)))
           .as("tokens_retained"))
-    // PROBE-ONCE (round 19, guide §2.1): the bill is a deterministic,
-    // batch-sized function of (batch plan, live postings paths, w) and
-    // the manifest consumers (x189/x190/x191/x193/x194/x195/x196/x197/
-    // x200) build the identical plan — one postings scan per (batch,
-    // index) per session, every later consumer reads the pinned rows.
-    // Plan-keyed, so extension/compaction (new epoch paths) and the
-    // rebuilt/compacted fixture roots key separately; pin=false
-    // (streaming) bypasses as before.
-    if (pin) graft.core.Memo.pinned(out) else out
   }
 
-  /** Commit the batch's NOVEL window hashes as a new epoch under a
-    * caller-chosen name — the idempotent-replay form (a name already
-    * ACCOUNTED for — committed directly, or folded into a merged epoch
-    * by [[compactTail]]/[[compact]] — is a completed batch: returns
-    * false untouched; the admitted set is a deterministic function of
-    * the COMMITTED manifest, so a crashed half-written attempt
-    * rebuilds exactly). The index grows by O(|novel windows|); nothing
-    * is rewritten. */
-  def extendEpoch(incoming: DataFrame, root: String, epochName: String,
-                  w: Int = defaultW, text: Column = col("text")): Boolean =
+  /** One batch's probe of the live index, pinned into the caller's
+    * [[graft.core.PinScope]]: the batch's windows `(doc_id, pos, whash)`
+    * and the batch-sized set of their hashes already indexed
+    * (`matched`), with the `CURRENT` token of the index state `matched`
+    * was read from. The manifest's span bill ([[bill]]) and the epoch
+    * commit ([[commitEpoch]]) both read these pins, so the batch is
+    * windowed and the postings scanned once. */
+  final case class Probe(root: String, token: String, incoming: DataFrame,
+                         w: Int, text: Column, wins: DataFrame,
+                         matched: DataFrame)
+
+  /** Probes the live index at `root` with `incoming` (see [[Probe]]);
+    * the pins are eager. */
+  def probe(incoming: DataFrame, root: String, w: Int = defaultW,
+            text: Column = col("text")): Probe = {
+    val token = EpochStore.currentToken(root) // read before the manifest
+    val wins = graft.core.PinScope.pin(SubstringOps.windows(incoming, w, text))
+    val matched = graft.core.PinScope.pin(
+      matchedHashes(incoming.sparkSession, root, wins))
+    Probe(root, token, incoming, w, text, wins, matched)
+  }
+
+  /** The [[admitBill]] rows of a probed batch. */
+  def bill(p: Probe): DataFrame = billOf(p.incoming, p.wins, p.matched,
+    p.w, p.text)
+
+  /** Commits a probed batch's NOVEL window hashes — the first
+    * occurrences of the pinned windows anti-joined to `matched` — as
+    * epoch `epochName`, the idempotent-replay form: a name already
+    * ACCOUNTED for (committed directly, or folded into a merged epoch by
+    * [[compactTail]]/[[compact]]) is a completed batch: returns false
+    * without evaluating `probe`; the novel set is a deterministic
+    * function of the COMMITTED manifest, so a crashed half-written
+    * attempt rebuilds exactly. A probe read from an older `CURRENT`
+    * than the one under the lock is taken again. The index grows by
+    * O(|novel windows|); nothing is rewritten. */
+  def commitEpoch(root: String, epochName: String, probe: => Probe): Boolean =
     lockFor(root).synchronized {
       EpochStore.requireSafeEpochName(epochName)
       val token = EpochStore.currentToken(root)
       val committed = committedEpochs(root)
       if (hasEpoch(root, epochName)) false
       else {
-        val batchFirst = firstOccurrences(incoming, w, text)
-        // anti vs (index ∩ batch hashes) == anti vs index, batch-sized
-        val matched = matchedHashes(incoming.sparkSession, root,
-          batchFirst.select(col("whash")))
-        val novel = batchFirst.join(broadcast(matched), Seq("whash"),
-          "left_anti")
+        val p0 = probe
+        require(p0.root == root, s"probe of ${p0.root} committed to $root")
+        val p =
+          if (p0.token == token) p0
+          else this.probe(p0.incoming, root, p0.w, p0.text)
+        val novel = p.wins.groupBy("whash")
+          .agg(min(col("doc_id")).as("first_doc"))
+          .join(broadcast(p.matched), Seq("whash"), "left_anti")
         val ep = EpochStore.writeEpoch(root, epochName,
           Seq("postings" -> novel))
         EpochStore.promoteCas(root, committed :+ ep, token)
         true
       }
     }
+
+  /** Commit the batch's NOVEL window hashes as a new epoch under a
+    * caller-chosen name: probe, then [[commitEpoch]] (which probes only
+    * when the name is not yet accounted). */
+  def extendEpoch(incoming: DataFrame, root: String, epochName: String,
+                  w: Int = defaultW, text: Column = col("text")): Boolean =
+    commitEpoch(root, epochName, probe(incoming, root, w, text))
 
   /** [[extendEpoch]] under a generated name. Returns the promoted
     * version path. */
@@ -263,8 +307,8 @@ object SpanIndex {
       val tail = eps.drop(1)
       if (tail.size < 2) graft.core.AtomicDir.current(root)
       else {
-        val merged = spark.read
-          .parquet(tail.map(e => s"$root/$e/postings"): _*)
+        val merged =
+          EpochStore.readTable(spark, tail.map(e => s"$root/$e/postings"))
         val covered = EpochStore.pruneCovered(tail.flatMap(e =>
           EpochStore.entryPath(e) +: EpochStore.coveredNames(root, e)),
           coveredFloor)
@@ -336,7 +380,7 @@ object SpanIndex {
     * never corpus-sized. */
   def stats(spark: SparkSession, root: String): DataFrame = {
     val rows = committedEpochs(root).zipWithIndex.map { case (e, i) =>
-      (i, e, spark.read.parquet(s"$root/$e/postings").count())
+      (i, e, EpochStore.readTable(spark, Seq(s"$root/$e/postings")).count())
     }
     import spark.implicits._
     rows.toDF("position", "entry", "n_postings")

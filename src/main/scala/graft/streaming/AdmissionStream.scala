@@ -39,7 +39,21 @@ import graft.operators.{AnnAdmitIndex, NearDupIndex, ShardAdmission,
   * index is bit-identical.
   *
   * `maintainEvery` applies both indexes' tail compaction (base never
-  * rewritten) whenever either accretion tail reaches the bound. */
+  * rewritten) whenever either accretion tail reaches the bound.
+  *
+  * ONE PROBE PER TIER per micro-batch ([[ingestFull]], the production
+  * loop): the near-dup ([[graft.operators.NearDupIndex.Probe]]), span
+  * ([[graft.operators.SpanIndex.Probe]]) and ADC (a persisted
+  * [[graft.operators.AnnAdmitIndex.admit]] relation) probes of the
+  * PRE-batch indexes are each taken once, pinned into the batch's
+  * [[PinScope]], and read by both the manifest and that tier's epoch
+  * commit. Each probe is a lazy value, evaluated by its first consumer:
+  * on a replay the commits of already-accounted tiers never evaluate
+  * theirs, so no probe reads an index that already holds `b<id>`, and a
+  * commit whose index moved since its probe re-probes under the index
+  * lock. (The two-tier [[ingest]] commits through the same
+  * probe-then-commit `extendEpoch`; its manifest is the analytic
+  * [[ShardAdmission.report]], which probes on its own.) */
 object AdmissionStream {
 
   /** `stream` must carry (doc_id, text). Returns the running query;
@@ -80,18 +94,16 @@ object AdmissionStream {
       .start()
 
   /** The FOUR-TIER loop: [[ingest]]'s discipline with the embedding
-    * tier composed in — per micro-batch, ONE persisted ADC probe of
-    * the PRE-batch ANN index serves both the
-    * [[ShardAdmission.reportFullWith]] manifest (exact > near >
-    * embed > trim > admit, reflecting the PRE-batch state of ALL FOUR
-    * indexes) and the ANN extension
-    * ([[graft.operators.AnnAdmitIndex.extendEpochAdmitted]]), and one
-    * `b<id>` epoch commits to each index: near-dup signatures,
-    * exact-substring windows, and the epoch-sharded ANN admission
-    * index (admitted vectors int8-coded under the live quantizer
-    * generation; [[graft.operators.AnnAdmitIndex.retrain]] — ridden
-    * on full compaction — keeps that generation's k at adaptiveK(N)
-    * so the probe stays sub-linear in the corpus).
+    * tier composed in — per micro-batch ([[admitBatch]]), the
+    * [[ShardAdmission.reportFullWith]] manifest (exact > near > embed >
+    * trim > admit, reflecting the PRE-batch state of ALL FOUR indexes)
+    * and one `b<id>` epoch committed to each index: near-dup
+    * signatures, exact-substring windows, and the epoch-sharded ANN
+    * admission index (admitted vectors int8-coded under the live
+    * quantizer generation; [[graft.operators.AnnAdmitIndex.retrain]] —
+    * ridden on full compaction — keeps that generation's k at
+    * adaptiveK(N) so the probe stays sub-linear in the corpus). Each
+    * index is probed once per batch (the object doc's rule).
     *
     * `stream` must carry (doc_id, text, embedding); rows with a NULL
     * embedding skip the embedding tier (NULL never rejects) and are
@@ -113,44 +125,46 @@ object AdmissionStream {
                  maintainEvery: Int = 0): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        PinScope { scope => // the batch's pins: freed when the batch ends
-          val emb = batch.filter(col("embedding").isNotNull)
-            .select(col("doc_id").as("vec_id"), col("embedding"))
-          // ONE ADC probe per micro-batch: the embed-tier verdicts are
-          // computed against the PRE-batch index, persisted, and shared
-          // by the manifest overlay AND the ANN extension — the probe is
-          // the one per-batch cost that grows with the corpus, and the
-          // unmemoized form paid it twice (the text tiers' batch signing
-          // is memoized through Memo.pinned; this is the embed analog).
-          // Evaluation is lazy: on a full replay neither consumer runs,
-          // so the probe never reads an index that already holds b<id>.
-          val verdicts = scope.persist(AnnAdmitIndex
-            .admit(emb, annRoot, tauMicro, nProbe, pin = false))
-          if (!NearDupIndex.hasEpoch(nearDupRoot, s"b$id"))
-            ShardAdmission.reportFullWith(batch, verdicts, nearDupRoot,
-                spanRoot, minMatches, w, pin = false)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          NearDupIndex.extendEpoch(batch, nearDupRoot, s"b$id", minMatches)
-          SpanIndex.extendEpoch(batch, spanRoot, s"b$id", w)
-          AnnAdmitIndex.extendEpochAdmitted(emb, annRoot, s"b$id",
-            verdicts.filter(col("verdict") === "admitted")
-              .select(col("vec_id")))
-          if (maintainEvery > 0) {
-            // coveredFloor = the in-flight batch id (see [[ingest]]):
-            // O(1) replay metadata on every tier
-            if (NearDupIndex.tailSize(nearDupRoot) >= maintainEvery)
-              NearDupIndex.compactTail(batch.sparkSession, nearDupRoot,
-                coveredFloor = Some(id))
-            if (SpanIndex.tailSize(spanRoot) >= maintainEvery)
-              SpanIndex.compactTail(batch.sparkSession, spanRoot,
-                coveredFloor = Some(id))
-            if (AnnAdmitIndex.tailSize(annRoot) >= maintainEvery)
-              AnnAdmitIndex.compactTail(batch.sparkSession, annRoot,
-                coveredFloor = Some(id))
-          }
-        }
-        ()
+        admitBatch(batch, id, nearDupRoot, spanRoot, annRoot, outDir,
+          tauMicro, nProbe, minMatches, w, maintainEvery)
       }
       .option("checkpointLocation", checkpointDir)
       .start()
+
+  /** One [[ingestFull]] micro-batch: `batch` (doc_id, text, embedding)
+    * under batch id `id`, its pins freed when it returns. */
+  def admitBatch(batch: DataFrame, id: Long, nearDupRoot: String,
+                 spanRoot: String, annRoot: String, outDir: String,
+                 tauMicro: Long, nProbe: Int,
+                 minMatches: Int = NearDupIndex.defaultMinMatches,
+                 w: Int = SpanIndex.defaultW,
+                 maintainEvery: Int = 0): Unit =
+    PinScope { scope =>
+      val emb = batch.filter(col("embedding").isNotNull)
+        .select(col("doc_id").as("vec_id"), col("embedding"))
+      lazy val near = NearDupIndex.probe(batch, nearDupRoot, minMatches)
+      lazy val span = SpanIndex.probe(batch, spanRoot, w)
+      val verdicts = scope.persist(AnnAdmitIndex
+        .admit(emb, annRoot, tauMicro, nProbe, pin = false))
+      if (!NearDupIndex.hasEpoch(nearDupRoot, s"b$id"))
+        ShardAdmission.reportFullWith(batch, verdicts, near, span)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+      NearDupIndex.commitEpoch(nearDupRoot, s"b$id", near)
+      SpanIndex.commitEpoch(spanRoot, s"b$id", span)
+      AnnAdmitIndex.extendEpochAdmitted(emb, annRoot, s"b$id",
+        verdicts.filter(col("verdict") === "admitted").select(col("vec_id")))
+      if (maintainEvery > 0) {
+        // coveredFloor = the in-flight batch id (see [[ingest]]):
+        // O(1) replay metadata on every tier
+        if (NearDupIndex.tailSize(nearDupRoot) >= maintainEvery)
+          NearDupIndex.compactTail(batch.sparkSession, nearDupRoot,
+            coveredFloor = Some(id))
+        if (SpanIndex.tailSize(spanRoot) >= maintainEvery)
+          SpanIndex.compactTail(batch.sparkSession, spanRoot,
+            coveredFloor = Some(id))
+        if (AnnAdmitIndex.tailSize(annRoot) >= maintainEvery)
+          AnnAdmitIndex.compactTail(batch.sparkSession, annRoot,
+            coveredFloor = Some(id))
+      }
+    }
 }

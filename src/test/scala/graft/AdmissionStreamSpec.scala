@@ -31,6 +31,41 @@ class AdmissionStreamSpec extends AnyFunSuite with SparkSuite {
     Files.createTempDirectory("adm_spx").toString,
     Files.createTempDirectory("adm_out").toString)
 
+  // the four-tier fixture: one indexed doc on every tier
+  private val model = IvfOps.IvfModel(
+    Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0)))
+  private val tau = 950000L
+  private val e1 = Array(1.0, 0.0, 0.0)
+  private val eNew = Array(0.0, 1.0, 0.0)
+  private val eOrth = Array(0.1, 0.0, 1.0)
+  // batch 0: a semantic dup of the seed under NOVEL text (only the
+  // embedding tier can catch it), a fully novel doc, an exact copy
+  // (text tier wins precedence over its dup embedding)
+  private val b0 = Seq((10L, novel1, e1), (11L, novel3, eNew), (12L, seed, e1))
+  // batch 1: an exact copy of batch-0 text, and novel text whose
+  // embedding collides with batch-0's ADMITTED vector — proof the
+  // ANN tier extended per batch
+  private val b1 = Seq((20L, novel3, eOrth), (21L, novel4, eNew))
+
+  private def buildRoots(): (String, String, String) = {
+    val s = spark
+    import s.implicits._
+    val ndx = Files.createTempDirectory("adm4_ndx").toString
+    val spx = Files.createTempDirectory("adm4_spx").toString
+    val ann = Files.createTempDirectory("adm4_ann").toString
+    NearDupIndex.buildIndex(Seq((1L, seed)).toDF("doc_id", "text"), ndx)
+    SpanIndex.buildIndex(Seq((1L, seed)).toDF("doc_id", "text"), spx)
+    AnnAdmitIndex.buildIndex(Seq((1L, e1)).toDF("vec_id", "embedding"),
+      model, ann)
+    (ndx, spx, ann)
+  }
+
+  private def fourTierBatch(rows: Seq[(Long, String, Array[Double])]) = {
+    val s = spark
+    import s.implicits._
+    rows.toDF("doc_id", "text", "embedding")
+  }
+
   private def decisions(out: String, batch: Long) =
     spark.read.parquet(s"$out/batch=$batch").collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("decision"))
@@ -174,30 +209,6 @@ class AdmissionStreamSpec extends AnyFunSuite with SparkSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val model = IvfOps.IvfModel(
-      Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0)))
-    val tau = 950000L
-    val e1 = Array(1.0, 0.0, 0.0)
-    val eNew = Array(0.0, 1.0, 0.0)
-    val eOrth = Array(0.1, 0.0, 1.0)
-    def buildRoots(): (String, String, String) = {
-      val ndx = Files.createTempDirectory("adm4_ndx").toString
-      val spx = Files.createTempDirectory("adm4_spx").toString
-      val ann = Files.createTempDirectory("adm4_ann").toString
-      NearDupIndex.buildIndex(Seq((1L, seed)).toDF("doc_id", "text"), ndx)
-      SpanIndex.buildIndex(Seq((1L, seed)).toDF("doc_id", "text"), spx)
-      AnnAdmitIndex.buildIndex(Seq((1L, e1)).toDF("vec_id", "embedding"),
-        model, ann)
-      (ndx, spx, ann)
-    }
-    // batch 0: a semantic dup of the seed under NOVEL text (only the
-    // embedding tier can catch it), a fully novel doc, an exact copy
-    // (text tier wins precedence over its dup embedding)
-    val b0 = Seq((10L, novel1, e1), (11L, novel3, eNew), (12L, seed, e1))
-    // batch 1: an exact copy of batch-0 text, and novel text whose
-    // embedding collides with batch-0's ADMITTED vector — proof the
-    // ANN tier extended per batch
-    val b1 = Seq((20L, novel3, eOrth), (21L, novel4, eNew))
     val (ndx, spx, ann) = buildRoots()
     val out = Files.createTempDirectory("adm4_out").toString
     val in = MemoryStream[(Long, String, Array[Double])]
@@ -353,5 +364,64 @@ class AdmissionStreamSpec extends AnyFunSuite with SparkSuite {
         s"summary (scans, checkpoint reads, cache reads) $summ must " +
           s"equal reportFull's $full")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("four-tier replay after a crash between two extensions: the " +
+      "manifest stays, the uncommitted tiers commit as a clean run's") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def ingestB0(ndx: String, spx: String, ann: String, out: String): Unit = {
+      val in = MemoryStream[(Long, String, Array[Double])]
+      val q = graft.streaming.AdmissionStream.ingestFull(
+        in.toDF().toDF("doc_id", "text", "embedding"), ndx, spx, ann, out,
+        Files.createTempDirectory("adm7_ck").toString, tau, nProbe = 1)
+      try { in.addData(b0); q.processAllAvailable() } finally q.stop()
+    }
+    val (cNdx, cSpx, cAnn) = buildRoots()
+    ingestB0(cNdx, cSpx, cAnn, Files.createTempDirectory("adm7_out").toString)
+    // the crash shape: the prior attempt wrote the manifest and committed
+    // the near-dup b0, then died before the span and ANN extensions
+    val (ndx, spx, ann) = buildRoots()
+    val out = Files.createTempDirectory("adm7_out").toString
+    val batch = fourTierBatch(b0)
+    val emb = batch.select(col("doc_id").as("vec_id"), col("embedding"))
+    val near = NearDupIndex.probe(batch, ndx)
+    ShardAdmission.reportFullWith(batch,
+        AnnAdmitIndex.admit(emb, ann, tau, nProbe = 1, pin = false),
+        near, SpanIndex.probe(batch, spx))
+      .write.mode("overwrite").parquet(s"$out/batch=0")
+    assert(NearDupIndex.commitEpoch(ndx, "b0", near))
+    val mtime = Files.getLastModifiedTime(
+      Paths.get(out, "batch=0", "_SUCCESS"))
+    ingestB0(ndx, spx, ann, out) // the replay of batch id 0
+    assert(Files.getLastModifiedTime(Paths.get(out, "batch=0", "_SUCCESS"))
+      === mtime, "the manifest must not be rewritten")
+    def rows(root: String, t: String) =
+      spark.read.parquet(s"$root/epochs/b0/$t").collect().map(_.toString)
+        .sorted.toSeq
+    assert(rows(spx, "postings") === rows(cSpx, "postings"),
+      "the span b0 must equal a clean run's")
+    assert(rows(ann, "postings") === rows(cAnn, "postings"),
+      "the ANN b0 must equal a clean run's")
+    assert(NearDupIndex.committedEpochs(ndx).count(_.endsWith("/b0")) === 1,
+      "the near-dup index keeps exactly one b0")
+  }
+
+  test("a four-tier micro-batch stays within its Spark job budget") {
+    val (ndx, spx, ann) = buildRoots()
+    val out = Files.createTempDirectory("adm8_out").toString
+    def admit(rows: Seq[(Long, String, Array[Double])], id: Long): Unit =
+      graft.streaming.AdmissionStream.admitBatch(fourTierBatch(rows), id,
+        ndx, spx, ann, out, tau, nProbe = 1, maintainEvery = 1)
+    admit(b0, 0) // batch 1 then compacts a two-epoch tail on every tier
+    val (_, jobs) = SparkJobCount(spark.sparkContext)(admit(b1, 1))
+    assert(decisions(out, 1) === Map(20L -> "reject_exact",
+      21L -> "reject_embed"))
+    // Bound measured with this spec's session (local[2], 2 shuffle
+    // partitions, AQE on): the batch ran 66 jobs. Signing each text
+    // tier twice (manifest and extension) and inferring every epoch
+    // read's schema with a job ran 119.
+    assert(jobs <= 66, s"$jobs Spark jobs in one micro-batch")
   }
 }

@@ -116,4 +116,24 @@ class EpochStoreSpec extends AnyFunSuite with SparkSuite {
       AnnAdmitIndex.hasEpoch(root, "b1"),
       "replay accounting (covered.json rides the live epochs) survives gc")
   }
+
+  test("readTable starts no schema-inference job and reads what " +
+      "spark.read.parquet reads") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("epoch_read").toString
+    Seq((1L, "a", Seq(1.0, 2.0)), (2L, null, Seq.empty[Double]))
+      .toDF("id", "s", "v").write.parquet(s"$dir/t1")
+    Seq((3L, "c", Seq(3.0))).toDF("id", "s", "v").write.parquet(s"$dir/t2")
+    val paths = Seq(s"$dir/t1", s"$dir/t2")
+    val sc = spark.sparkContext
+    val (inferred, inferJobs) = SparkJobCount(sc)(spark.read.parquet(paths: _*))
+    val (read, jobs) = SparkJobCount(sc)(EpochStore.readTable(spark, paths))
+    assert(inferJobs >= 1, "the inferring read starts a footer job")
+    assert(jobs === 0, "the footer schema is read on the driver")
+    assert(read.schema === inferred.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(read) === rows(inferred))
+  }
 }

@@ -417,4 +417,36 @@ class NearDupIndexSpec extends AnyFunSuite with SparkSuite {
       }
     }
   }
+
+  test("a probe taken before another commit is never committed stale") {
+    val s = spark
+    import s.implicits._
+    def built(): String = {
+      val r = freshRoot()
+      NearDupIndex.buildIndex(Seq((1L, b12)).toDF("doc_id", "text"), r)
+      r
+    }
+    val batch = Seq((10L, a12), (11L, a12near), (12L, tiny))
+      .toDF("doc_id", "text")
+    // colliding content under another name: an exact copy of a12 (and so
+    // a near-dup of a12near) and of the unsignable tiny
+    val other = Seq((5L, a12), (6L, tiny)).toDF("doc_id", "text")
+    val root = built()
+    val stale = NearDupIndex.probe(batch, root)
+    assert(stale.verdicts.filter(col("verdict") === "admitted").count() === 3,
+      "the probe read the index before the colliding commit")
+    assert(NearDupIndex.extendEpoch(other, root, "other"))
+    assert(NearDupIndex.commitEpoch(root, "b0", stale))
+    val fresh = built()
+    assert(NearDupIndex.extendEpoch(other, fresh, "other"))
+    assert(NearDupIndex.extendEpoch(batch, fresh, "b0"))
+    def rows(r: String, t: String) =
+      spark.read.parquet(s"$r/epochs/b0/$t").collect().map(_.toString).sorted
+        .toSeq
+    Seq("cliques", "sigs", "bands", "rejections").foreach { t =>
+      assert(rows(root, t) === rows(fresh, t), s"b0 $t differs")
+    }
+    assert(rows(fresh, "cliques").isEmpty && rows(fresh, "rejections").size === 2,
+      "the colliding commit turns the batch into rejections")
+  }
 }

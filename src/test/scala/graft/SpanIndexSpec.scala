@@ -222,4 +222,28 @@ class SpanIndexSpec extends AnyFunSuite with SparkSuite {
       Seq((2L, a + " " + b)).toDF("doc_id", "text"), root, "b0"),
       "accounted names must carry through the rebuild")
   }
+
+  test("a probe taken before another commit is never committed stale") {
+    val s = spark
+    import s.implicits._
+    def built(): String = {
+      val r = freshRoot()
+      SpanIndex.buildIndex(Seq((1L, c)).toDF("doc_id", "text"), r)
+      r
+    }
+    val batch = Seq((10L, a), (11L, b)).toDF("doc_id", "text")
+    val other = Seq((5L, a)).toDF("doc_id", "text") // a's windows, first
+    val root = built()
+    val stale = SpanIndex.probe(batch, root)
+    assert(stale.matched.isEmpty, "the probe read the index before `other`")
+    assert(SpanIndex.extendEpoch(other, root, "other"))
+    assert(SpanIndex.commitEpoch(root, "b0", stale))
+    val fresh = built()
+    assert(SpanIndex.extendEpoch(other, fresh, "other"))
+    assert(SpanIndex.extendEpoch(batch, fresh, "b0"))
+    def rows(r: String) = spark.read.parquet(s"$r/epochs/b0/postings")
+      .collect().map(_.toString).sorted.toSeq
+    assert(rows(root) === rows(fresh))
+    assert(rows(fresh).size === 5, "only b's windows are novel after `other`")
+  }
 }
